@@ -164,9 +164,11 @@ object Engine {
         * sub-second `Engine.start` cadences (see PERF.md round 10; CoW
         * rewrites every hot bucket once per micro-batch regardless of
         * batch size). Results are bit-identical to CoW (spec-pinned).
-        * Key indexes stay CoW — they are small and their anti-join
-        * maintenance reads base buckets directly. Ignored when a custom
-        * `replicaFactory` is set. */
+        * The engine's key indexes take the same mode and cadence, so
+        * their per-batch merge is the same one-job delta append (a C11
+        * destroy folds the index's delta log before its anti-join). The
+        * model replicas ignore it when a custom `replicaFactory` is set;
+        * the key indexes, always engine-built, do not. */
       mergeOnRead: Boolean = false,
       replicaCompactEvery: Int = 8,
       /** Store each model replica's `synced_data` payload as Spark-4
@@ -229,7 +231,7 @@ object Engine {
     // (genesis replica topics are consumed alongside their primaries,
     // as the reference's consumer subscribes both)
     val replicas = makeReplicas(spark, registry, workDir, options)
-    val indexes = makeKeyIndexes(spark, registry, workDir, replicas)
+    val indexes = makeKeyIndexes(spark, registry, workDir, replicas, options)
     val consumers = consumedTopicNames(registry).map { case (t, name) =>
       consumeTopic(spark, registry, t, name, topics, replicas, indexes,
         workDir, options, Trigger.AvailableNow())
@@ -260,7 +262,7 @@ object Engine {
     val topics = transport.getOrElse(
       new FileTopics(s"$workDir/topics", options.sourceMaxFilesPerTrigger))
     val replicas = makeReplicas(spark, registry, workDir, options)
-    val indexes = makeKeyIndexes(spark, registry, workDir, replicas)
+    val indexes = makeKeyIndexes(spark, registry, workDir, replicas, options)
     val producers = registry.topics.map { t =>
       produceTopic(spark, registry, t, bindings, topics,
         s"$workDir/cp/produce/${registry.topicName(t)}", trigger, options)
@@ -369,7 +371,9 @@ object Engine {
     * `(synced_id, fk…, timestamps)` — O(rows × two longs), so even a
     * full-index scan is cheap where a child-table scan is not. Always a
     * [[ParquetReplica]] (an engine-internal acceleration structure, not
-    * user storage — a custom `replicaFactory` does not change it).
+    * user storage — a custom `replicaFactory` does not change it), in the
+    * replicas' write mode (`mergeOnRead`, `replicaCompactEvery`): one
+    * replica write path.
     *
     * An index that does not exist yet while its child replica already has
     * rows (a workDir created before key indexes existed, or a custom
@@ -380,7 +384,8 @@ object Engine {
     * bootstrap merge (no version bump), so the probe costs one bounded
     * bucket collect. */
   private def makeKeyIndexes(spark: SparkSession, registry: Registry,
-      workDir: String, replicas: Map[String, Replica]): Map[String, KeyIndex] =
+      workDir: String, replicas: Map[String, Replica],
+      options: EngineOptions): Map[String, KeyIndex] =
     fkIndexAttrs(registry).map { case (dep, attrs) =>
       val child = registry.modelDef(dep).get
       val schema = org.apache.spark.sql.types.StructType(
@@ -391,7 +396,9 @@ object Engine {
             .map(org.apache.spark.sql.types.StructField(_,
               org.apache.spark.sql.types.TimestampType)))
       val idx = new ParquetReplica(spark, s"$workDir/replicas/${dep}__keyidx",
-        schema.toDDL, buckets = child.buckets)
+        schema.toDDL, buckets = child.buckets,
+        mergeOnRead = options.mergeOnRead,
+        compactEvery = options.replicaCompactEvery)
       val ki = KeyIndex(idx, attrs.map(_.name))
       val rep = replicas(dep)
       if (idx.currentVersion < 0 && !rep.neverCommitted) rep.withLock {
@@ -889,7 +896,7 @@ object Engine {
     }
 
     mergeRecords(m, parsed, replicas(m.name), indexes.get(m.name), topicName,
-      consumedDir, options, batchId)
+      consumedDir, options, batchId, hasDestroys = slice.nDestroyed > 0)
 
     // C4 recursion: embedded sideload payloads persist as their own models
     // (only live parent payloads embed children — skip when none)
@@ -905,8 +912,9 @@ object Engine {
         .select(explode(col(s"rec.$dep")).as("rec"))
         .select(lit(EventType.Updated).as("event_type"), col("rec"),
           to_json(col("rec")).as("payload_json"))
+      // sideloaded children are all stamped `updated`: no destroys
       mergeRecords(child, childParsed, replicas(dep), indexes.get(dep),
-        topicName, consumedDir, options, batchId)
+        topicName, consumedDir, options, batchId, hasDestroys = false)
 
       // C11: children of touched parents absent from the incoming id list
       // disassociate — needs the child replica to carry the FK attribute.
@@ -922,9 +930,12 @@ object Engine {
             col("rec.id").as(assoc.fk),
             explode_outer(col(s"rec.links.${assoc.name}")).as("synced_id"))
         // bucket-pruned C11: resolve the doomed child KEYS first (one
-        // semi+anti join with the micro-batch parent set broadcast), then
-        // rewrite only the buckets those keys hash into — O(batch ∩
-        // buckets) like the merge itself, never an O(child table) rewrite.
+        // semi+anti join with the micro-batch parent set broadcast,
+        // collected in one action — children of this batch's parents, so
+        // bounded by the batch), then rewrite only the buckets those keys
+        // hash into — O(batch ∩ buckets) like the merge itself, never an
+        // O(child table) rewrite. The common case, no child dropped,
+        // skips both destroys: no probe, no MoR delta fold, no version.
         // The keys resolve from the secondary (fk, synced_id) index when
         // the child has one (two longs per row — the reference's
         // `WHERE parent_id = ?` index lookup, persistor.rb:102-152);
@@ -933,12 +944,16 @@ object Engine {
         rep.withLock {
           val childKeys = indexes.get(dep).map(_.replica.read())
             .getOrElse(rep.read())
-          val doomed = Persistor.disassociatedChildKeys(
+          val doomedKeys = Persistor.disassociatedChildKeys(
             childKeys, incoming, parentKey = assoc.fk,
-            childKey = "synced_id").localCheckpoint(true)
-          // empty doomed sets no-op inside destroy (no version bump)
-          rep.destroy(doomed)
-          indexes.get(dep).foreach(_.replica.destroy(doomed))
+            childKey = "synced_id")
+          val rows = doomedKeys.collect()
+          if (rows.nonEmpty) {
+            val doomed = batch.sparkSession.createDataFrame(
+              java.util.Arrays.asList(rows: _*), doomedKeys.schema)
+            rep.destroy(doomed)
+            indexes.get(dep).foreach(_.replica.destroy(doomed))
+          }
         }
       }
     }
@@ -982,7 +997,8 @@ object Engine {
     * events carry only the key and timestamps on the wire (P9), so their
     * merge preserves the current row's attributes — the reference's
     * `record.cancel` touches only `canceled_at`
-    * (synchronizable_model.rb:40-50). */
+    * (synchronizable_model.rb:40-50). `hasDestroys = false` (the slice
+    * carries no destroyed row) skips that attribute-preserving join. */
   private def mergeRecords(
       m: ModelDef,
       parsed: DataFrame,
@@ -991,7 +1007,8 @@ object Engine {
       topicName: String,
       consumedDir: Option[String],
       options: EngineOptions,
-      batchId: Long): Unit = {
+      batchId: Long,
+      hasDestroys: Boolean): Unit = {
     val linkCols = m.linkKinds.map { case (rel, kind) =>
       LinksFlattener.colName(rel, kind)
     }
@@ -1014,10 +1031,13 @@ object Engine {
 
     val touched = latest.select(col("synced_id"))
     // preserve current attributes under destroy (key-only payload); the
-    // join is key-local, so the incremental merge stays touched-bucket-only
+    // join is key-local, so the incremental merge stays touched-bucket-only.
+    // Without destroys there is nothing to preserve: the identity sentinel
+    // lets a merge-on-read replica take its map-only, one-job delta append
     val preserve = m.attributes.map(_.name) ++ linkCols :+ "synced_created_at"
     def preserving(keep: Seq[String]): (DataFrame, DataFrame) => DataFrame =
-      (current, upd) => {
+      if (!hasDestroys) Replica.identityPrepare
+      else (current, upd) => {
         val cur = current.select(
           col("synced_id") +:
             keep.map(c => col(c).as(s"__cur_$c")): _*)

@@ -226,24 +226,6 @@ object Replica {
   val identityPrepare: (DataFrame, DataFrame) => DataFrame = (_, u) => u
 }
 
-object ParquetReplica {
-  /** Phase-decomposition tracing for the micro-batch merge path —
-    * stderr lines per [[ParquetReplica.deltaMerge]] phase when
-    * `SPARK_GRAFT_MERGE_DEBUG` is set (dev measurement only). */
-  private[streaming] val mergeDebug: Boolean =
-    sys.env.contains("SPARK_GRAFT_MERGE_DEBUG")
-
-  /** A/B knob (dev measurement only): restore the pre-round-14
-    * per-epoch `__seq` literal in the delta write, so the
-    * codegen-cache fix can be re-proven against the old shape in the
-    * same window — the literal makes the hot write plan's generated
-    * code differ per batch (fresh Janino compile each merge). Read
-    * paths drop the stored column via their explicit schema, so the
-    * variant is value-identical. Never set in bench/verify runs. */
-  private[streaming] val seqLiteralAb: Boolean =
-    sys.env.contains("SPARK_GRAFT_SEQ_LITERAL")
-}
-
 private[streaming] object ReplicaLocks {
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   def lockFor(root: String): Object =
@@ -601,28 +583,29 @@ final class ParquetReplica(spark: SparkSession, root: String,
   }
 
   /** Bucket-pruned hard delete: remove every key in `ids`, rewriting only
-    * the buckets those keys hash into (import-mode destroy, C10). */
+    * the buckets those keys hash into (import-mode destroy, C10). An empty
+    * id set touches nothing: no delta fold, no version bump, no Spark job
+    * beyond the bucket probe — callers may destroy unconditionally. */
   def destroy(ids: DataFrame, idCol: String = "synced_id"): Unit =
     ReplicaLocks.lockFor(root).synchronized {
+      val nb = bucketCount(currentVersion)
+      val keyed = ids.select(col(idCol).as("synced_id"))
+      // the emptiness probe is the bucket collect this method needs
+      // anyway, taken BEFORE the MoR fold (which keeps the bucket count,
+      // so the set stays valid): an empty id set never folds or publishes
+      val touched = keyed
+        .select(bucketOf(col("synced_id"), nb).as("__b")).distinct()
+        .collect().map(_.getInt(0)).toSet
+      if (touched.isEmpty) return
       // the anti-join below reads base buckets DIRECTLY — fold any MoR
       // delta log first so no pending upsert escapes the delete
       compactDeltasLocked()
       val v = currentVersion
-      val next = v + 1
-      val nb = bucketCount(v)
       val man = currentManifest(v)
-      val keyed = ids.select(col(idCol).as("synced_id"))
-      val touched = keyed
-        .select(bucketOf(col("synced_id"), nb).as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      // an empty id set touches nothing: no version bump, no extra Spark
-      // job — callers may destroy unconditionally (the emptiness probe is
-      // the bucket collect this method needs anyway)
-      if (touched.isEmpty) return
       val target = readDirs(man.filter(t => touched(t._1)).values.toSeq)
       val written = writeBuckets(
-        target.join(keyed, Seq("synced_id"), "left_anti"), next, nb)
-      publish(next, (man -- touched) ++ written, nb)
+        target.join(keyed, Seq("synced_id"), "left_anti"), v + 1, nb)
+      publish(v + 1, (man -- touched) ++ written, nb)
     }
 
   /** Drop version directories and manifests no longer reachable from the
@@ -757,15 +740,6 @@ final class ParquetReplica(spark: SparkSession, root: String,
   private def deltaMerge(updates: DataFrame,
       precomputedTouched: Option[Set[Int]],
       prepare: (DataFrame, DataFrame) => DataFrame): Unit = {
-    // phase decomposition for the sub-second merge path (stderr, only
-    // when SPARK_GRAFT_MERGE_DEBUG is set — zero cost otherwise)
-    val dbg = ParquetReplica.mergeDebug
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[deltaMerge $root] $phase ${(now - tMark) / 1e6}%.1f ms")
-      tMark = now
-    }
     val v = currentVersion
     val next = v + 1
     val nb = bucketCount(v)
@@ -773,7 +747,6 @@ final class ParquetReplica(spark: SparkSession, root: String,
     val ds = deltaEntries(v)
     val seq = ds.lastOption.map(_._1).getOrElse(-1L) + 1L
     val dir = s"v$next/delta-$seq"
-    mark("manifest-read")
     // Pin `updates` on the real-prepare path when WE derive the touched
     // set: the collect and the write must see the SAME rows, or a
     // nondeterministic updates plan could hash re-evaluated rows into
@@ -817,12 +790,8 @@ final class ParquetReplica(spark: SparkSession, root: String,
     // optimization; the hot write plan is now batch-invariant).
     // shapeForMergeTyped = the shape + cast + __event-drop as ONE
     // projection (one analyzer pass — this path runs per micro-batch)
-    val shaped0 = Persistor.shapeForMergeTyped(schema, prepare(target, ups))
-    val shaped = if (ParquetReplica.seqLiteralAb)
-      shaped0.withColumn("__seq", lit(seq)) else shaped0
-    mark("plan-construct")
+    val shaped = Persistor.shapeForMergeTyped(schema, prepare(target, ups))
     shaped.write.mode("overwrite").parquet(s"$root/$dir")
-    mark("write-job")
     // deferred emptiness check: the parquet FOOTERS of the files just
     // written carry exact row counts — a driver-local metadata read, no
     // Spark job. An empty micro-batch leaves no epoch and no version.
@@ -830,9 +799,7 @@ final class ParquetReplica(spark: SparkSession, root: String,
       Hcfs.delete(spark, s"$root/$dir")
       return
     }
-    mark("footer-count")
     publish(next, man, nb, ds :+ (seq -> dir))
-    mark("publish")
     if (ds.size + 1 >= compactEvery) compactDeltasAsync()
   }
 

@@ -58,20 +58,31 @@ class EngineScaleSpec extends SparkSpec {
     assert(Set(3L, 17L).subsetOf(ids) && ids.subsetOf((1L to 200L).toSet))
   }
 
-  test("C11/C12: merge, capture and disassociation never read a full table") {
-    val tmp = Files.createTempDirectory("graft-noscan").toString
+  /** The C11 fixture: `order` 1-8 sideloads `order_line` 1-32 (four lines
+    * per order, FK `order_id`). `orderChange` feeds parent updates; the
+    * lines in `dropped` vanish from the sideload snapshot, so the next
+    * republish of their parent disassociates them. */
+  private final class C11Fixture(regName: String) {
+    val tmp = Files.createTempDirectory(s"graft-$regName").toString
     val src = s"$tmp/src"
-
-    val orderDef = ModelDef("order",
-      attributes = Seq(Attribute("total", org.apache.spark.sql.types.DoubleType)),
-      hasMany = Seq(Association("order_lines", "order_line", fk = "order_id")),
-      sideloads = Seq("order_line"))
-    val lineDef = ModelDef("order_line",
-      attributes = Seq(Attribute("order_id", org.apache.spark.sql.types.LongType),
-        Attribute("qty", org.apache.spark.sql.types.DoubleType)))
-    val reg = Registry("nsc", Seq(TopicDef("orders", Seq(orderDef))),
-      dependencyModels = Seq(lineDef))
-
+    val work = s"$tmp/work"
+    val reg = Registry(regName, Seq(TopicDef("orders", Seq(ModelDef("order",
+        attributes = Seq(Attribute("total", org.apache.spark.sql.types.DoubleType)),
+        hasMany = Seq(Association("order_lines", "order_line", fk = "order_id")),
+        sideloads = Seq("order_line"))))),
+      dependencyModels = Seq(ModelDef("order_line",
+        attributes = Seq(Attribute("order_id", org.apache.spark.sql.types.LongType),
+          Attribute("qty", org.apache.spark.sql.types.DoubleType)))))
+    @volatile var dropped: Set[Long] = Set.empty
+    val bindings = new Engine.ModelBindings {
+      def changes(s: org.apache.spark.sql.SparkSession, m: ModelDef) =
+        s.readStream.schema(s.read.parquet(s"$src/f1").schema).parquet(s"$src/*")
+      def snapshot(s: org.apache.spark.sql.SparkSession, m: ModelDef) =
+        (1L to 32L).filterNot(dropped).toDF("id")
+          .select($"id", (($"id" - 1) / lit(4) + 1).cast("long").as("order_id"),
+            ($"id" * 1.0).as("qty"),
+            lit("2026-05-02 00:00:00").cast("timestamp").as("__ts"))
+    }
     def orderChange(ids: Seq[Long], file: String, ts: String): Unit =
       ids.toDF("id").select($"id", ($"id" * 100.0).as("total"),
           lit("update").as("__op"),
@@ -79,34 +90,45 @@ class EngineScaleSpec extends SparkSpec {
           lit(null).cast("timestamp").as("__new_canceled"),
           lit(ts).cast("timestamp").as("__ts"))
         .write.parquet(s"$src/$file")
-    def linesSnap(drop: Set[Long]) =
-      (1L to 32L).filterNot(drop).toDF("id")
-        .select($"id", (($"id" - 1) / lit(4) + 1).cast("long").as("order_id"),
-          ($"id" * 1.0).as("qty"),
-          lit("2026-05-02 00:00:00").cast("timestamp").as("__ts"))
-    @volatile var snap = linesSnap(Set.empty)
-    val bindings = new Engine.ModelBindings {
-      def changes(s: org.apache.spark.sql.SparkSession, m: ModelDef) =
-        s.readStream.schema(s.read.parquet(s"$src/f1").schema).parquet(s"$src/*")
-      def snapshot(s: org.apache.spark.sql.SparkSession, m: ModelDef) = snap
+    def run(opts: Engine.EngineOptions = Engine.EngineOptions()): Engine.EngineResult =
+      Engine.runAvailableNow(spark, reg, bindings, work, options = opts)
+    /** The replica and the key index hold the same (order_id, line) pairs. */
+    def assertLockstep(res: Engine.EngineResult): Unit = {
+      val idxPairs = res.keyIndexes("order_line").read()
+        .select("order_id", "synced_id").as[(Long, Long)].collect().toSet
+      val repPairs = res.replicas("order_line").read()
+        .select("order_id", "synced_id").as[(Long, Long)].collect().toSet
+      assert(idxPairs == repPairs, s"index diverged: ${idxPairs.diff(repPairs)}")
     }
+  }
 
+  /** C11 disassociation with C12 capture on, every model replica behind a
+    * [[CountingReplica]]: the dropped child leaves the replica and the key
+    * index in lockstep, and no engine path reads a full model table. */
+  private def c11WithoutFullReads(mergeOnRead: Boolean): Unit = {
+    val fx = new C11Fixture(if (mergeOnRead) "nscm" else "nsc")
+    // compaction never runs on its own here: under merge-on-read the key
+    // index still holds pending delta epochs when the drop arrives
+    val compactEvery = 100
     // every replica the engine touches goes through the counting proxy;
     // C12 tracking is ON, so the capture path runs too
     val proxies = scala.collection.concurrent.TrieMap.empty[String, CountingReplica]
     val opts = Engine.EngineOptions(
       publishConsumedEvents = true, trackLocalChanges = true,
+      mergeOnRead = mergeOnRead, replicaCompactEvery = compactEvery,
       replicaFactory = Some((s, m, root) => proxies.getOrElseUpdate(m.name,
         new CountingReplica(new ParquetReplica(s, root, m.replicaSchema.toDDL,
-          buckets = m.buckets)))))
+          buckets = m.buckets, mergeOnRead = mergeOnRead,
+          compactEvery = compactEvery)))))
 
-    orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
-    Engine.runAvailableNow(spark, reg, bindings, s"$tmp/work", options = opts)
+    fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
+    val idx = fx.run(opts).keyIndexes("order_line").asInstanceOf[ParquetReplica]
+    if (mergeOnRead) assert(idx.deltaEntries(idx.currentVersion).nonEmpty,
+      "the key index must take the merge-on-read delta append")
     // parent 1 republishes with line 4 gone — the disassociating merge
-    snap = linesSnap(Set(4L))
-    orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
-    val res = Engine.runAvailableNow(spark, reg, bindings, s"$tmp/work",
-      options = opts)
+    fx.dropped = Set(4L)
+    fx.orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
+    val res = fx.run(opts)
     val scans = proxies.map { case (n, p) => n -> p.fullReads.get() }.toMap
 
     // correctness: the vanished child disassociated, everything else kept
@@ -114,75 +136,68 @@ class EngineScaleSpec extends SparkSpec {
       .select("synced_id").as[Long].collect().toSet
     assert(left == (1L to 32L).toSet - 4L, s"got $left")
     // the key index tracked every merge and destroy in lockstep
-    val idx = res.keyIndexes("order_line")
-    val idxPairs = idx.read().select("order_id", "synced_id")
-      .as[(Long, Long)].collect().toSet
-    val repPairs = res.replicas("order_line").read()
-      .select("order_id", "synced_id").as[(Long, Long)].collect().toSet
-    assert(idxPairs == repPairs, s"index diverged: ${idxPairs.diff(repPairs)}")
+    fx.assertLockstep(res)
+    // the destroy folded the index's pending epochs before its anti-join
+    if (mergeOnRead) assert(idx.deltaEntries(idx.currentVersion).isEmpty,
+      "the key-index destroy must fold its delta log first")
     // THE point: no engine path issued a full-table read — C12 captures
     // went through readBuckets, C11 key resolution through the index
     assert(scans.values.sum == 0, s"full-table reads during merges: $scans")
   }
 
-  test("key index bootstraps from a pre-existing child replica") {
-    val tmp = Files.createTempDirectory("graft-idxboot").toString
-    val src = s"$tmp/src"
+  test("C11/C12: merge, capture and disassociation never read a full table") {
+    c11WithoutFullReads(mergeOnRead = false)
+  }
 
-    val orderDef = ModelDef("order",
-      attributes = Seq(Attribute("total", org.apache.spark.sql.types.DoubleType)),
-      hasMany = Seq(Association("order_lines", "order_line", fk = "order_id")),
-      sideloads = Seq("order_line"))
-    val lineDef = ModelDef("order_line",
-      attributes = Seq(Attribute("order_id", org.apache.spark.sql.types.LongType),
-        Attribute("qty", org.apache.spark.sql.types.DoubleType)))
-    val reg = Registry("nsb", Seq(TopicDef("orders", Seq(orderDef))),
-      dependencyModels = Seq(lineDef))
+  test("C11/C12 under merge-on-read: the dropped child leaves the replica " +
+      "and the pending-delta key index in lockstep, with no full read") {
+    c11WithoutFullReads(mergeOnRead = true)
+  }
 
-    def orderChange(ids: Seq[Long], file: String, ts: String): Unit =
-      ids.toDF("id").select($"id", ($"id" * 100.0).as("total"),
-          lit("update").as("__op"),
-          lit(null).cast("timestamp").as("__old_canceled"),
-          lit(null).cast("timestamp").as("__new_canceled"),
-          lit(ts).cast("timestamp").as("__ts"))
-        .write.parquet(s"$src/$file")
-    def linesSnap(drop: Set[Long]) =
-      (1L to 32L).filterNot(drop).toDF("id")
-        .select($"id", (($"id" - 1) / lit(4) + 1).cast("long").as("order_id"),
-          ($"id" * 1.0).as("qty"),
-          lit("2026-05-02 00:00:00").cast("timestamp").as("__ts"))
-    @volatile var snap = linesSnap(Set.empty)
-    val bindings = new Engine.ModelBindings {
-      def changes(s: org.apache.spark.sql.SparkSession, m: ModelDef) =
-        s.readStream.schema(s.read.parquet(s"$src/f1").schema).parquet(s"$src/*")
-      def snapshot(s: org.apache.spark.sql.SparkSession, m: ModelDef) = snap
+  test("merge-on-read: a batch that drops no child appends exactly one " +
+      "epoch to the child replica and its key index, and no destroy publishes") {
+    val fx = new C11Fixture("nsk")
+    val opts = Engine.EngineOptions(mergeOnRead = true, replicaCompactEvery = 100)
+    fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
+    val res = fx.run(opts)
+    val tables = Seq(res.replicas("order_line"), res.keyIndexes("order_line"))
+      .map(_.asInstanceOf[ParquetReplica])
+    val before = tables.map(t => t.currentVersion -> t.deltaEntries(t.currentVersion))
+    // parent 1 republishes with all four lines: C11 runs, dooms nothing
+    fx.orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
+    fx.assertLockstep(fx.run(opts))
+    tables.zip(before).foreach { case (t, (v, deltas)) =>
+      // one version, one appended epoch: no fold and no destroy publish
+      assert(t.currentVersion == v + 1, s"$t: v$v -> v${t.currentVersion}")
+      val now = t.deltaEntries(t.currentVersion)
+      assert(now.size == deltas.size + 1 && now.startsWith(deltas),
+        s"expected one appended epoch: $deltas -> $now")
     }
+  }
 
-    orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
-    Engine.runAvailableNow(spark, reg, bindings, s"$tmp/work")
+  test("key index bootstraps from a pre-existing child replica") {
+    val fx = new C11Fixture("nsb")
+    fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
+    fx.run()
     // a workDir from before key indexes existed: the child replica has 32
     // rows but the index is gone entirely
     def rm(x: java.io.File): Unit = {
       Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete()
     }
-    rm(new java.io.File(s"$tmp/work/replicas/order_line__keyidx"))
+    rm(new java.io.File(s"${fx.work}/replicas/order_line__keyidx"))
 
     // parent 1 republishes with line 4 gone; an UNbootstrapped index knows
     // only the just-merged children {1,2,3}, so doomed = ∅ and line 4
     // silently survives — the divergence this test pins out
-    snap = linesSnap(Set(4L))
-    orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
-    val res = Engine.runAvailableNow(spark, reg, bindings, s"$tmp/work")
+    fx.dropped = Set(4L)
+    fx.orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
+    val res = fx.run()
 
     val left = res.replicas("order_line").read()
       .select("synced_id").as[Long].collect().toSet
     assert(left == (1L to 32L).toSet - 4L, s"got $left")
     // and the rebuilt index is complete, in lockstep with the replica
-    val idxPairs = res.keyIndexes("order_line").read()
-      .select("order_id", "synced_id").as[(Long, Long)].collect().toSet
-    val repPairs = res.replicas("order_line").read()
-      .select("order_id", "synced_id").as[(Long, Long)].collect().toSet
-    assert(idxPairs == repPairs, s"index diverged: ${idxPairs.diff(repPairs)}")
+    fx.assertLockstep(res)
   }
 
   test("models absent from a micro-batch skip their merge path entirely") {

@@ -147,6 +147,34 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(state(mor2).exists(r => r._1 == 2L && r._3 == Some(2.0)))
   }
 
+  test("MoR: destroy with an empty id set neither folds the delta log " +
+      "nor publishes a version") {
+    val ddl = "synced_id LONG, synced_updated_at TIMESTAMP, " +
+      "synced_created_at TIMESTAMP, synced_canceled_at TIMESTAMP, " +
+      "value DOUBLE, synced_data STRING"
+    val tmp = Files.createTempDirectory("graft-mor-nodestroy").toString
+    val mor = new ParquetReplica(spark, s"$tmp/r", ddl, buckets = 4,
+      mergeOnRead = true, compactEvery = 100)
+    def upd(id: Long, v: Double) =
+      Seq((id, java.sql.Timestamp.valueOf("2026-01-01 10:00:00"), v))
+        .toDF("synced_id", "synced_updated_at", "value")
+        .withColumn("event_type", lit("updated"))
+        .withColumn("synced_created_at", $"synced_updated_at")
+        .withColumn("canceled_at", lit(null).cast("timestamp"))
+        .withColumn("synced_data", concat(lit("d"), $"synced_id"))
+    mor.merge(upd(1L, 1.0)); mor.merge(upd(2L, 2.0))
+    val v = mor.currentVersion
+    val pending = mor.deltaEntries(v)
+    assert(pending.size == 2, "the delta log must hold the two epochs")
+    // a C11 batch whose parents keep all their children destroys nothing:
+    // the fold of the pending log (a whole-table rewrite) must not run
+    mor.destroy(Seq.empty[Long].toDF("synced_id"))
+    assert(mor.currentVersion == v, "an empty destroy must not publish")
+    assert(mor.deltaEntries(mor.currentVersion) == pending,
+      "an empty destroy must not fold the delta log")
+    assert(mor.read().count() == 2)
+  }
+
   test("MoR delta epochs write typed nulls for replica columns the " +
       "payload lacks, and a preserving prepare runs bucket-pruned") {
     // `extra` exists on the replica but never in any payload — exactly
