@@ -102,13 +102,13 @@ object Engine {
     *  - `replicaFactory`: swap the replica storage implementation
     *    engine-wide — `(spark, model, root) => Replica`. Default is the
     *    bucketed [[ParquetReplica]]; a transactional table format
-    *    (Delta/Iceberg) or the thin [[graft.streaming.CowReplica]] plug
-    *    in here without touching any operator. A custom replica that
-    *    does not override `Replica.readBuckets` silently degrades the
-    *    C12 capture path to an O(table) read per micro-batch (the
-    *    trait's documented fallback) — implement pruning for any
-    *    at-scale backend; the contract suite pins it for the shipped
-    *    ones.
+    *    (Delta/Iceberg) plugs in here without touching any operator (the
+    *    specs plug in a thin copy-on-write double the same way). A
+    *    custom replica that does not override `Replica.readBuckets`
+    *    silently degrades the C12 capture path to an O(table) read per
+    *    micro-batch (the trait's documented fallback) — implement
+    *    pruning for any at-scale backend; the contract suite pins it for
+    *    ParquetReplica and the double.
     *  - `changesetKey`: P24 — when set, change feeds may carry their
     *    `__changeset` sealed at rest ([[graft.producer.ChangesetCrypto]],
     *    an opaque string column); observer resolution opens it

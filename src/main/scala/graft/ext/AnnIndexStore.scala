@@ -17,10 +17,10 @@ import graft.ext.Similarity.IvfPqIndex
   *   centroids-v{k}/    centroid set k (repair bumps k; never mutated)
   *   epoch-{n}/         one batch's code rows, partitioned by cell
   *   tomb-{n}/          one delete batch's doomed ids
-  *   v{N}.manifest      text: C centroid-version, E/T lines in order,
-  *                      D dead-cell lines
-  *   LATEST             current manifest version (temp+ATOMIC_MOVE)
   * }}}
+  * under a [[graft.storage.VersionedLayout]] whose manifest holds the
+  * `C` centroid-version line, the ordered E/T log and the `D` dead-cell
+  * lines.
   *
   * Why epochs + dead cells instead of rewriting `codes/`: an extend
   * must cost O(batch) — one new epoch directory, partitioned by cell
@@ -31,49 +31,43 @@ import graft.ext.Similarity.IvfPqIndex
   * cell ids DEAD in the next manifest — prior epochs are never
   * rewritten; readers drop dead cells by partition-pruned filter.
   * Because repaired ids are never reused, the dead set is a correct
-  * global exclusion. Deletes append a tombstone epoch (doomed ids);
-  * reads anti-join the bounded tombstone union, and [[compact]] folds
+  * global exclusion. Deletes append a tombstone epoch (doomed ids) that
+  * hides them only from the epochs published before it (the layout's
+  * order-aware rule: an id removed and then extended again is live),
+  * and [[compact]] folds
   * epochs + tombstones + dead cells into one fresh epoch when the
   * read-side debt is worth collecting — the same MoR trade as the
   * replica's delta log.
   *
-  * Every mutation publishes manifest-then-pointer via temp file +
-  * ATOMIC_MOVE, so a crash leaves the old version fully readable and
-  * a concurrent reader never sees a torn index. Mutations serialize on
-  * a per-root JVM lock; cross-process writers need an external
-  * coordinator, exactly like the replica (documented there).
+  * Every mutation publishes through the layout, so a crash leaves the
+  * old version fully readable and a concurrent reader never sees a torn
+  * index. Mutations serialize on the layout's writer lock.
   */
 final class AnnIndexStore(spark: SparkSession, root: String) {
-  import AnnIndexStore.lockFor
-  import graft.storage.Hcfs
+  import graft.storage.{Hcfs, VersionedLayout}
+  import VersionedLayout.{Entry, Epoch, Tomb}
 
-  private def pointer = s"$root/LATEST"
+  private val layout = new VersionedLayout(spark, root)
 
-  def currentVersion: Int =
-    if (!Hcfs.exists(spark, pointer)) -1
-    else Hcfs.readString(spark, pointer).trim.toInt
+  def currentVersion: Int = layout.currentVersion
 
-  private final case class Manifest(centroidVersion: Int,
-      epochs: Seq[String], tombs: Seq[String], dead: Set[Int])
+  private final case class Manifest(centroidVersion: Int, log: Seq[Entry],
+      dead: Set[Int])
 
-  private def manifest(v: Int): Manifest = {
-    val lines = Hcfs.readString(spark, s"$root/v$v.manifest")
-      .linesIterator.toSeq
-    Manifest(
-      lines.collectFirst { case l if l.startsWith("C\t") =>
-        l.drop(2).toInt }.getOrElse(0),
-      lines.filter(_.startsWith("E\t")).map(_.drop(2)),
-      lines.filter(_.startsWith("T\t")).map(_.drop(2)),
-      lines.filter(_.startsWith("D\t")).map(_.drop(2).toInt).toSet)
+  /** The current version and its manifest, read once. */
+  private def current(): (Int, Manifest) = {
+    val (v, lines) = layout.load()
+    (v, Manifest(
+      VersionedLayout.tagged(lines, "C").headOption.map(_(0).toInt)
+        .getOrElse(0),
+      VersionedLayout.parseLog(lines),
+      VersionedLayout.tagged(lines, "D").map(_(0).toInt).toSet))
   }
 
-  private def publish(next: Int, m: Manifest): Unit = {
-    val body = (Seq(s"C\t${m.centroidVersion}") ++
-      m.epochs.map(e => s"E\t$e") ++ m.tombs.map(t => s"T\t$t") ++
-      m.dead.toSeq.sorted.map(d => s"D\t$d")).mkString("\n")
-    Hcfs.writeAtomic(spark, s"$root/v$next.manifest", body)
-    Hcfs.writeAtomic(spark, pointer, next.toString)
-  }
+  private def publish(next: Int, m: Manifest): Unit =
+    layout.publish(next, s"C\t${m.centroidVersion}" +:
+      (VersionedLayout.logLines(m.log) ++
+        m.dead.toSeq.sorted.map(d => s"D\t$d")))
 
   private def centroidsOf(k: Int): Seq[(Int, Array[Double])] =
     spark.read.parquet(s"$root/centroids-v$k")
@@ -94,7 +88,7 @@ final class AnnIndexStore(spark: SparkSession, root: String) {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$root/$dir")
 
   /** Initialize the store from a freshly built index (version 0). */
-  def init(index: IvfPqIndex): Unit = lockFor(root).synchronized {
+  def init(index: IvfPqIndex): Unit = layout.withLock {
     require(currentVersion < 0, s"ann store $root already initialized")
     Hcfs.mkdirs(spark, root)
     import spark.implicits._
@@ -103,37 +97,32 @@ final class AnnIndexStore(spark: SparkSession, root: String) {
       .coalesce(1).write.mode("overwrite").parquet(s"$root/codebook")
     writeCentroids(0, index.centroids)
     writeEpoch("epoch-0", index.codes)
-    publish(0, Manifest(0, Seq("epoch-0"), Nil, Set.empty))
+    publish(0, Manifest(0, Seq(Epoch(Seq("epoch-0"))), Set.empty))
   }
 
   /** The current index, every component lazily read from the versioned
-    * layout: codes = union of epoch scans (each cell-partitioned, so
-    * probe gates and repair filters prune files), minus dead cells
-    * (partition-pruned NOT-IN), minus tombstoned ids (one anti-join
-    * against the bounded tombstone union). Accepts every
-    * [[Similarity]] index entry point unchanged. */
-  def load(): IvfPqIndex = {
-    val v = currentVersion
-    require(v >= 0, s"ann store $root is not initialized")
-    val m = manifest(v)
+    * layout: codes = the log's live view (epoch scans, each
+    * cell-partitioned so probe gates and repair filters prune files,
+    * minus the tombstones published after them) minus dead cells
+    * (partition-pruned NOT-IN). Accepts every [[Similarity]] index entry
+    * point unchanged. */
+  def load(): IvfPqIndex = load(current()._2)
+
+  private def load(m: Manifest): IvfPqIndex = {
     val cb = spark.read.parquet(s"$root/codebook")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .sortBy(t => (t._1, t._2)).toSeq
-    var codes = m.epochs
-      .map(e => spark.read.parquet(s"$root/$e")
+    val live = VersionedLayout.live(m.log, "nid",
+      e => spark.read.parquet(s"$root/${e.dirs.head}")
         .select(col("nid"), col("cell").cast("int").as("cell"),
-          col("sub"), col("code")))
-      .reduce(_ unionByName _)
-    if (m.dead.nonEmpty)
-      codes = codes.filter(!col("cell")
+          col("sub"), col("code")),
+      t => spark.read.parquet(s"$root/$t").select(col("nid")))
+    val codes =
+      if (m.dead.isEmpty) live
+      else live.filter(!col("cell")
         .isin(m.dead.toSeq.sorted.map(Integer.valueOf): _*))
-    if (m.tombs.nonEmpty) {
-      val doomed = m.tombs.map(t => spark.read.parquet(s"$root/$t"))
-        .reduce(_ unionByName _)
-      codes = codes.join(doomed, Seq("nid"), "left_anti")
-    }
-    IvfPqIndex(centroidsOf(manifest(v).centroidVersion), cb, codes)
+    IvfPqIndex(centroidsOf(m.centroidVersion), cb, codes)
   }
 
   /** EXTEND with a vector batch: encode against the CURRENT frozen
@@ -141,27 +130,25 @@ final class AnnIndexStore(spark: SparkSession, root: String) {
     * O(batch) bytes written, nothing rewritten. The streaming ingest
     * path calls this per micro-batch. */
   def extend(batch: DataFrame, idCol: String, vecCol: String): Unit =
-    lockFor(root).synchronized {
-      val v = currentVersion
-      val m = manifest(v)
-      val idx = load()
+    layout.withLock {
+      val (v, m) = current()
+      val idx = load(m)
       val ext = Similarity.extendIvfPqIndex(
         idx.copy(codes = idx.codes.limit(0)), batch, idCol, vecCol)
       val dir = s"epoch-${v + 1}"
       writeEpoch(dir, ext.codes)
-      publish(v + 1, m.copy(epochs = m.epochs :+ dir))
+      publish(v + 1, m.copy(log = m.log :+ Epoch(Seq(dir))))
     }
 
   /** DELETE ids: publish one tombstone epoch (no code row moves);
     * readers anti-join, [[compact]] folds. */
   def remove(ids: DataFrame, idCol: String): Unit =
-    lockFor(root).synchronized {
-      val v = currentVersion
-      val m = manifest(v)
+    layout.withLock {
+      val (v, m) = current()
       val dir = s"tomb-${v + 1}"
       ids.select(col(idCol).as("nid")).distinct()
         .coalesce(1).write.mode("overwrite").parquet(s"$root/$dir")
-      publish(v + 1, m.copy(tombs = m.tombs :+ dir))
+      publish(v + 1, m.copy(log = m.log :+ Tomb(dir)))
     }
 
   /** REPAIR drifted cells without rebuild ([[Similarity
@@ -174,10 +161,9 @@ final class AnnIndexStore(spark: SparkSession, root: String) {
     * downstream by repairDriftedCells's coverage check). */
   def repair(corpus: DataFrame, idCol: String, vecCol: String,
       cells: Seq[Int], splitInto: Int = 2, seed: Long = 42L): Unit =
-    lockFor(root).synchronized {
-      val v = currentVersion
-      val m = manifest(v)
-      val idx = load()
+    layout.withLock {
+      val (v, m) = current()
+      val idx = load(m)
       val repaired = Similarity.repairDriftedCells(idx, corpus, idCol,
         vecCol, cells, splitInto, seed)
       val cellSet = cells.toSet
@@ -192,26 +178,19 @@ final class AnnIndexStore(spark: SparkSession, root: String) {
         .filter(col("cell").isin(freshCells.map(Integer.valueOf): _*)))
       writeCentroids(m.centroidVersion + 1, repaired.centroids)
       publish(v + 1, Manifest(m.centroidVersion + 1,
-        m.epochs :+ dir, m.tombs, m.dead ++ cellSet))
+        m.log :+ Epoch(Seq(dir)), m.dead ++ cellSet))
     }
 
   /** Fold epochs + tombstones + dead cells into one fresh epoch — the
     * periodic debt collection ([[graft.streaming.ParquetReplica]]'s
     * compaction, same trade). */
-  def compact(): Unit = lockFor(root).synchronized {
-    val v = currentVersion
-    val m = manifest(v)
+  def compact(): Unit = layout.withLock {
+    val (v, m) = current()
     val dir = s"epoch-${v + 1}"
     // reads the LIVE rows from the old epochs, writes a NEW directory —
     // never a self-overwrite; the old epochs stay until a vacuum
-    writeEpoch(dir, load().codes)
-    publish(v + 1, Manifest(m.centroidVersion, Seq(dir), Nil, Set.empty))
+    writeEpoch(dir, load(m).codes)
+    publish(v + 1,
+      Manifest(m.centroidVersion, Seq(Epoch(Seq(dir))), Set.empty))
   }
-}
-
-object AnnIndexStore {
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(root: String): Object =
-    locks.computeIfAbsent(root, _ => new Object)
 }

@@ -801,9 +801,7 @@ object TextDedup {
       .withColumn("component", col("id"))
     var converged = false
     var i = 0
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && i < maxIterations) {
-      val t0 = System.nanoTime()
       // propagate: candidate label = min over neighbors' labels and own
       val viaNeighbors = edges
         .join(labels.withColumnRenamed("id", "dst2"),
@@ -828,7 +826,6 @@ object TextDedup {
       converged = next.filter(col("__changed")).limit(1).count() == 0
       labels = next.select(col("id"), col("component"))
       i += 1
-      if (debug) println(f"cc round $i: ${(System.nanoTime() - t0) / 1e9}%.2fs converged=$converged")
     }
     labels
   }
@@ -944,11 +941,11 @@ object TextDedup {
     *    the live views as a broadcast anti-join on the candidate rows;
     *    [[compactStoredMinhashIndex]] folds accumulated tombstones into
     *    a rewrite. Deletes of unknown ids are no-ops by construction.
-    *  - `path/v{N}.manifest` + `path/LATEST` — the versioned commit
-    *    (the ParquetReplica discipline: fresh epoch dirs + atomic
-    *    temp-file/rename publish, so a LOADED index is an immutable
-    *    snapshot and a probe racing an extend sees either version,
-    *    never a torn batch). The S line carries k / bands / shingleN /
+    *  - a [[graft.storage.VersionedLayout]] manifest per version — the
+    *    versioned commit (the replica's discipline: fresh epoch dirs +
+    *    atomic publish, so a LOADED index is an immutable snapshot and
+    *    a probe racing an extend sees either version, never a torn
+    *    batch). The S line carries k / bands / shingleN /
     *    bandBuckets / docBuckets: the banding-family parameters travel
     *    WITH the index, because band agreement across different
     *    families is meaningless (the [[nearDupAgainstIndex]] doc's
@@ -970,10 +967,8 @@ object TextDedup {
 
   /** One row per (band, band-hash) of a signature frame, bucketed for
     * the stored layout — shared by save, extend, and the probe side so
-    * the three can never disagree on the bucket expression
-    * (package-visible so the legacy-layout spec can hand-write the
-    * round-13 flat layout with the same expression). */
-  private[graft] def explodedBands(index: DataFrame, k: Int, bands: Int,
+    * the three can never disagree on the bucket expression. */
+  private def explodedBands(index: DataFrame, k: Int, bands: Int,
       bandBuckets: Int): DataFrame =
     index.select(col("id"), col("sz"), col("sig"),
         explode(array(bandKeyExprs(col("sig"), k, bands): _*)).as("bk"))
@@ -983,212 +978,103 @@ object TextDedup {
         pmod(xxhash64(col("band"), col("bh")), lit(bandBuckets.toLong))
           .cast("int"))
 
-  // ---- versioned-layout bookkeeping (metadata through the Hadoop
-  //      FileSystem API — graft.storage.Hcfs — so the layout opens on
-  //      HDFS/S3, not just a local disk; same commit discipline as the
-  //      stored BM25 layout: fresh epoch dirs + atomic manifest/pointer
-  //      publish = loaded indexes are immutable snapshots, and
-  //      tombstones are ORDER-AWARE so a deleted id may be re-ingested
-  //      by a later extend) ----
+  // ---- versioned-layout bookkeeping: graft.storage.VersionedLayout
+  //      owns the pointer, publish, vacuum, writer lock and the
+  //      order-aware E/T log (so a deleted id may be re-ingested by a
+  //      later extend); this layout's own manifest fields are the
+  //      banding parameters (S line) and the H schemas ----
 
-  import graft.storage.Hcfs
+  import graft.storage.{Hcfs, VersionedLayout}
+  import VersionedLayout.{Entry, Epoch, Tomb}
 
-  private sealed trait MhEntry
-  private final case class MhEpoch(bandsDir: String,
-      docsDir: String) extends MhEntry
-  private final case class MhTomb(dir: String) extends MhEntry
-  /** `bandsDdl`/`docsDdl` ride the manifest (`H` lines) so readers
-    * construct scans with an EXPLICIT schema — parquet inference costs
-    * one driver job per directory per load (the BM25 layout's rule,
-    * measured round 14). None = legacy manifest; fall back to
-    * inference. */
+  /** One version of the layout; an epoch's dirs are (bands, docs). The
+    * `H` schemas (DDL) let readers construct scans with an EXPLICIT
+    * schema — parquet inference costs one driver job per directory per
+    * load (the BM25 layout's rule, measured round 14). */
   private final case class MhLog(k: Int, bands: Int, shingleN: Int,
-      bandBuckets: Int, docBuckets: Int, entries: Seq[MhEntry],
-      version: Int, bandsDdl: Option[String] = None,
-      docsDdl: Option[String] = None)
-
-  /** Parse the current manifest: versioned form (`LATEST` →
-    * `v{N}.manifest`) or the round-13 legacy form (`manifest.json` +
-    * flat `bands`/`docs`/`tombstones` dirs) as version −1 — readable
-    * as-is; the first maintenance write upgrades it. */
-  private def readMhLog(spark: org.apache.spark.sql.SparkSession,
-      path: String, version: Int = -1): MhLog = {
-    if (version >= 0 || Hcfs.exists(spark, s"$path/LATEST")) {
-      val v = if (version >= 0) version
-        else Hcfs.readString(spark, s"$path/LATEST").trim.toInt
-      val lines = Hcfs.readString(spark, s"$path/v$v.manifest")
-        .linesIterator.filter(_.nonEmpty).toSeq
-      val s = lines.collectFirst {
-        case l if l.startsWith("S\t") => l.drop(2).split("\t")
-      }.getOrElse(sys.error(s"minhash manifest at $path/v$v missing S line"))
-      val entries = lines.collect {
-        case l if l.startsWith("E\t") =>
-          val p = l.drop(2).split("\t"); MhEpoch(p(0), p(1))
-        case l if l.startsWith("T\t") => MhTomb(l.drop(2))
-      }
-      def ddl(kind: String): Option[String] = lines.collectFirst {
-        case l if l.startsWith(s"H\t$kind\t") => l.drop(3 + kind.length)
-      }
-      MhLog(s(0).toInt, s(1).toInt, s(2).toInt, s(3).toInt, s(4).toInt,
-        entries, v, ddl("bands"), ddl("docs"))
-    } else {
-      val man = Hcfs.readString(spark, s"$path/manifest.json")
-      def num(key: String, default: Option[Int] = None): Int =
-        s""""$key":\\s*(-?\\d+)""".r.findFirstMatchIn(man)
-          .map(_.group(1).toInt).orElse(default)
-          .getOrElse(sys.error(s"minhash manifest at $path missing $key"))
-      val entries = Seq(MhEpoch("bands", "docs")) ++
-        (if (Hcfs.exists(spark, s"$path/tombstones"))
-          Seq(MhTomb("tombstones")) else Nil)
-      MhLog(num("k"), num("bands"), num("shingleN"), num("bandBuckets"),
-        num("docBuckets", Some(0)), entries, -1)
-    }
+      bandBuckets: Int, docBuckets: Int, bandsDdl: String, docsDdl: String,
+      entries: Seq[Entry], version: Int) {
+    def lines: Seq[String] =
+      Seq(s"S\t$k\t$bands\t$shingleN\t$bandBuckets\t$docBuckets",
+        VersionedLayout.schemaLine("bands", bandsDdl),
+        VersionedLayout.schemaLine("docs", docsDdl)) ++
+        VersionedLayout.logLines(entries)
   }
 
-  private def publishMhLog(spark: org.apache.spark.sql.SparkSession,
-      path: String, log: MhLog): Unit = {
-    val sLine = s"S\t${log.k}\t${log.bands}\t${log.shingleN}" +
-      s"\t${log.bandBuckets}\t${log.docBuckets}"
-    val body = (Seq(sLine) ++
-      log.bandsDdl.map(d => s"H\tbands\t$d") ++
-      log.docsDdl.map(d => s"H\tdocs\t$d") ++
-      log.entries.map {
-        case MhEpoch(b, d) => s"E\t$b\t$d"
-        case MhTomb(d) => s"T\t$d"
-      }).mkString("\n")
-    Hcfs.writeAtomic(spark, s"$path/v${log.version}.manifest", body)
-    Hcfs.writeAtomic(spark, s"$path/LATEST", log.version.toString)
+  /** The manifest of `version` (the current one when negative). */
+  private def readMhLog(layout: VersionedLayout, version: Int = -1): MhLog = {
+    val (v, lines) = layout.load(version)
+    val s = VersionedLayout.tagged(lines, "S").headOption
+      .getOrElse(sys.error(
+        s"minhash manifest version $v at ${layout.root} has no S line"))
+    MhLog(s(0).toInt, s(1).toInt, s(2).toInt, s(3).toInt, s(4).toInt,
+      VersionedLayout.schemaOf(lines, "bands"),
+      VersionedLayout.schemaOf(lines, "docs"),
+      VersionedLayout.parseLog(lines), v)
   }
-
-  private def vacuumMh(spark: org.apache.spark.sql.SparkSession,
-      path: String, log: MhLog): Unit = {
-    val live: Set[String] = log.entries.flatMap {
-      case MhEpoch(b, d) => Seq(b, d)
-      case MhTomb(d) => Seq(d)
-    }.toSet ++ Set(s"v${log.version}.manifest", "LATEST")
-    Hcfs.deleteAsync(spark,
-      Hcfs.listNames(spark, path).collect {
-        case (name, _) if !live.contains(name) && !name.endsWith(".tmp") =>
-          s"$path/$name"
-      })
-  }
-
-  /** Epoch groups of the order-aware tombstone rule: each epoch's
-    * applicable tombstones are the `T` entries AFTER it in the log;
-    * epochs sharing the same suffix set (the common case) union first
-    * and anti-join ONCE — the typical one-delete-batch layout costs a
-    * single broadcast anti-join over the whole view, not one per
-    * epoch. Groups keep log order. */
-  private def mhEpochGroups(log: MhLog): Seq[(Seq[String], Seq[MhEpoch])] = {
-    val keyed = log.entries.zipWithIndex.collect { case (e: MhEpoch, i) =>
-      (log.entries.drop(i + 1).collect { case MhTomb(d) => d }, e)
-    }
-    keyed.map(_._1).distinct.map(k =>
-      k -> keyed.filter(_._1 == k).map(_._2))
-  }
-
-  /** A parquet scan with the manifest's schema when present (see
-    * [[MhLog]] doc). */
-  private def readMhDir(spark: org.apache.spark.sql.SparkSession,
-      path: String, dir: String, ddl: Option[String]): DataFrame =
-    ddl match {
-      case Some(d) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(d))
-        .parquet(s"$path/$dir")
-      case None => spark.read.parquet(s"$path/$dir")
-    }
 
   /** Tombstone frames hold exactly the docs `id` field. */
-  private def mhTombDdl(log: MhLog): Option[String] =
-    log.docsDdl.map(d => org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructType.fromDDL(d).fields.take(1)).toDDL)
-
-  private def mhTombUnion(spark: org.apache.spark.sql.SparkSession,
-      path: String, log: MhLog, dirs: Seq[String]): DataFrame =
-    dirs.map(d => readMhDir(spark, path, d, mhTombDdl(log)).select(col("id")))
-      .reduce(_ unionByName _)
+  private def mhTombScan(layout: VersionedLayout,
+      log: MhLog): String => DataFrame =
+    layout.keyScan(_, log.docsDdl, "id")
 
   /** LIVE views over the stored layout: per-epoch scans (band/doc
     * partition filters prune inside every branch) minus the applicable
-    * tombstone batches (broadcast anti-joins on delete-batch-sized
-    * frames, one per epoch GROUP). */
-  private def liveMhBands(spark: org.apache.spark.sql.SparkSession,
-      path: String, log: MhLog): DataFrame =
-    mhEpochGroups(log).map { case (tombs, epochs) =>
-      val scan = epochs.map(e =>
-        readMhDir(spark, path, e.bandsDir, log.bandsDdl)
-          .select(col("band"), col("bh"), col("id"), col("sz"), col("sig"),
-            col("bb"))).reduce(_ unionByName _)
-      if (tombs.isEmpty) scan
-      else scan.join(broadcast(mhTombUnion(spark, path, log, tombs)),
-        Seq("id"), "left_anti")
-    }.reduce(_ unionByName _)
+    * tombstone batches ([[VersionedLayout.live]]). */
+  private def liveMhBands(layout: VersionedLayout, log: MhLog): DataFrame =
+    VersionedLayout.live(log.entries, "id",
+      e => layout.scan(e.dirs(0), log.bandsDdl)
+        .select(col("band"), col("bh"), col("id"), col("sz"), col("sig"),
+          col("bb")),
+      mhTombScan(layout, log))
 
-  private def liveMhDocs(spark: org.apache.spark.sql.SparkSession,
-      path: String, log: MhLog): DataFrame = {
-    val cols = Seq(col("id"), col("sz"), col("toks"), col("sig")) ++
-      (if (log.docBuckets > 0) Seq(col("db")) else Nil)
-    mhEpochGroups(log).map { case (tombs, epochs) =>
-      val scan = epochs.map(e =>
-        readMhDir(spark, path, e.docsDir, log.docsDdl).select(cols: _*))
-        .reduce(_ unionByName _)
-      if (tombs.isEmpty) scan
-      else scan.join(broadcast(mhTombUnion(spark, path, log, tombs)),
-        Seq("id"), "left_anti")
-    }.reduce(_ unionByName _)
-  }
+  private def liveMhDocs(layout: VersionedLayout, log: MhLog): DataFrame =
+    VersionedLayout.live(log.entries, "id",
+      e => layout.scan(e.dirs(1), log.docsDdl)
+        .select(col("id"), col("sz"), col("toks"), col("sig"), col("db")),
+      mhTombScan(layout, log))
 
-  /** Upgrade a legacy (pre-versioning) layout on its first maintenance
-    * write: publish the legacy dirs as epoch 0. No-op when already
-    * versioned. */
-  private def migrateMhLegacy(spark: org.apache.spark.sql.SparkSession,
-      path: String, log: MhLog): MhLog = {
-    if (log.version >= 0) return log
-    val migrated = log.copy(version = 0)
-    publishMhLog(spark, path, migrated)
-    migrated
-  }
+  /** Doc rows partitioned by id bucket: the verification-toks fetch is a
+    * join by candidate id, and without a partition column it reads the
+    * WHOLE corpus' shingle arrays — the heaviest column — per probe.
+    * Bucketed, the probe prunes to its candidates' directories (the bb
+    * idiom applied to the fetch side). */
+  private def docRows(idx: DataFrame, docBuckets: Int): DataFrame =
+    idx.select(col("id"), col("sz"), col("toks"), col("sig"))
+      .withColumn("db",
+        pmod(xxhash64(col("id")), lit(docBuckets.toLong)).cast("int"))
 
   /** Persist a [[minhashIndex]] frame as a [[StoredMinhashIndex]]
     * layout: a fresh `bands-{v}`/`docs-{v}` epoch pair (one shuffle
     * co-locates each band bucket; the docs side writes id-bucketed and
-    * sorted) published under `v{N}.manifest` + `LATEST`. A full save IS
+    * sorted) published as the layout's next version. A full save IS
     * the compacted state: it vacuums every prior version's directories
     * (the one layout op that invalidates older snapshots). */
   def saveMinhashIndex(index: DataFrame, path: String, k: Int = 16,
       bands: Int = 8, shingleN: Int = 2, bandBuckets: Int = 64,
       docBuckets: Int = 64): Unit = {
+    require(docBuckets > 0, s"docBuckets must be positive, got $docBuckets")
     // one signature evaluation feeds the emptiness check + both writes
     val idx = index.localCheckpoint(eager = false)
     require(!idx.isEmpty, s"refusing to persist an empty index to $path")
-    val spark = index.sparkSession
-    graft.storage.IndexLocks.lockFor(path).synchronized {
-    val next =
-      if (Hcfs.exists(spark, s"$path/LATEST"))
-        Hcfs.readString(spark, s"$path/LATEST").trim.toInt + 1
-      else 0
-    val bandRows = explodedBands(idx, k, bands, bandBuckets)
-    bandRows
-      .repartition(col("bb"))
-      .sortWithinPartitions(col("band"), col("bh"))
-      .write.mode("overwrite").partitionBy("bb").parquet(s"$path/bands-$next")
-    // docs partitioned by id bucket: the verification-toks fetch is a
-    // join by candidate id, and without a partition column it reads the
-    // WHOLE corpus' shingle arrays — the heaviest column — per probe.
-    // Bucketed, the probe prunes to its candidates' directories (the bb
-    // idiom applied to the fetch side).
-    val docRows = idx.select(col("id"), col("sz"), col("toks"), col("sig"))
-      .withColumn("db",
-        pmod(xxhash64(col("id")), lit(docBuckets.toLong)).cast("int"))
-    docRows
-      .repartition(col("db"))
-      .sortWithinPartitions(col("id"))
-      .write.mode("overwrite").partitionBy("db").parquet(s"$path/docs-$next")
-    val log = MhLog(k, bands, shingleN, bandBuckets, docBuckets,
-      Seq(MhEpoch(s"bands-$next", s"docs-$next")), next,
-      Some(bandRows.schema.toDDL), Some(docRows.schema.toDDL))
-    publishMhLog(spark, path, log)
-    vacuumMh(spark, path, log)
+    val layout = new VersionedLayout(index.sparkSession, path)
+    layout.withLock {
+      val next = layout.currentVersion + 1
+      val bandRows = explodedBands(idx, k, bands, bandBuckets)
+      bandRows
+        .repartition(col("bb"))
+        .sortWithinPartitions(col("band"), col("bh"))
+        .write.mode("overwrite").partitionBy("bb")
+        .parquet(s"$path/bands-$next")
+      val docs = docRows(idx, docBuckets)
+      docs
+        .repartition(col("db"))
+        .sortWithinPartitions(col("id"))
+        .write.mode("overwrite").partitionBy("db").parquet(s"$path/docs-$next")
+      layout.publish(next, MhLog(k, bands, shingleN, bandBuckets, docBuckets,
+        bandRows.schema.toDDL, docs.schema.toDDL,
+        Seq(Epoch(Seq(s"bands-$next", s"docs-$next"))), next).lines)
+      layout.vacuumLog()
     }
   }
 
@@ -1201,19 +1087,20 @@ object TextDedup {
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): StoredMinhashIndex = loadMinhashIndex(spark, path, -1)
 
-  /** TIME-TRAVEL load: pin a manifest version instead of `LATEST`
-    * (the BM25 layout's rule — see [[TextSearch.loadBm25Index]]):
+  /** TIME-TRAVEL load: pin a published version instead of the current
+    * one (the BM25 layout's rule — see [[TextSearch.loadBm25Index]]):
     * any un-vacuumed version reproduces its exact probe results. */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Int): StoredMinhashIndex = {
-    val log = readMhLog(spark, path, version)
-    val docs = liveMhDocs(spark, path, log)
-    val tombDirs = log.entries.collect { case MhTomb(d) => d }
+    val layout = new VersionedLayout(spark, path)
+    val log = readMhLog(layout, version)
+    val docs = liveMhDocs(layout, log)
+    val tombs = VersionedLayout.tombDirs(log.entries)
     val tomb =
-      if (tombDirs.isEmpty) docs.select(col("id")).limit(0)
-      else mhTombUnion(spark, path, log, tombDirs)
+      if (tombs.isEmpty) docs.select(col("id")).limit(0)
+      else tombs.map(mhTombScan(layout, log)).reduce(_ unionByName _)
     StoredMinhashIndex(log.k, log.bands, log.shingleN, log.bandBuckets,
-      log.docBuckets, path, liveMhBands(spark, path, log), docs, tomb)
+      log.docBuckets, path, liveMhBands(layout, log), docs, tomb)
   }
 
   /** Append a new batch to a stored index WITHOUT touching indexed
@@ -1229,32 +1116,21 @@ object TextDedup {
   def extendStoredMinhashIndex(sidx: StoredMinhashIndex, batch: DataFrame,
       idCol: String, textCol: String): StoredMinhashIndex = {
     val spark = batch.sparkSession
-    graft.storage.IndexLocks.lockFor(sidx.path).synchronized {
-    val log = migrateMhLegacy(spark, sidx.path, readMhLog(spark, sidx.path))
-    val next = log.version + 1
-    val add = minhashIndex(batch, idCol, textCol, log.k, log.shingleN)
-      .localCheckpoint(eager = false) // one evaluation feeds both writes
-    val bandRows = explodedBands(add, log.k, log.bands, log.bandBuckets)
-    bandRows
-      .write.mode("overwrite").partitionBy("bb")
-      .parquet(s"${sidx.path}/bands-$next")
-    val docRows0 = add.select(col("id"), col("sz"), col("toks"), col("sig"))
-    val docRows =
-      if (log.docBuckets > 0) docRows0.withColumn("db",
-        pmod(xxhash64(col("id")), lit(log.docBuckets.toLong)).cast("int"))
-      else docRows0
-    if (log.docBuckets > 0)
-      docRows.write.mode("overwrite").partitionBy("db")
+    val layout = new VersionedLayout(spark, sidx.path)
+    layout.withLock {
+      val log = readMhLog(layout)
+      val next = log.version + 1
+      val add = minhashIndex(batch, idCol, textCol, log.k, log.shingleN)
+        .localCheckpoint(eager = false) // one evaluation feeds both writes
+      explodedBands(add, log.k, log.bands, log.bandBuckets)
+        .write.mode("overwrite").partitionBy("bb")
+        .parquet(s"${sidx.path}/bands-$next")
+      docRows(add, log.docBuckets).write.mode("overwrite").partitionBy("db")
         .parquet(s"${sidx.path}/docs-$next")
-    else docRows.write.mode("overwrite").parquet(s"${sidx.path}/docs-$next")
-    publishMhLog(spark, sidx.path, log.copy(
-      entries = log.entries :+ MhEpoch(s"bands-$next", s"docs-$next"),
-      version = next,
-      // a migrated-legacy log has no stored schemas; the batch's frames
-      // carry them (same columns/types for every epoch by contract)
-      bandsDdl = log.bandsDdl.orElse(Some(bandRows.schema.toDDL)),
-      docsDdl = log.docsDdl.orElse(Some(docRows.schema.toDDL))))
-    loadMinhashIndex(spark, sidx.path)
+      layout.publish(next, log.copy(
+        entries = log.entries :+ Epoch(Seq(s"bands-$next", s"docs-$next")),
+        version = next).lines)
+      loadMinhashIndex(spark, sidx.path)
     }
   }
 
@@ -1274,19 +1150,18 @@ object TextDedup {
   def removeFromStoredMinhashIndex(sidx: StoredMinhashIndex,
       ids: DataFrame, idCol: String = "id"): StoredMinhashIndex = {
     val spark = ids.sparkSession
-    graft.storage.IndexLocks.lockFor(sidx.path).synchronized {
-    val log = migrateMhLegacy(spark, sidx.path, readMhLog(spark, sidx.path))
-    val next = log.version + 1
-    val dir = s"${sidx.path}/tomb-$next"
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("overwrite").parquet(dir)
-    if (!Hcfs.parquetHasRows(spark, dir)) {
-      Hcfs.delete(spark, dir)
-      return loadMinhashIndex(spark, sidx.path)
-    }
-    publishMhLog(spark, sidx.path, log.copy(
-      entries = log.entries :+ MhTomb(s"tomb-$next"), version = next))
-    loadMinhashIndex(spark, sidx.path)
+    val layout = new VersionedLayout(spark, sidx.path)
+    layout.withLock {
+      val log = readMhLog(layout)
+      val next = log.version + 1
+      val dir = s"${sidx.path}/tomb-$next"
+      ids.select(col(idCol).as("id")).distinct()
+        .write.mode("overwrite").parquet(dir)
+      if (Hcfs.parquetHasRows(spark, dir))
+        layout.publish(next, log.copy(
+          entries = log.entries :+ Tomb(s"tomb-$next"), version = next).lines)
+      else Hcfs.delete(spark, dir)
+      loadMinhashIndex(spark, sidx.path)
     }
   }
 
@@ -1302,11 +1177,8 @@ object TextDedup {
     val survivors = sidx.docs
       .select(col("id"), col("sz"), col("toks"), col("sig"))
       .localCheckpoint(true)
-    // a flat-legacy docs layout (docBuckets 0) upgrades to the bucketed
-    // one here — compaction is the rewrite anyway
     saveMinhashIndex(survivors, sidx.path, sidx.k, sidx.bands,
-      sidx.shingleN, sidx.bandBuckets,
-      if (sidx.docBuckets > 0) sidx.docBuckets else 64)
+      sidx.shingleN, sidx.bandBuckets, sidx.docBuckets)
     loadMinhashIndex(spark, sidx.path)
   }
 
@@ -1358,18 +1230,16 @@ object TextDedup {
     // verification fetch pruned to the candidates' doc buckets: without
     // this the toks join reads EVERY doc's shingle array — the heaviest
     // column in the layout — per probe. Bounded collect (≤ docBuckets
-    // distinct values); flat legacy layouts (docBuckets 0) skip it.
+    // distinct values).
+    val dbs = cands.select(
+        pmod(xxhash64(col("dup_of")), lit(sidx.docBuckets.toLong))
+          .cast("int").as("db"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    if (dbs.isEmpty)
+      return cands.select(col("id"), col("dup_of"),
+        col("est_jac"), lit(0.0).as("jac")).limit(0)
     val docsSide =
-      if (sidx.docBuckets > 0) {
-        val dbs = cands.select(
-            pmod(xxhash64(col("dup_of")), lit(sidx.docBuckets.toLong))
-              .cast("int").as("db"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        if (dbs.isEmpty)
-          return cands.select(col("id"), col("dup_of"),
-            col("est_jac"), lit(0.0).as("jac")).limit(0)
-        sidx.docs.filter(col("db").isin(dbs.map(Integer.valueOf): _*))
-      } else sidx.docs
+      sidx.docs.filter(col("db").isin(dbs.map(Integer.valueOf): _*))
     val inter = call_function("sorted_intersect_size", col("toks_a"), col("toks_b"))
     cands
       .join(newSide.select(col("id"), col("toks").as("toks_a")), "id")

@@ -126,10 +126,9 @@ object TextSearch {
     * layout PERF.md's standing-deployment claim is about, now an API
     * instead of a doc sentence.
     *
-    * The layout is MANIFEST-VERSIONED (the [[graft.streaming
-    * .ParquetReplica]] commit discipline applied to an index): every
-    * maintenance op writes FRESH epoch directories and publishes
-    * `v{N}.manifest` + `LATEST` via temp-file + atomic rename, so a
+    * The layout is a [[graft.storage.VersionedLayout]] (the replica's
+    * commit discipline applied to an index): every maintenance op
+    * writes FRESH epoch directories and publishes a new version, so a
     * loaded index is an immutable SNAPSHOT — a probe racing an extend
     * sees either the pre-extend or the post-extend version, never a
     * torn batch (IndexStorageSpec pins it). Writers are single-writer
@@ -156,201 +155,90 @@ object TextSearch {
       Bm25Index(nDocs, totalTokens, postings.drop("tok_bucket"))
   }
 
-  // ---- versioned-layout bookkeeping (all metadata I/O through the
-  //      Hadoop FileSystem API — graft.storage.Hcfs — so the layout
-  //      opens on HDFS/S3, not just a local disk) ----
-
-  private sealed trait BmEntry
-  private final case class BmEpoch(postingsDir: String,
-      doclensDir: Option[String]) extends BmEntry
-  private final case class BmTomb(dir: String) extends BmEntry
-  /** `postingsDdl`/`doclensDdl` ride the manifest (`H` lines) so every
-    * reader constructs its scans with an EXPLICIT schema: parquet
-    * schema inference costs one driver job per directory per load, and
-    * a maintenance op that reloads a multi-epoch layout was paying
-    * 4-6 such jobs of pure fixed cost (measured — the round-14
-    * versioned-layout lifecycle regression). None = legacy manifest;
-    * readers fall back to inference. */
-  private final case class Bm25Log(nDocs: Long, totalTokens: Long,
-      tokBuckets: Int, entries: Seq[BmEntry], version: Int,
-      postingsDdl: Option[String] = None, doclensDdl: Option[String] = None)
+  // ---- versioned-layout bookkeeping: graft.storage.VersionedLayout
+  //      owns the pointer, publish, vacuum, writer lock and the
+  //      order-aware E/T log (all metadata I/O through the Hadoop
+  //      FileSystem API, so the layout opens on HDFS/S3); this layout's
+  //      own manifest fields are the S scalars and the H schemas ----
 
   import org.apache.spark.sql.SparkSession
-  import graft.storage.Hcfs
+  import graft.storage.VersionedLayout
+  import VersionedLayout.{Entry, Epoch, Tomb}
 
-  /** Parse the current manifest. Reads the versioned form (`LATEST` →
-    * `v{N}.manifest`); a LEGACY layout (round-13 `manifest.json` +
-    * flat `postings`/`doclens`/`tombstones` dirs, no pointer) parses as
-    * version −1 with the legacy dirs as epoch 0 — readable as-is; the
-    * first maintenance WRITE upgrades it ([[migrateLegacy]]). */
-  private def readBm25Log(spark: SparkSession, path: String,
+  /** One version of the layout; an epoch's dirs are (postings,
+    * doclens). The `H` schemas (DDL) let every reader build its scans
+    * with an EXPLICIT schema: parquet inference costs one driver job per
+    * directory per load, and a maintenance op that reloads a multi-epoch
+    * layout was paying 4-6 such jobs of pure fixed cost (measured — the
+    * round-14 versioned-layout lifecycle regression). */
+  private final case class Bm25Log(nDocs: Long, totalTokens: Long,
+      tokBuckets: Int, postingsDdl: String, doclensDdl: String,
+      entries: Seq[Entry], version: Int) {
+    def lines: Seq[String] =
+      Seq(s"S\t$nDocs\t$totalTokens\t$tokBuckets",
+        VersionedLayout.schemaLine("postings", postingsDdl),
+        VersionedLayout.schemaLine("doclens", doclensDdl)) ++
+        VersionedLayout.logLines(entries)
+  }
+
+  /** The manifest of `version` (the current one when negative). */
+  private def readBm25Log(layout: VersionedLayout,
       version: Int = -1): Bm25Log = {
-    if (version >= 0 || Hcfs.exists(spark, s"$path/LATEST")) {
-      val v = if (version >= 0) version
-        else Hcfs.readString(spark, s"$path/LATEST").trim.toInt
-      val lines = Hcfs.readString(spark, s"$path/v$v.manifest")
-        .linesIterator.filter(_.nonEmpty).toSeq
-      val Array(n, t, b) = lines.collectFirst {
-        case l if l.startsWith("S\t") => l.drop(2).split("\t")
-      }.getOrElse(sys.error(s"bm25 manifest at $path/v$v missing S line"))
-      val entries = lines.collect {
-        case l if l.startsWith("E\t") =>
-          val parts = l.drop(2).split("\t")
-          BmEpoch(parts(0),
-            if (parts.length > 1 && parts(1) != "-") Some(parts(1)) else None)
-        case l if l.startsWith("T\t") => BmTomb(l.drop(2))
-      }
-      def ddl(kind: String): Option[String] = lines.collectFirst {
-        case l if l.startsWith(s"H\t$kind\t") => l.drop(3 + kind.length)
-      }
-      Bm25Log(n.toLong, t.toLong, b.toInt, entries, v,
-        ddl("postings"), ddl("doclens"))
-    } else {
-      val man = Hcfs.readString(spark, s"$path/manifest.json")
-      def lng(k: String): Long =
-        s""""$k":\\s*(-?\\d+)""".r.findFirstMatchIn(man)
-          .getOrElse(sys.error(s"bm25 manifest at $path missing $k"))
-          .group(1).toLong
-      val entries = Seq(BmEpoch("postings",
-          if (Hcfs.exists(spark, s"$path/doclens")) Some("doclens")
-          else None)) ++
-        (if (Hcfs.exists(spark, s"$path/tombstones"))
-          Seq(BmTomb("tombstones")) else Nil)
-      Bm25Log(lng("nDocs"), lng("totalTokens"), lng("tokBuckets").toInt,
-        entries, -1)
-    }
-  }
-
-  private def publishBm25Log(spark: SparkSession, path: String,
-      log: Bm25Log): Unit = {
-    val body = (Seq(s"S\t${log.nDocs}\t${log.totalTokens}\t${log.tokBuckets}") ++
-      log.postingsDdl.map(d => s"H\tpostings\t$d") ++
-      log.doclensDdl.map(d => s"H\tdoclens\t$d") ++
-      log.entries.map {
-        case BmEpoch(p, d) => s"E\t$p\t${d.getOrElse("-")}"
-        case BmTomb(d) => s"T\t$d"
-      }).mkString("\n")
-    Hcfs.writeAtomic(spark, s"$path/v${log.version}.manifest", body)
-    Hcfs.writeAtomic(spark, s"$path/LATEST", log.version.toString)
-  }
-
-  /** A parquet scan with the manifest's schema when present — inference
-    * costs one driver JOB per directory, and a multi-epoch lifecycle op
-    * was paying 4-6 of them as pure fixed cost (measured round 14). */
-  private def readDir(spark: SparkSession, path: String, dir: String,
-      ddl: Option[String]): DataFrame = ddl match {
-    case Some(d) => spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(d))
-      .parquet(s"$path/$dir")
-    case None => spark.read.parquet(s"$path/$dir")
+    val (v, lines) = layout.load(version)
+    val Array(n, t, b) = VersionedLayout.tagged(lines, "S").headOption
+      .getOrElse(sys.error(
+        s"bm25 manifest version $v at ${layout.root} has no S line"))
+    Bm25Log(n.toLong, t.toLong, b.toInt,
+      VersionedLayout.schemaOf(lines, "postings"),
+      VersionedLayout.schemaOf(lines, "doclens"),
+      VersionedLayout.parseLog(lines), v)
   }
 
   /** Tombstone frames hold exactly the doclens `nid` field. */
-  private def tombDdl(log: Bm25Log): Option[String] =
-    log.doclensDdl.map(d => org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructType.fromDDL(d).fields.take(1)).toDDL)
-
-  /** Delete layout children the just-published manifest no longer
-    * references — run ONLY after a full rewrite ([[saveBm25Index]] /
-    * compaction), which by contract invalidates older snapshots (the
-    * ParquetReplica `vacuum(0)` semantics; extends and deletes never
-    * touch prior versions, so plain maintenance preserves every
-    * in-flight reader's snapshot). */
-  private def vacuumBm25(spark: SparkSession, path: String,
-      log: Bm25Log): Unit = {
-    val live: Set[String] = log.entries.flatMap {
-      case BmEpoch(p, d) => Seq(p) ++ d.toSeq
-      case BmTomb(d) => Seq(d)
-    }.toSet ++ Set(s"v${log.version}.manifest", "LATEST")
-    Hcfs.deleteAsync(spark,
-      Hcfs.listNames(spark, path).collect {
-        case (name, _) if !live.contains(name) && !name.endsWith(".tmp") =>
-          s"$path/$name"
-      })
-  }
-
-  /** Epoch groups of the order-aware tombstone rule: each epoch's
-    * applicable tombstones are the `T` entries AFTER it in the log, and
-    * epochs sharing the same suffix set (the common case — every epoch
-    * written before the latest delete batch) UNION FIRST and anti-join
-    * ONCE, so the typical one-delete-batch layout costs a single
-    * broadcast anti-join over the whole view rather than one per epoch.
-    * Groups keep log order. */
-  private def epochGroups(log: Bm25Log): Seq[(Seq[String], Seq[BmEpoch])] = {
-    val keyed = log.entries.zipWithIndex.collect { case (e: BmEpoch, i) =>
-      (log.entries.drop(i + 1).collect { case BmTomb(d) => d }, e)
-    }
-    keyed.map(_._1).distinct.map(k =>
-      k -> keyed.filter(_._1 == k).map(_._2))
-  }
-
-  private def tombUnion(spark: SparkSession, path: String,
-      log: Bm25Log, dirs: Seq[String]): DataFrame =
-    dirs.map(d => readDir(spark, path, d, tombDdl(log)).select(col("nid")))
-      .reduce(_ unionByName _)
+  private def tombScan(layout: VersionedLayout,
+      log: Bm25Log): String => DataFrame =
+    layout.keyScan(_, log.doclensDdl, "nid")
 
   /** The LIVE postings view: per-epoch scans (each tok_bucket-
     * partitioned, so probe filters partition-prune INSIDE each branch),
-    * minus the applicable tombstone batches (broadcast anti-joins on
-    * delete-batch-sized frames, one per epoch GROUP — see
-    * [[epochGroups]]; the log is folded by compaction). */
-  private def livePostings(spark: SparkSession, path: String,
+    * minus the applicable tombstone batches ([[VersionedLayout.live]];
+    * the log is folded by compaction). */
+  private def livePostings(layout: VersionedLayout,
       log: Bm25Log): DataFrame =
-    epochGroups(log).map { case (tombs, epochs) =>
-      val scan = epochs.map(e =>
-        readDir(spark, path, e.postingsDir, log.postingsDdl)
-          .select(col("nid"), col("dl"), col("tok"), col("tf"),
-            col("tok_bucket"))).reduce(_ unionByName _)
-      if (tombs.isEmpty) scan
-      else scan.join(broadcast(tombUnion(spark, path, log, tombs)),
-        Seq("nid"), "left_anti")
-    }.reduce(_ unionByName _)
+    VersionedLayout.live(log.entries, "nid",
+      e => layout.scan(e.dirs(0), log.postingsDdl)
+        .select(col("nid"), col("dl"), col("tok"), col("tf"),
+          col("tok_bucket")),
+      tombScan(layout, log))
 
   /** The LIVE (nid, dl) side table — what a delete's scalar decrement
-    * scans (O(live docs), never O(postings)). Epochs saved before the
-    * doclens table existed derive theirs from that epoch's postings
-    * (read-path fallback; [[migrateLegacy]] materializes it on the
-    * first maintenance write so deletes go back to metadata-sized
-    * scans). */
-  private def liveDoclens(spark: SparkSession, path: String,
+    * scans (O(live docs), never O(postings)). */
+  private def liveDoclens(layout: VersionedLayout,
       log: Bm25Log): DataFrame =
-    epochGroups(log).map { case (tombs, epochs) =>
-      val scan = epochs.map(e => e.doclensDir match {
-        case Some(d) => readDir(spark, path, d, log.doclensDdl)
-          .select(col("nid"), col("dl"))
-        case None => readDir(spark, path, e.postingsDir, log.postingsDdl)
-          .select(col("nid"), col("dl")).distinct()
-      }).reduce(_ unionByName _)
-      if (tombs.isEmpty) scan
-      else scan.join(broadcast(tombUnion(spark, path, log, tombs)),
-        Seq("nid"), "left_anti")
-    }.reduce(_ unionByName _)
+    VersionedLayout.live(log.entries, "nid",
+      e => layout.scan(e.dirs(1), log.doclensDdl)
+        .select(col("nid"), col("dl")),
+      tombScan(layout, log))
 
-  /** Upgrade a legacy (pre-versioning) layout to the versioned form on
-    * its first maintenance write: publish the legacy dirs as epoch 0 —
-    * and, when the layout predates the doclens side table, BACKFILL
-    * `doclens-0` from the LIVE postings first. Without the backfill, a
-    * later delete of an original-corpus doc would find no doclens row
-    * and silently under-decrement nDocs/totalTokens (idf/avgdl drift vs
-    * a rebuild — the round-13 review finding). No-op on an
-    * already-versioned layout. */
-  private def migrateLegacy(spark: SparkSession, path: String,
-      log: Bm25Log): Bm25Log = {
-    if (log.version >= 0) return log
-    val entries = log.entries.map {
-      case BmEpoch(p, None) =>
-        // full (nid, dl) of the epoch's postings — the epoch's own
-        // tombstone entries keep applying to it through the log order,
-        // exactly as they do to the postings themselves
-        spark.read.parquet(s"$path/$p")
-          .select(col("nid"), col("dl")).distinct()
-          .write.mode("overwrite").parquet(s"$path/doclens-0")
-        BmEpoch(p, Some("doclens-0"))
-      case e => e
-    }
-    val migrated = log.copy(entries = entries, version = 0)
-    publishBm25Log(spark, path, migrated)
-    migrated
+  /** Write one epoch — `postings-{n}` bucketed by `tok_bucket` plus the
+    * `doclens-{n}` side table — and return it with the two schemas. */
+  private def writeEpoch(path: String, postings0: DataFrame,
+      tokBuckets: Int, n: Int): (Epoch, String, String) = {
+    val postings = postings0.localCheckpoint(eager = false)
+    val bucketed = postings
+      .withColumn("tok_bucket",
+        pmod(xxhash64(col("tok")), lit(tokBuckets.toLong)).cast("int"))
+    bucketed
+      .repartition(col("tok_bucket"))
+      .sortWithinPartitions(col("tok"), col("nid"))
+      .write.mode("overwrite").partitionBy("tok_bucket")
+      .parquet(s"$path/postings-$n")
+    val doclens = postings.select(col("nid"), col("dl")).distinct()
+    doclens
+      .sortWithinPartitions(col("nid"))
+      .write.mode("overwrite").parquet(s"$path/doclens-$n")
+    (Epoch(Seq(s"postings-$n", s"doclens-$n")),
+      bucketed.schema.toDDL, doclens.schema.toDDL)
   }
 
   /** Driver-side twin of the save path's Spark-side bucket expression
@@ -373,8 +261,8 @@ object TextSearch {
     * row-group min/max stats answer the term `isin`) plus the compact
     * `doclens-{v}` side table ((nid, dl): ~doc-count rows vs doc-count
     * × distinct-terms — what a DELETE's scalar decrement scans instead
-    * of the whole postings table), published under `v{N}.manifest` +
-    * `LATEST`. A full save IS the compacted state: it vacuums every
+    * of the whole postings table), published as the layout's next
+    * version. A full save IS the compacted state: it vacuums every
     * prior version's directories (invalidating older snapshots — the
     * one layout op that does). At 100 TB the postings write is the one
     * shuffle an index build amortizes over every future probe batch;
@@ -386,30 +274,14 @@ object TextSearch {
     // a zero-doc index writes no parquet files, leaving a layout the
     // reader cannot even infer a schema from — refuse loudly
     require(index.nDocs > 0, s"refusing to persist an empty index to $path")
-    val spark = index.postings.sparkSession
-    graft.storage.IndexLocks.lockFor(path).synchronized {
-    val next =
-      if (Hcfs.exists(spark, s"$path/LATEST"))
-        Hcfs.readString(spark, s"$path/LATEST").trim.toInt + 1
-      else 0
-    val postings = index.postings.localCheckpoint(eager = false)
-    val bucketed = postings
-      .withColumn("tok_bucket",
-        pmod(xxhash64(col("tok")), lit(tokBuckets.toLong)).cast("int"))
-    bucketed
-      .repartition(col("tok_bucket"))
-      .sortWithinPartitions(col("tok"), col("nid"))
-      .write.mode("overwrite").partitionBy("tok_bucket")
-      .parquet(s"$path/postings-$next")
-    val doclens = postings.select(col("nid"), col("dl")).distinct()
-    doclens
-      .sortWithinPartitions(col("nid"))
-      .write.mode("overwrite").parquet(s"$path/doclens-$next")
-    val log = Bm25Log(index.nDocs, index.totalTokens, tokBuckets,
-      Seq(BmEpoch(s"postings-$next", Some(s"doclens-$next"))), next,
-      Some(bucketed.schema.toDDL), Some(doclens.schema.toDDL))
-    publishBm25Log(spark, path, log)
-    vacuumBm25(spark, path, log)
+    val layout = new VersionedLayout(index.postings.sparkSession, path)
+    layout.withLock {
+      val next = layout.currentVersion + 1
+      val (epoch, postingsDdl, doclensDdl) =
+        writeEpoch(path, index.postings, tokBuckets, next)
+      layout.publish(next, Bm25Log(index.nDocs, index.totalTokens,
+        tokBuckets, postingsDdl, doclensDdl, Seq(epoch), next).lines)
+      layout.vacuumLog()
     }
   }
 
@@ -428,32 +300,18 @@ object TextSearch {
       idCol: String, textCol: String): StoredBm25Index = {
     require(sidx.path.nonEmpty, "index was not loaded from storage")
     val spark = df.sparkSession
-    graft.storage.IndexLocks.lockFor(sidx.path).synchronized {
-    val log = migrateLegacy(spark, sidx.path, readBm25Log(spark, sidx.path))
-    val next = log.version + 1
-    val add = buildBm25Index(df, idCol, textCol)
-    val postings = add.postings.localCheckpoint(eager = false)
-    val bucketed = postings
-      .withColumn("tok_bucket",
-        pmod(xxhash64(col("tok")), lit(log.tokBuckets.toLong)).cast("int"))
-    bucketed
-      .repartition(col("tok_bucket"))
-      .sortWithinPartitions(col("tok"), col("nid"))
-      .write.mode("overwrite").partitionBy("tok_bucket")
-      .parquet(s"${sidx.path}/postings-$next")
-    val doclens = postings.select(col("nid"), col("dl")).distinct()
-    doclens.write.mode("overwrite").parquet(s"${sidx.path}/doclens-$next")
-    publishBm25Log(spark, sidx.path, log.copy(
-      nDocs = log.nDocs + add.nDocs,
-      totalTokens = log.totalTokens + add.totalTokens,
-      entries = log.entries :+
-        BmEpoch(s"postings-$next", Some(s"doclens-$next")),
-      version = next,
-      // a migrated-legacy log has no stored schemas; the batch's frames
-      // carry them (same columns/types for every epoch by contract)
-      postingsDdl = log.postingsDdl.orElse(Some(bucketed.schema.toDDL)),
-      doclensDdl = log.doclensDdl.orElse(Some(doclens.schema.toDDL))))
-    loadBm25Index(spark, sidx.path)
+    val layout = new VersionedLayout(spark, sidx.path)
+    layout.withLock {
+      val log = readBm25Log(layout)
+      val next = log.version + 1
+      val add = buildBm25Index(df, idCol, textCol)
+      val (epoch, _, _) =
+        writeEpoch(sidx.path, add.postings, log.tokBuckets, next)
+      layout.publish(next, log.copy(
+        nDocs = log.nDocs + add.nDocs,
+        totalTokens = log.totalTokens + add.totalTokens,
+        entries = log.entries :+ epoch, version = next).lines)
+      loadBm25Index(spark, sidx.path)
     }
   }
 
@@ -471,28 +329,30 @@ object TextSearch {
       idCol: String): StoredBm25Index = {
     require(sidx.path.nonEmpty, "index was not loaded from storage")
     val spark = ids.sparkSession
-    graft.storage.IndexLocks.lockFor(sidx.path).synchronized {
-    val log = migrateLegacy(spark, sidx.path, readBm25Log(spark, sidx.path))
-    // exactly one live (nid, dl) row per live doc — the decrement agg
-    // and the tombstone write must see the SAME rows (pin it)
-    val doomed = liveDoclens(spark, sidx.path, log)
-      .join(broadcast(ids.select(col(idCol).as("nid")).distinct()),
-        Seq("nid"), "left_semi")
-      .localCheckpoint(eager = false)
-    val st = doomed.agg(count(lit(1)), sum(col("dl"))).head()
-    val nRemoved = st.getLong(0)
-    if (nRemoved == 0L) // nothing live to delete: no new version at all
-      return loadBm25Index(spark, sidx.path)
-    val tokRemoved = if (st.isNullAt(1)) 0L else st.getLong(1)
-    val next = log.version + 1
-    doomed.select(col("nid"))
-      .write.mode("overwrite").parquet(s"${sidx.path}/tomb-$next")
-    publishBm25Log(spark, sidx.path, log.copy(
-      nDocs = log.nDocs - nRemoved,
-      totalTokens = log.totalTokens - tokRemoved,
-      entries = log.entries :+ BmTomb(s"tomb-$next"),
-      version = next))
-    loadBm25Index(spark, sidx.path)
+    val layout = new VersionedLayout(spark, sidx.path)
+    layout.withLock {
+      val log = readBm25Log(layout)
+      // exactly one live (nid, dl) row per live doc — the decrement agg
+      // and the tombstone write must see the SAME rows (pin it)
+      val doomed = liveDoclens(layout, log)
+        .join(broadcast(ids.select(col(idCol).as("nid")).distinct()),
+          Seq("nid"), "left_semi")
+        .localCheckpoint(eager = false)
+      val st = doomed.agg(count(lit(1)), sum(col("dl"))).head()
+      val nRemoved = st.getLong(0)
+      // nothing live to delete: no new version at all
+      if (nRemoved > 0L) {
+        val tokRemoved = if (st.isNullAt(1)) 0L else st.getLong(1)
+        val next = log.version + 1
+        doomed.select(col("nid"))
+          .write.mode("overwrite").parquet(s"${sidx.path}/tomb-$next")
+        layout.publish(next, log.copy(
+          nDocs = log.nDocs - nRemoved,
+          totalTokens = log.totalTokens - tokRemoved,
+          entries = log.entries :+ Tomb(s"tomb-$next"),
+          version = next).lines)
+      }
+      loadBm25Index(spark, sidx.path)
     }
   }
 
@@ -521,22 +381,23 @@ object TextSearch {
   def loadBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String): StoredBm25Index = loadBm25Index(spark, path, -1)
 
-  /** TIME-TRAVEL load: pin a specific manifest version instead of
-    * `LATEST` — free with the versioned layout (every maintenance op
+  /** TIME-TRAVEL load: pin a specific published version instead of the
+    * current one — free with the versioned layout (every maintenance op
     * publishes a new manifest and never mutates prior epochs), so any
     * version that has not been vacuumed by a full save/compact is still
     * fully answerable: reproduce yesterday's retrieval results, diff
     * two index states, audit a delete. Version numbers are the
-    * manifest suffixes (`v{N}.manifest`); a vacuumed version fails
-    * loudly on first read. `version < 0` = LATEST. */
+    * layout's published versions; a vacuumed version fails loudly.
+    * `version < 0` = the current version. */
   def loadBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Int): StoredBm25Index = {
-    val log = readBm25Log(spark, path, version)
-    val tombDirs = log.entries.collect { case BmTomb(d) => d }
+    val layout = new VersionedLayout(spark, path)
+    val log = readBm25Log(layout, version)
+    val tombs = VersionedLayout.tombDirs(log.entries)
     StoredBm25Index(log.nDocs, log.totalTokens, log.tokBuckets,
-      livePostings(spark, path, log), path,
-      if (tombDirs.isEmpty) None
-      else Some(tombUnion(spark, path, log, tombDirs)))
+      livePostings(layout, log), path,
+      if (tombs.isEmpty) None
+      else Some(tombs.map(tombScan(layout, log)).reduce(_ unionByName _)))
   }
 
   /** BM25 top-`k` from a RELOADED index: identical scores to
@@ -695,16 +556,10 @@ object TextSearch {
     import session.implicits._
     // The checkpoint is re-evaluation avoidance only (tf feeds document
     // frequency AND scoring; its input is deterministic) — bypassing it
-    // changes no result. SPARK_GRAFT_PLANDUMP bypasses it so
-    // `explain("formatted")` shows the full postings subtree instead of
-    // truncating at `Scan ExistingRDD` (plan-audit aid; never set in
-    // bench/verify runs). On a real cluster, prefer reliable
+    // changes no result. On a real cluster, prefer reliable
     // `checkpoint()` here if executor loss must not fail the query —
     // localCheckpoint trades that fault tolerance for speed (guide §5).
-    val tf =
-      if (sys.env.contains("SPARK_GRAFT_PLANDUMP")) prunedTf
-      else prunedTf
-        .localCheckpoint(eager = false) // feeds document frequency AND scoring
+    val tf = prunedTf.localCheckpoint(eager = false)
     val qtoks = queries.toDF("qid", "qtext")
       .select(col("qid"), explode(array_distinct(split(col("qtext"), " ")))
         .as("tok"))

@@ -3873,7 +3873,7 @@ object ExtQueries {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // Last-touch attribution with a 7-day window: each purchase credits
-    // the LATEST view at or before it within 7 days. ONE per-user
+    // the latest view at or before it within 7 days. ONE per-user
     // running-max window over the interleaved view/purchase stream —
     // views sort before purchases at equal timestamps, so a
     // same-instant view attributes — instead of the purchases×views

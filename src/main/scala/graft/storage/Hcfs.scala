@@ -5,12 +5,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Hadoop-FileSystem-portable metadata I/O for every pointer, manifest,
   * marker, and existence check the engine's persistence layer performs
-  * (ParquetReplica / CowReplica / AnnIndexStore / the stored BM25 and
-  * MinHash index layouts).
+  * (every [[VersionedLayout]]: ParquetReplica, AnnIndexStore and the
+  * stored BM25 and MinHash index layouts).
   *
   * Why this exists: the DATA plane was always location-transparent —
   * every parquet read/write goes through Spark path-string I/O — but the
-  * metadata plane (LATEST pointers, version manifests, tombstone-log
+  * metadata plane (version pointers, manifests, tombstone-log
   * existence checks) used `java.io.File`, which only opens on a local
   * filesystem. A 100 TB deployment stores these layouts on HDFS or an
   * object store; routing the metadata through
@@ -26,11 +26,20 @@ import org.apache.spark.sql.SparkSession
   * a reader can never observe a truncated manifest, an empty pointer,
   * or a missing-pointer window mid-write, and a crashed writer leaves
   * only a stray temp file. CAVEAT (object stores): S3-style stores
-  * implement rename as copy+delete, which is NOT atomic — a production
-  * deployment on S3 swaps this one seam for the store's conditional-put
-  * (if-none-match) primitive or a small DynamoDB/metastore commit, the
-  * same seam Delta's LogStore abstracts. Every caller funnels through
-  * here, so that swap is one class.
+  * implement rename as copy+delete, which is NOT atomic. The commit
+  * point of every stored thing is one call, [[VersionedLayout.publish]]'s
+  * pointer write, so a production deployment on S3 swaps that single
+  * seam for the store's conditional-put (if-none-match) primitive or a
+  * small DynamoDB/metastore commit — the seam Delta's LogStore
+  * abstracts.
+  *
+  * Configuration is FROZEN per session at first use: [[conf]] builds the
+  * session's Hadoop configuration once, from the `fs.*` (and every
+  * other) SQL conf set at that moment, and reuses it. A `spark.conf.set`
+  * of an `fs.*` key after the session's first metadata call does not
+  * reach this metadata plane (Spark's own data-plane reads still see
+  * it); set filesystem confs before the first replica or index
+  * operation.
   */
 object Hcfs {
 
@@ -38,9 +47,9 @@ object Hcfs {
   // `newHadoopConf()` COPIES the full configuration on every call, and
   // the replica's micro-batch hot path makes several metadata calls per
   // merge — per-call copies are measurable latency at a 25 ms trigger
-  // cadence. Reads of a built Configuration are thread-safe; the
-  // session's SQL-conf overrides are captured at first use (the same
-  // trade Spark's own broadcast Hadoop conf makes).
+  // cadence. Reads of a built Configuration are thread-safe. The price:
+  // the session's `fs.*` SQL confs are frozen at first use (see the
+  // class doc; the same trade Spark's own broadcast Hadoop conf makes).
   private val confCache =
     new java.util.WeakHashMap[SparkSession,
       org.apache.hadoop.conf.Configuration]()

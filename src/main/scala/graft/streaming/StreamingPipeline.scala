@@ -131,43 +131,10 @@ object StreamingPipeline {
   }
 }
 
-/** C7 staleness guard as keyed streaming state — the non-storage-resident
-  * fallback when the sink is not a transactional table (SURVEY §4):
-  * per-key state holds the last-applied LWW timestamp; stale events are
-  * dropped before they reach the sink. Prefer the storage-resident MERGE
-  * at 100 TB (state lives in the table, not the state store); this exists
-  * for sinks without merge support.
-  */
-object StatefulLww {
-  import org.apache.spark.sql.{Dataset, Encoders}
-  import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-  final case class Rec(synced_id: Long, updated_us: Long, value: Double,
-      event_type: String)
-
-  def apply(ds: Dataset[Rec]): Dataset[Rec] = {
-    implicit val enc = Encoders.product[Rec]
-    implicit val longEnc = Encoders.scalaLong
-    ds.groupByKey(_.synced_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (_: Long, rows: Iterator[Rec], state: GroupState[Long]) => {
-          val prev = state.getOption.getOrElse(Long.MinValue)
-          // ties persist (>=), matching synchronizable_model.rb:16-26
-          val fresh = rows.filter(_.updated_us >= prev).toSeq
-          if (fresh.isEmpty) Iterator.empty
-          else {
-            val winner = fresh.maxBy(_.updated_us)
-            state.update(winner.updated_us)
-            Iterator.single(winner)
-          }
-        })
-  }
-}
-
 /** The consumer's storage surface — what `Persistor` needs from a replica
-  * table. Two implementations here (the bucketed merge-on-read
-  * [[ParquetReplica]] and the thin copy-on-write [[CowReplica]]); the
-  * production swap-in is a transactional table format (Delta/Iceberg
+  * table. [[ParquetReplica]] implements it (the specs also run a thin
+  * copy-on-write double against the same contract); the production
+  * swap-in is a transactional table format (Delta/Iceberg
   * `MERGE INTO` / copy-on-write commit) behind the same five operations.
   * Everything above this trait ([[graft.Engine]], [[Persistor]]) is
   * storage-agnostic. */
@@ -226,21 +193,16 @@ object Replica {
   val identityPrepare: (DataFrame, DataFrame) => DataFrame = (_, u) => u
 }
 
-private[streaming] object ReplicaLocks {
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  def lockFor(root: String): Object =
-    locks.computeIfAbsent(root, _ => new Object)
-}
-
 /** Hash-bucketed, manifest-versioned parquet replica store — the
   * pure-Parquet stand-in for a transactional table (Delta `MERGE INTO` in
   * production; SURVEY §7.3).
   *
   * Layout: rows live in per-bucket directories (`v{n}/__b={k}`, bucket =
-  * `pmod(hash(synced_id), buckets)`); each version has a manifest mapping
-  * bucket → directory, and `LATEST` points at the current manifest. A
-  * merge rewrites ONLY the buckets containing updated keys — untouched
-  * buckets are carried forward by reference, their files never rewritten
+  * `pmod(hash(synced_id), buckets)`) under a [[graft.storage
+  * .VersionedLayout]]: each version's manifest maps bucket → directory
+  * and the pointer names the current version. A merge rewrites ONLY the
+  * buckets containing updated keys — untouched buckets are carried
+  * forward by reference, their files never rewritten
   * (the transaction-log pattern; O(batch ∩ buckets), not O(table), per
   * micro-batch). Merges are idempotent (LWW guard), so at-least-once
   * replay converges.
@@ -257,60 +219,65 @@ final class ParquetReplica(spark: SparkSession, root: String,
     mergeOnRead: Boolean = false, compactEvery: Int = 8) extends Replica {
   require(buckets > 0)
   require(compactEvery > 0)
-  // all pointer/manifest/marker I/O goes through the Hadoop FileSystem
-  // API (graft.storage.Hcfs): the metadata plane opens anywhere Spark
-  // itself can read — file:, hdfs:, s3a: — not just a local disk
-  import graft.storage.Hcfs
+  // all metadata I/O goes through the Hadoop FileSystem API
+  // (graft.storage.Hcfs): the metadata plane opens anywhere Spark itself
+  // can read — file:, hdfs:, s3a: — not just a local disk
+  import graft.storage.{Hcfs, VersionedLayout}
   Hcfs.mkdirs(spark, root)
+  private val layout = new VersionedLayout(spark, root)
 
-  private def pointer = s"$root/LATEST"
-
-  def currentVersion: Int =
-    if (Hcfs.exists(spark, pointer))
-      Hcfs.readString(spark, pointer).trim.toInt
-    else -1
+  def currentVersion: Int = layout.currentVersion
 
   override def neverCommitted: Boolean = currentVersion < 0
 
-  /** bucket → directory (relative to root) of the given version; empty
-    * for versions whose manifest was vacuumed. */
-  def manifest(v: Int): Map[Int, String] =
-    manifestLines(v)
-      .filterNot(l => l.startsWith("B\t") || l.startsWith("D\t"))
+  /** One version's manifest: bucket → directory (relative to root), the
+    * bucket count it was written with (`B` line; the constructor default
+    * for pre-header manifests) and the merge-on-read delta log as
+    * (seq, directory) in apply order (`D` lines; always empty in
+    * copy-on-write mode). */
+  private final case class Manifest(dirs: Map[Int, String], nb: Int,
+      deltas: Seq[(Long, String)] = Nil) {
+    def lines: Seq[String] = s"B\t$nb" +:
+      (dirs.toSeq.sorted.map { case (b, p) => s"$b\t$p" } ++
+        deltas.sortBy(_._1).map { case (s, p) => s"D\t$s\t$p" })
+  }
+
+  private def parse(lines: Seq[String]): Manifest = Manifest(
+    lines.filterNot(l => l.startsWith("B\t") || l.startsWith("D\t"))
       .map { line =>
         val Array(b, path) = line.split("\t", 2)
         b.toInt -> path
-      }.toMap
+      }.toMap,
+    VersionedLayout.tagged(lines, "B").headOption
+      .map(_(0).trim.toInt).getOrElse(buckets),
+    VersionedLayout.tagged(lines, "D").map(f => f(0).toLong -> f(1))
+      .sortBy(_._1))
+
+  /** The given version's manifest; empty for vacuumed versions. */
+  private def manifestAt(v: Int): Manifest = parse(layout.readIfPresent(v))
+
+  /** The current version and its manifest, read once and REQUIRED to
+    * exist: a pointer whose manifest is missing is storage corruption,
+    * and treating it as an empty table would silently drop every row on
+    * the next merge. */
+  private def current(): (Int, Manifest) = {
+    val v = currentVersion
+    (v, parse(layout.read(v)))
+  }
+
+  private def publish(next: Int, m: Manifest): Unit =
+    layout.publish(next, m.lines)
+
+  /** bucket → directory (relative to root) of the given version; empty
+    * for versions whose manifest was vacuumed. */
+  def manifest(v: Int): Map[Int, String] = manifestAt(v).dirs
 
   /** Merge-on-read delta log of the given version: (seq, directory)
-    * entries in apply order (manifest `D` lines). Always empty in
-    * copy-on-write mode. */
-  def deltaEntries(v: Int): Seq[(Long, String)] =
-    manifestLines(v).filter(_.startsWith("D\t")).map { line =>
-      val Array(_, s, path) = line.split("\t", 3)
-      s.toLong -> path
-    }.sortBy(_._1)
+    * entries in apply order. Always empty in copy-on-write mode. */
+  def deltaEntries(v: Int): Seq[(Long, String)] = manifestAt(v).deltas
 
-  /** Bucket count the given version was written with (manifest `B` header;
-    * constructor default for pre-header manifests). */
-  def bucketCount(v: Int): Int =
-    manifestLines(v).collectFirst {
-      case l if l.startsWith("B\t") => l.stripPrefix("B\t").trim.toInt
-    }.getOrElse(buckets)
-
-  private def manifestLines(v: Int): Seq[String] =
-    if (v < 0 || !Hcfs.exists(spark, s"$root/v$v.manifest")) Nil
-    else Hcfs.readString(spark, s"$root/v$v.manifest")
-      .linesIterator.filter(_.nonEmpty).toSeq
-
-  /** The current version's manifest, REQUIRED to exist: a pointer whose
-    * manifest is missing is storage corruption, and treating it as an
-    * empty table would silently drop every row on the next merge. */
-  private def currentManifest(v: Int): Map[Int, String] = {
-    if (v >= 0) require(Hcfs.exists(spark, s"$root/v$v.manifest"),
-      s"replica $root: LATEST points at v$v but v$v.manifest is missing")
-    manifest(v)
-  }
+  /** Bucket count the given version was written with. */
+  def bucketCount(v: Int): Int = manifestAt(v).nb
 
   private def schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDDL)
 
@@ -319,10 +286,8 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * the replica has never committed or the version holds no data dirs.
     * One driver-side footer read, no job. */
   def storedSchema: Option[org.apache.spark.sql.types.StructType] = {
-    val v = currentVersion
-    if (v < 0) None
-    else manifest(v).values.headOption
-      .orElse(deltaEntries(v).headOption.map(_._2))
+    val m = manifestAt(currentVersion)
+    m.dirs.values.headOption.orElse(m.deltas.headOption.map(_._2))
       .map(d => spark.read.parquet(s"$root/$d").schema)
   }
 
@@ -360,17 +325,16 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * on a never-committed replica. */
   def migrateColumn(storedDdl: String, colName: String,
       convert: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit =
-    ReplicaLocks.lockFor(root).synchronized {
-      val v = currentVersion
+    withLock {
+      val (v, m) = current()
       if (v >= 0) {
         val old = new ParquetReplica(spark, root, storedDdl, buckets,
           mergeOnRead, compactEvery)
-        val nb = bucketCount(v)
         val next = v + 1
         val migrated = old.read()
           .withColumn(colName, convert(col(colName)))
           .select(schema.fieldNames.map(col).toSeq: _*)
-        publish(next, writeBuckets(migrated, next, nb), nb)
+        publish(next, Manifest(writeBuckets(migrated, next, m.nb), m.nb))
       }
     }
 
@@ -382,10 +346,17 @@ final class ParquetReplica(spark: SparkSession, root: String,
     if (dirs.isEmpty) empty
     else spark.read.schema(schema).parquet(dirs.map(d => s"$root/$d"): _*)
 
-  def read(): DataFrame = {
-    val v = currentVersion
-    reconcile(readDirs(currentManifest(v).values.toSeq), deltaEntries(v))
-  }
+  def read(): DataFrame = rows(current()._2)
+
+  /** Every row of one version: its base buckets plus its delta log. */
+  private def rows(m: Manifest): DataFrame =
+    reconcile(readDirs(m.dirs.values.toSeq), m.deltas)
+
+  /** The bucket set the keys of `df` hash into — one bounded collect
+    * (at most `nb` distinct values). */
+  private def touchedBuckets(df: DataFrame, nb: Int): Set[Int] =
+    df.select(bucketOf(col("synced_id"), nb).as("__b")).distinct()
+      .collect().map(_.getInt(0)).toSet
 
   /** Bucket-pruned read: only the bucket directories the given keys hash
     * into are opened (one bounded collect for the bucket set, exactly as
@@ -397,14 +368,10 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * since callers filter to their keys, but the reason this method's
     * result must never be treated as a full-table read. */
   override def readBuckets(keys: DataFrame): DataFrame = {
-    val v = currentVersion
-    val nb = bucketCount(v)
-    val man = currentManifest(v)
-    val touched = keys
-      .select(bucketOf(col("synced_id"), nb).as("__b")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    reconcile(readDirs(man.filter(t => touched(t._1)).values.toSeq),
-      deltaEntries(v))
+    val (_, m) = current()
+    val touched = touchedBuckets(keys, m.nb)
+    reconcile(readDirs(m.dirs.filter(t => touched(t._1)).values.toSeq),
+      m.deltas)
   }
 
   /** Read-time LWW resolution of base rows + delta-log rows (MoR mode;
@@ -534,25 +501,10 @@ final class ParquetReplica(spark: SparkSession, root: String,
       }.toMap
   }
 
-  /** Manifest + pointer publish, both via temp-file + ATOMIC_MOVE: a
-    * reader can never observe a truncated manifest or an empty pointer
-    * mid-write (the transaction-log commit rule; a crashed writer leaves
-    * only a stray temp file and the previous version stays current). */
-  private def publish(next: Int, man: Map[Int, String], nb: Int,
-      deltas: Seq[(Long, String)] = Nil): Unit = {
-    val body = (s"B\t$nb" +:
-      (man.toSeq.sorted.map { case (b, p) => s"$b\t$p" } ++
-        deltas.sortBy(_._1).map { case (s, p) => s"D\t$s\t$p" }))
-      .mkString("\n")
-    Hcfs.writeAtomic(spark, s"$root/v$next.manifest", body)
-    Hcfs.writeAtomic(spark, pointer, next.toString)
-  }
-
   /** Run `f` under this replica's writer lock — for callers that must
     * compose a read-and-merge atomically (e.g. C12 change capture).
     * Reentrant with [[merge]]/[[transform]]/[[vacuum]]. */
-  def withLock[A](f: => A): A =
-    ReplicaLocks.lockFor(root).synchronized(f)
+  def withLock[A](f: => A): A = layout.withLock(f)
 
   /** Apply an arbitrary state transition over the FULL table and publish
     * the next version (whole-table operations only — compaction-style
@@ -562,13 +514,11 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * concurrent streaming queries ([[graft.Engine]]); a transactional
     * table format serializes concurrent MERGEs the same way at the
     * storage layer. */
-  def transform(f: DataFrame => DataFrame): Unit =
-    ReplicaLocks.lockFor(root).synchronized {
-      val v = currentVersion
-      val next = v + 1
-      val nb = bucketCount(v)
-      publish(next, writeBuckets(f(read()), next, nb), nb)
-    }
+  def transform(f: DataFrame => DataFrame): Unit = withLock {
+    val (v, m) = current()
+    val next = v + 1
+    publish(next, Manifest(writeBuckets(f(rows(m)), next, m.nb), m.nb))
+  }
 
   /** Re-bucket the table to `newBuckets` buckets in one full rewrite —
     * the small-file / skew maintenance operation (Delta `OPTIMIZE`
@@ -576,9 +526,11 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * switch is atomic with the version publish. */
   def compact(newBuckets: Int): Unit = {
     require(newBuckets > 0)
-    ReplicaLocks.lockFor(root).synchronized {
-      val next = currentVersion + 1
-      publish(next, writeBuckets(read(), next, newBuckets), newBuckets)
+    withLock {
+      val (v, m) = current()
+      val next = v + 1
+      publish(next,
+        Manifest(writeBuckets(rows(m), next, newBuckets), newBuckets))
     }
   }
 
@@ -587,25 +539,22 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * id set touches nothing: no delta fold, no version bump, no Spark job
     * beyond the bucket probe — callers may destroy unconditionally. */
   def destroy(ids: DataFrame, idCol: String = "synced_id"): Unit =
-    ReplicaLocks.lockFor(root).synchronized {
-      val nb = bucketCount(currentVersion)
+    withLock {
+      val (v0, m0) = current()
       val keyed = ids.select(col(idCol).as("synced_id"))
       // the emptiness probe is the bucket collect this method needs
       // anyway, taken BEFORE the MoR fold (which keeps the bucket count,
       // so the set stays valid): an empty id set never folds or publishes
-      val touched = keyed
-        .select(bucketOf(col("synced_id"), nb).as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (touched.isEmpty) return
-      // the anti-join below reads base buckets DIRECTLY — fold any MoR
-      // delta log first so no pending upsert escapes the delete
-      compactDeltasLocked()
-      val v = currentVersion
-      val man = currentManifest(v)
-      val target = readDirs(man.filter(t => touched(t._1)).values.toSeq)
-      val written = writeBuckets(
-        target.join(keyed, Seq("synced_id"), "left_anti"), v + 1, nb)
-      publish(v + 1, (man -- touched) ++ written, nb)
+      val touched = touchedBuckets(keyed, m0.nb)
+      if (touched.nonEmpty) {
+        // the anti-join below reads base buckets DIRECTLY — fold any MoR
+        // delta log first so no pending upsert escapes the delete
+        val (v, m) = foldDeltasLocked(v0, m0)
+        val target = readDirs(m.dirs.filter(t => touched(t._1)).values.toSeq)
+        val written = writeBuckets(
+          target.join(keyed, Seq("synced_id"), "left_anti"), v + 1, m.nb)
+        publish(v + 1, Manifest((m.dirs -- touched) ++ written, m.nb))
+      }
     }
 
   /** Drop version directories and manifests no longer reachable from the
@@ -614,32 +563,22 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * (safe once writers/readers are drained); a positive retention keeps a
     * window for in-flight readers whose lazy plans still reference recent
     * versions. Concurrent writers are excluded by the root lock. */
-  def vacuum(retainVersions: Int = 0): Unit =
-    ReplicaLocks.lockFor(root).synchronized {
-      val current = currentVersion
-      if (current < 0) return
-      val floor = math.max(0, current - retainVersions)
-      val live = (floor to current).flatMap { v =>
-        (manifest(v).values ++ deltaEntries(v).map(_._2))
-          .map(_.split("/")(0)).toSeq :+ s"v$v"
-      }.toSet
-      Hcfs.listNames(spark, root).foreach { case (name, isDir) =>
-        // an in-flight background compaction's half-written compact-v*
-        // dir is legitimately unreferenced until its locked publish —
-        // deleting it mid-write would hand the publish a manifest of
-        // missing files. Skip compact dirs while one is running (the
-        // publish also re-checks its dir, so even a foreign-instance
-        // vacuum degrades to an abandoned compaction, never data loss).
-        val isOldVersionDir = isDir &&
-          (name.matches("v\\d+") ||
-            (name.matches("compact-v\\d+") && !compacting.get())) &&
-          !live.contains(name)
-        val isOldManifest = name.matches("v\\d+\\.manifest") &&
-          name.stripPrefix("v").stripSuffix(".manifest").toInt < floor
-        if (isOldVersionDir || isOldManifest)
-          Hcfs.delete(spark, s"$root/$name")
-      }
-    }
+  def vacuum(retainVersions: Int = 0): Unit = withLock {
+    layout.vacuum(currentVersion - retainVersions,
+      (v, lines) => {
+        val m = parse(lines)
+        (m.dirs.values ++ m.deltas.map(_._2)).map(_.split("/")(0)) ++
+          Seq(s"v$v")
+      },
+      // an in-flight background compaction's half-written compact-v*
+      // dir is legitimately unreferenced until its locked publish —
+      // deleting it mid-write would hand the publish a manifest of
+      // missing files. Skip compact dirs while one is running (the
+      // publish also re-checks its dir, so even a foreign-instance
+      // vacuum degrades to an abandoned compaction, never data loss).
+      owned = name => name.matches("v\\d+") ||
+        (name.matches("compact-v\\d+") && !compacting.get()))
+  }
 
   /** LWW-merge `updates` (shaped per [[Persistor.merge]] contract) into
     * the replica, rewriting only the buckets that contain updated keys;
@@ -677,7 +616,7 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * import manifest runs in a maintenance window). */
   def mergeTouched(updates: DataFrame, precomputedTouched: Option[Set[Int]],
       prepare: (DataFrame, DataFrame) => DataFrame = Replica.identityPrepare): Unit =
-    ReplicaLocks.lockFor(root).synchronized {
+    withLock {
       if (mergeOnRead) {
         // MoR doesn't prune by bucket, but a caller-provided key set
         // still answers the empty-batch question for free. WITHOUT one,
@@ -691,33 +630,33 @@ final class ParquetReplica(spark: SparkSession, root: String,
         // bump versions, or trigger pointless compactions
         if (!precomputedTouched.exists(_.isEmpty))
           deltaMerge(updates, precomputedTouched, prepare)
-        return
-      }
-      val v = currentVersion
-      val next = v + 1
-      val nb = bucketCount(v)
-      val man = currentManifest(v)
-      // Pin `updates` when WE derive the touched set from it: the
-      // collect and the rewrite below must see the SAME rows — a
-      // nondeterministic updates plan re-evaluated at write time could
-      // land rows in buckets the collect never saw, and the manifest
-      // swap `(man -- touched) ++ written` would then REPLACE such a
-      // bucket with only the new rows (silent loss of its current
-      // rows). localCheckpoint (lazy) materializes on the collect and
-      // the write reuses the blocks — evaluated once, or fail loudly.
-      val ups = if (precomputedTouched.isEmpty)
-        updates.localCheckpoint(eager = false) else updates
-      // bounded driver-side collect: at most `buckets` distinct values
-      val touched = precomputedTouched.getOrElse(ups
-        .select(bucketOf(col("synced_id"), nb).as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSet)
-      // empty micro-batch slice: nothing to merge, keep the version stable
-      if (touched.isEmpty) return
-      val target = readDirs(man.filter(t => touched(t._1)).values.toSeq)
-      val written =
-        writeBuckets(Persistor.merge(target, prepare(target, ups)), next, nb)
-      publish(next, (man -- touched) ++ written, nb)
+      } else cowMerge(updates, precomputedTouched, prepare)
     }
+
+  /** CoW-mode merge: rewrite the touched buckets, carry the rest. */
+  private def cowMerge(updates: DataFrame,
+      precomputedTouched: Option[Set[Int]],
+      prepare: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val (v, m) = current()
+    val next = v + 1
+    // Pin `updates` when WE derive the touched set from it: the
+    // collect and the rewrite below must see the SAME rows — a
+    // nondeterministic updates plan re-evaluated at write time could
+    // land rows in buckets the collect never saw, and the manifest
+    // swap `(dirs -- touched) ++ written` would then REPLACE such a
+    // bucket with only the new rows (silent loss of its current
+    // rows). localCheckpoint (lazy) materializes on the collect and
+    // the write reuses the blocks — evaluated once, or fail loudly.
+    val ups = if (precomputedTouched.isEmpty)
+      updates.localCheckpoint(eager = false) else updates
+    val touched = precomputedTouched.getOrElse(touchedBuckets(ups, m.nb))
+    // empty micro-batch slice: nothing to merge, keep the version stable
+    if (touched.isEmpty) return
+    val target = readDirs(m.dirs.filter(t => touched(t._1)).values.toSeq)
+    val written =
+      writeBuckets(Persistor.merge(target, prepare(target, ups)), next, m.nb)
+    publish(next, Manifest((m.dirs -- touched) ++ written, m.nb))
+  }
 
   /** MoR-mode merge: append the rowwise-shaped updates as one delta-log
     * epoch and publish — a map-only write of O(batch) bytes, never the
@@ -740,12 +679,9 @@ final class ParquetReplica(spark: SparkSession, root: String,
   private def deltaMerge(updates: DataFrame,
       precomputedTouched: Option[Set[Int]],
       prepare: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val v = currentVersion
+    val (v, m) = current()
     val next = v + 1
-    val nb = bucketCount(v)
-    val man = currentManifest(v)
-    val ds = deltaEntries(v)
-    val seq = ds.lastOption.map(_._1).getOrElse(-1L) + 1L
+    val seq = m.deltas.lastOption.map(_._1).getOrElse(-1L) + 1L
     val dir = s"v$next/delta-$seq"
     // Pin `updates` on the real-prepare path when WE derive the touched
     // set: the collect and the write must see the SAME rows, or a
@@ -766,10 +702,9 @@ final class ParquetReplica(spark: SparkSession, root: String,
         // one bounded collect (≤ buckets values), the same cost the CoW
         // path pays; prepare joins on synced_id, so all rows for the
         // update keys live in these buckets
-        val touched = precomputedTouched.getOrElse(ups
-          .select(bucketOf(col("synced_id"), nb).as("__b")).distinct()
-          .collect().map(_.getInt(0)).toSet)
-        reconcile(readDirs(man.filter(t => touched(t._1)).values.toSeq), ds)
+        val touched = precomputedTouched.getOrElse(touchedBuckets(ups, m.nb))
+        reconcile(readDirs(m.dirs.filter(t => touched(t._1)).values.toSeq),
+          m.deltas)
       }
     // overwrite (the writeBucketsTo rule): a crash between this write
     // and publish() leaves an orphan dir at the SAME next/seq, and the
@@ -799,8 +734,10 @@ final class ParquetReplica(spark: SparkSession, root: String,
       Hcfs.delete(spark, s"$root/$dir")
       return
     }
-    publish(next, man, nb, ds :+ (seq -> dir))
-    if (ds.size + 1 >= compactEvery) compactDeltasAsync()
+    val published = m.copy(deltas = m.deltas :+ (seq -> dir))
+    publish(next, published)
+    if (published.deltas.size >= compactEvery)
+      compactDeltasAsync(next, published)
   }
 
   // one background compaction at a time; failures clear the flag and
@@ -815,34 +752,30 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * Sound because the log is append-only and the read-time fold is
     * left-associative: fold(base, d₁..dₙ₊ₖ) = fold(fold(base, d₁..dₙ),
     * dₙ₊₁..dₙ₊ₖ). Abandoned (log stays, nothing lost) if a concurrent
-    * maintenance op rewrote the bucket layout mid-flight. */
-  private def compactDeltasAsync(): Unit = {
+    * maintenance op rewrote the bucket layout mid-flight. `snap` is the
+    * just-published version `snapV`. */
+  private def compactDeltasAsync(snapV: Int, snap: Manifest): Unit = {
     if (!compacting.compareAndSet(false, true)) return
-    val snapV = currentVersion
-    val snapDeltas = deltaEntries(snapV)
-    if (snapDeltas.isEmpty) { compacting.set(false); return }
-    val snapMaxSeq = snapDeltas.last._1
-    val nb = bucketCount(snapV)
+    val snapMaxSeq = snap.deltas.last._1
+    val nb = snap.nb
     val t = new Thread(() => {
       try {
         // heavy part — NO lock held: reconcile the snapshot and write
         // the folded buckets to a compaction-private directory
-        val folded = reconcile(
-          readDirs(manifest(snapV).values.toSeq), snapDeltas)
-        val written = writeBucketsTo(folded, s"compact-v$snapV", nb)
-        ReplicaLocks.lockFor(root).synchronized {
+        val written = writeBucketsTo(rows(snap), s"compact-v$snapV", nb)
+        withLock {
           val cur = currentVersion
+          val m = manifestAt(cur)
           // the snapshot's last epoch still in the log proves no other
           // base rewrite (sync compact / CoW merge / destroy) folded it
           // already — publishing over one would resurrect the old base.
           // The dir existence check covers a foreign-instance vacuum
           // that reclaimed the half-written compaction output.
-          if (bucketCount(cur) == nb &&
-              deltaEntries(cur).exists(_._1 == snapMaxSeq) &&
-              Hcfs.exists(spark, s"$root/compact-v$snapV")) {
-            val remaining = deltaEntries(cur).filter(_._1 > snapMaxSeq)
-            publish(cur + 1, written, nb, remaining)
-          } // else: layout changed under us — abandon, log is still whole
+          if (m.nb == nb && m.deltas.exists(_._1 == snapMaxSeq) &&
+              Hcfs.exists(spark, s"$root/compact-v$snapV"))
+            publish(cur + 1,
+              Manifest(written, nb, m.deltas.filter(_._1 > snapMaxSeq)))
+          // else: layout changed under us — abandon, log is still whole
         }
       } catch {
         case e: Throwable =>
@@ -853,127 +786,16 @@ final class ParquetReplica(spark: SparkSession, root: String,
     t.start()
   }
 
-  /** Fold the delta log into the base buckets (one CoW rewrite) and
-    * publish a delta-free version. No-op when the log is empty. Runs
-    * under the caller's lock — [[destroy]] and bucket-rewriting
-    * maintenance call it first so their direct base-bucket reads see a
+  /** Fold the delta log of version `v` into the base buckets (one CoW
+    * rewrite), publish the delta-free version and return it; `(v, m)`
+    * unchanged when the log is empty. Runs under the caller's lock —
+    * [[destroy]] calls it first so its direct base-bucket reads see a
     * complete table. */
-  private def compactDeltasLocked(): Unit = {
-    val v = currentVersion
-    if (deltaEntries(v).isEmpty) return
-    val next = v + 1
-    val nb = bucketCount(v)
-    publish(next, writeBuckets(read(), next, nb), nb)
-  }
-}
-
-/** Thin copy-on-write replica: every commit writes a complete new table
-  * directory and atomically repoints `LATEST` — the copy-on-write commit
-  * mode of a transactional table format. Exists to prove the [[Replica]]
-  * surface is storage-agnostic (the contract suite runs against both
-  * implementations); [[ParquetReplica]] remains the scale path — this one
-  * pays O(table) per COMMIT by design. Reads still prune: each version is
-  * laid out in `__b=` bucket directories (hashed on `synced_id`) with the
-  * count recorded in a per-version `_buckets` marker, so [[readBuckets]]
-  * opens only the touched buckets — always hashing with the count the
-  * layout was written with — and the engine's zero-full-read guarantee
-  * (C11/C12) holds on this backend too. Versions without the marker
-  * (legacy flat layouts, foreign writers) read correctly unpruned. */
-final class CowReplica(spark: SparkSession, root: String,
-    schemaDDL: String, buckets: Int = 16) extends Replica {
-  require(buckets > 0)
-  import graft.storage.Hcfs
-  Hcfs.mkdirs(spark, root)
-  private def pointer = s"$root/LATEST"
-
-  def currentVersion: Int =
-    if (Hcfs.exists(spark, pointer))
-      Hcfs.readString(spark, pointer).trim.toInt
-    else -1
-
-  override def neverCommitted: Boolean = currentVersion < 0
-
-  private def schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDDL)
-
-  private def empty: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Bucket-dir paths (relative to root) of version `v`. */
-  private def bucketDirs(v: Int): Seq[String] =
-    Hcfs.listNames(spark, s"$root/v$v")
-      .collect { case (name, true) if name.startsWith("__b=") =>
-        s"v$v/$name"
-      }
-
-  /** Bucket count the given version was written with (`_buckets` marker;
-    * Spark's reader ignores underscore-prefixed files). None = a layout
-    * written before bucketing existed, or by a different tool — readers
-    * must not assume any hash layout for it. */
-  private def bucketCountOf(v: Int): Option[Int] =
-    if (Hcfs.exists(spark, s"$root/v$v/_buckets"))
-      Some(Hcfs.readString(spark, s"$root/v$v/_buckets").trim.toInt)
-    else None
-
-  private def readDirs(dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) empty
-    else spark.read.schema(schema).parquet(dirs.map(d => s"$root/$d"): _*)
-
-  def read(): DataFrame = {
-    val v = currentVersion
-    if (v < 0) empty
+  private def foldDeltasLocked(v: Int, m: Manifest): (Int, Manifest) =
+    if (m.deltas.isEmpty) (v, m)
     else {
-      val dirs = bucketDirs(v)
-      // no bucket dirs: an empty bucketed commit, or a legacy flat layout
-      // (rows directly under v{n}) — both read correctly as the plain dir
-      if (dirs.nonEmpty) readDirs(dirs)
-      else spark.read.schema(schema).parquet(s"$root/v$v")
+      val folded = Manifest(writeBuckets(rows(m), v + 1, m.nb), m.nb)
+      publish(v + 1, folded)
+      (v + 1, folded)
     }
-  }
-
-  override def readBuckets(keys: DataFrame): DataFrame = {
-    val v = currentVersion
-    if (v < 0) return empty
-    bucketCountOf(v) match {
-      case Some(nb) =>
-        val touched = keys
-          .select(pmod(hash(col("synced_id")), lit(nb)).as("__b")).distinct()
-          .collect().map(_.getInt(0)).toSet
-        readDirs(bucketDirs(v).filter(d =>
-          touched(d.split("/").last.stripPrefix("__b=").toInt)))
-      // unknown layout (legacy flat, foreign writer): correct, unpruned
-      case None => read()
-    }
-  }
-
-  def withLock[A](f: => A): A = ReplicaLocks.lockFor(root).synchronized(f)
-
-  def transform(f: DataFrame => DataFrame): Unit = withLock {
-    val next = currentVersion + 1
-    f(read()).withColumn("__b", pmod(hash(col("synced_id")), lit(buckets)))
-      .repartition(buckets, col("__b"))
-      .write.partitionBy("__b").mode("overwrite").parquet(s"$root/v$next")
-    // record the hash layout BEFORE publishing the version: readBuckets
-    // only ever prunes with the count the layout was actually written with
-    Hcfs.writeAtomic(spark, s"$root/v$next/_buckets", buckets.toString)
-    Hcfs.writeAtomic(spark, pointer, next.toString)
-  }
-
-  def merge(updates: DataFrame,
-      prepare: (DataFrame, DataFrame) => DataFrame = Replica.identityPrepare): Unit =
-    transform(current => Persistor.merge(current, prepare(current, updates)))
-
-  def destroy(ids: DataFrame, idCol: String = "synced_id"): Unit =
-    transform(_.join(ids.select(col(idCol).as("synced_id")),
-      Seq("synced_id"), "left_anti"))
-
-  def vacuum(retainVersions: Int = 0): Unit = withLock {
-    val current = currentVersion
-    if (current < 0) return
-    val floor = math.max(0, current - retainVersions)
-    Hcfs.listNames(spark, root).foreach { case (name, isDir) =>
-      if (isDir && name.matches("v\\d+") &&
-          name.stripPrefix("v").toInt < floor)
-        Hcfs.delete(spark, s"$root/$name")
-    }
-  }
 }

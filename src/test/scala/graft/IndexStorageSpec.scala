@@ -244,6 +244,31 @@ class IndexStorageSpec extends SparkSpec {
     assert(a.nonEmpty && a.sameElements(b))
   }
 
+  test("ivfpq store: an id removed and then re-extended is live again, " +
+      "before and after compaction (order-aware tombstones)") {
+    import graft.ext.AnnIndexStore
+    val idx = Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
+      nCentroids = 8, m = 4, codebookSize = 8, seed = 42L)
+    val moved = emb.filter(col("vec_id") % 20 === 5)
+    val store = new AnnIndexStore(spark, tmpDir("ivfpq-store"))
+    store.init(idx)
+    store.remove(moved.select(col("vec_id")), "vec_id")
+    store.extend(moved, "vec_id", "embedding")
+    val mem = Similarity.extendIvfPqIndex(
+      Similarity.removeFromIvfPqIndex(idx, moved.select(col("vec_id")),
+        "vec_id"),
+      moved, "vec_id", "embedding")
+    def codes(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("nid"), col("cell").cast("int"), col("sub"), col("code"))
+        .collect().map(_.toString).sorted
+    val expect = codes(mem.codes)
+    assert(expect.nonEmpty && codes(store.load().codes).sameElements(expect),
+      "a re-extended id must be visible after the extend")
+    store.compact()
+    assert(codes(store.load().codes).sameElements(expect),
+      "compaction must keep a re-extended id")
+  }
+
   // ---- stored MinHash index (the dedup member of the trio) ----
 
   private def plantedBatch =
@@ -346,8 +371,8 @@ class IndexStorageSpec extends SparkSpec {
     }
   }
 
-  // ---- round-14: snapshot isolation + order-aware tombstones + legacy
-  //      migration on the versioned layouts ----
+  // ---- round-14: snapshot isolation, order-aware tombstones and time
+  //      travel on the versioned layouts ----
 
   test("bm25 + minhash: a LOADED index is an immutable snapshot — " +
       "maintenance publishing new versions never changes what it " +
@@ -456,51 +481,6 @@ class IndexStorageSpec extends SparkSpec {
       "re-ingested ids must match exactly as a fresh full index")
   }
 
-  test("bm25: a LEGACY layout (round-13 manifest.json, no doclens, no " +
-      "pointer) loads as-is and its first maintenance write migrates it " +
-      "— doclens backfilled so deletes of ORIGINAL docs decrement " +
-      "exactly (the round-13 review finding)") {
-    import org.apache.spark.sql.functions.{pmod, xxhash64}
-    val base = docs.filter(col("doc_id") % 10 =!= 0)
-    val idx = TextSearch.buildBm25Index(base, "doc_id", "text")
-    val path = tmpDir("bm25-legacy")
-    // hand-write the legacy layout: flat postings/ (tok_bucket-
-    // partitioned), manifest.json, NO doclens, NO LATEST
-    idx.postings
-      .withColumn("tok_bucket",
-        pmod(xxhash64(col("tok")), lit(16L)).cast("int"))
-      .write.mode("overwrite").partitionBy("tok_bucket")
-      .parquet(s"$path/postings")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/manifest.json"),
-      s"""{"nDocs": ${idx.nDocs}, "totalTokens": ${idx.totalTokens}, """ +
-        s""""tokBuckets": 16}""")
-    // loads and probes without any write
-    val legacy = TextSearch.loadBm25Index(spark, path)
-    assert(legacy.nDocs === idx.nDocs)
-    val memProbe = TextSearch.bm25TopKOnIndex(idx, qs, k = 10)
-      .collect().map(_.toString).sorted
-    assert(TextSearch.bm25TopKOnStoredIndex(legacy, qs, k = 10)
-      .collect().map(_.toString).sorted.sameElements(memProbe))
-    // first maintenance write migrates (extend), then a delete of an
-    // ORIGINAL-corpus doc must decrement — the pre-migration bug was a
-    // doclens holding only the extension batch
-    var stored = TextSearch.extendStoredBm25Index(legacy,
-      docs.filter(col("doc_id") % 10 === 0), "doc_id", "text")
-    stored = TextSearch.removeFromStoredBm25Index(stored,
-      docs.filter(col("doc_id") % 20 === 5).select(col("doc_id").as("nid")),
-      "nid")
-    val fresh = TextSearch.buildBm25Index(
-      docs.filter(col("doc_id") % 20 =!= 5), "doc_id", "text")
-    assert(stored.nDocs === fresh.nDocs,
-      "delete of an original doc must decrement nDocs (doclens backfill)")
-    assert(stored.totalTokens === fresh.totalTokens)
-    val expect = TextSearch.bm25TopKOnIndex(fresh, qs, k = 10)
-      .collect().map(_.toString).sorted
-    assert(TextSearch.bm25TopKOnStoredIndex(stored, qs, k = 10)
-      .collect().map(_.toString).sorted.sameElements(expect))
-  }
-
   test("bm25 + minhash: TIME-TRAVEL loads — a version-pinned load " +
       "reproduces that version's exact answers after later maintenance") {
     // BM25: v0 = base corpus; v1 = extend; v2 = delete
@@ -571,38 +551,5 @@ class IndexStorageSpec extends SparkSpec {
       .collect().map(_.toString).sorted
     assert(TextSearch.bm25TopKOnStoredIndex(stored, qs, k = 10)
       .collect().map(_.toString).sorted.sameElements(expect))
-  }
-
-  test("minhash: a LEGACY layout (flat bands/docs/manifest.json) loads " +
-      "as-is and migrates on its first maintenance write") {
-    import org.apache.spark.sql.functions.{pmod, xxhash64}
-    val base = docs.filter(col("doc_id") % 100 =!= 0)
-    val index = TextDedup.minhashIndex(base, "doc_id", "text")
-      .localCheckpoint(true)
-    val path = tmpDir("minhash-legacy")
-    // legacy layout: bands/ + docs/ (db-bucketed) + manifest.json
-    TextDedup.explodedBands(index, 16, 8, 16)
-      .write.mode("overwrite").partitionBy("bb").parquet(s"$path/bands")
-    index.select(col("id"), col("sz"), col("toks"), col("sig"))
-      .withColumn("db", pmod(xxhash64(col("id")), lit(16L)).cast("int"))
-      .write.mode("overwrite").partitionBy("db").parquet(s"$path/docs")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/manifest.json"),
-      """{"k": 16, "bands": 8, "shingleN": 2, "bandBuckets": 16, """ +
-        """"docBuckets": 16}""")
-    val legacy = TextDedup.loadMinhashIndex(spark, path)
-    val memRows = TextDedup.nearDupAgainstIndex(plantedBatch, "doc_id",
-      "text", index).collect().map(_.toString).sorted
-    assert(memRows.nonEmpty && probeRows(legacy).sameElements(memRows))
-    // maintenance write migrates; lifecycle equals a fresh build
-    var stored = TextDedup.extendStoredMinhashIndex(legacy,
-      docs.filter(col("doc_id") % 100 === 0), "doc_id", "text")
-    stored = TextDedup.removeFromStoredMinhashIndex(stored,
-      docs.filter(col("doc_id") % 100 === 50).select(col("doc_id").as("id")))
-    val expect = TextDedup.nearDupAgainstIndex(plantedBatch, "doc_id",
-        "text", TextDedup.minhashIndex(
-          docs.filter(col("doc_id") % 100 =!= 50), "doc_id", "text"))
-      .collect().map(_.toString).sorted
-    assert(expect.nonEmpty && probeRows(stored).sameElements(expect))
   }
 }
