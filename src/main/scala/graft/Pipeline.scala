@@ -14,9 +14,9 @@ import graft.producer.EventClassifier
   *   ──C7/C8/C9 LWW merge──► replica state
   *
   * The same operator chain runs under Structured Streaming in
-  * [[graft.streaming.StreamingPipeline]]; this batch form exists so the
-  * whole wire contract (including the JSON envelope round trip) is
-  * exercised in one plan the driver can smoke-check.
+  * [[graft.Engine]]; this batch form exists so the whole wire contract
+  * (including the JSON envelope round trip) is exercised in one plan the
+  * driver can smoke-check.
   */
 object Pipeline {
 

@@ -38,14 +38,7 @@ object CapacityMain {
       // in PERF.md round 11)
       try { StreamBench.run(spark, batches = 30, warmupBatches = 15); () }
       catch { case _: Throwable => () }
-      // env knobs exist for harness smoke tests only; the driver runs
-      // argless Bench → fork → these defaults = the full sweep
-      def envInt(k: String, d: Int) = sys.env.get(k).map(_.toInt).getOrElse(d)
-      println("CAPACITY_JSON " + StreamBench.capacityJson(spark, "fresh-jvm",
-        batches = envInt("SPARK_GRAFT_CAP_BATCHES", 15),
-        warmupBatches = envInt("SPARK_GRAFT_CAP_WARMUP", 5),
-        startRowsPerBatch = envInt("SPARK_GRAFT_CAP_STARTRPB", 250),
-        maxRowsPerBatch = envInt("SPARK_GRAFT_CAP_MAXRPB", 32000)))
+      println("CAPACITY_JSON " + StreamBench.capacityJson(spark, "fresh-jvm"))
     } finally spark.stop()
   }
 }

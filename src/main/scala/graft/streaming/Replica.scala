@@ -1,135 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.codec.EnvelopeCodec
-import graft.consumer.{ConsumerOps, Persistor}
-import graft.producer.EventClassifier
-
-/** Structured Streaming form of the replication pipeline (P1/P11 producer
-  * half, C1/C2/C7-C9 consumer half).
-  *
-  * The topic is a directory of JSON-envelope parquet files — the same
-  * `TopicSink`/`TopicSource` shape a Kafka deployment uses
-  * (`format("kafka")` + `subscribe`), swapped for the file source here
-  * because no Kafka broker/connector exists in this container. Semantics
-  * preserved from the reference:
-  *
-  *  - at-least-once producer + idempotent consumer (checkpointing + the
-  *    C7 staleness guard inside the merge), never transactional Kafka
-  *    (SURVEY §7.4.7);
-  *  - per-key correctness never depends on arrival order — replays and
-  *    reorderings are absorbed by LWW (SURVEY §7.4.1);
-  *  - exact resends are dropped with watermark-bounded state
-  *    (`dropDuplicatesWithinWatermark`), the streaming analogue of the C2
-  *    in-batch dedup, so state size is bounded at 100 TB (SURVEY §7.4.8).
-  */
-object StreamingPipeline {
-
-  /** Producer-half streaming PLAN: change-stream parquet dir → classified
-    * envelope wire rows (kafka_key, value, ts). Shared by the
-    * backlog-draining [[produce]] and the continuous-trigger
-    * [[StreamBench]] latency harness. */
-  def producePlan(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    // file-source contract: sourceDir is a DIRECTORY of change files
-    val events = graft.queries.Q.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(sourceDir))
-
-    // P2 classification needs the previous image; in true CDC the source
-    // carries old/new images (Delta CDF / Debezium). The synthetic events
-    // table has no images, so treat every event as an upsert of the user
-    // aggregate ('error' = cancel), which is the P16 Genesis shape.
-    val classified = events.select(
-      when(col("event_type") === "error", lit("event_destroyed"))
-        .otherwise(lit("event_updated")).as("event"),
-      lit("Event").as("model_name"),
-      array(to_json(struct(
-        col("user_id").as("id"),
-        col("event_type"), col("value"),
-        unix_micros(col("ts")).as("updated_us")))).as("data"),
-      col("ts"))
-
-    EnvelopeCodec.encode(classified)
-      .withColumn("kafka_key", concat(lit("Event:"), get_json_object(element_at(col("data"), 1), "$.id")))
-      .select("kafka_key", "value", "ts")
-  }
-
-  /** Producer half: change-stream parquet dir → classified envelope rows →
-    * file topic. `Trigger.AvailableNow` drains the backlog with bounded
-    * batches (the rate-limited Genesis/backfill pacing knob is
-    * `maxFilesPerTrigger`). */
-  def produce(spark: SparkSession, sourceDir: String, topicDir: String,
-      checkpointDir: String): Unit = {
-    // events.ts physical type varies by testdata generation (ns-int64 vs
-    // native µs timestamp) — normalize by actual schema, not assumption
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(sourceDir).schema
-    val q = producePlan(spark, sourceDir, schema)
-      .writeStream
-      .format("parquet")
-      .option("path", topicDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Consumer-half streaming PLAN: file topic → decode → watermarked
-    * exact-resend dedup → replica-shaped rows, ready for a per-batch
-    * keep-latest + merge sink. Shared by [[consume]] and
-    * [[StreamBench]]. */
-  def consumePlan(spark: SparkSession, topicDir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val wire = spark.readStream.schema(schema).parquet(topicDir)
-    decodedWire(wire)
-  }
-
-  /** Consumer half: file topic → decode → watermarked exact-resend dedup →
-    * per-batch keep-latest → idempotent merge into the replica store. */
-  def consume(spark: SparkSession, topicDir: String, replica: Replica,
-      checkpointDir: String): Unit = {
-    val schema = spark.read.parquet(topicDir).schema
-    val decoded = consumePlan(spark, topicDir, schema)
-    val q = decoded.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val deduped = ConsumerOps.keepLatest(batch,
-          keyCols = Seq("synced_id"), orderCol = "synced_updated_at")
-        replica.merge(deduped)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  private def decodedWire(wire: DataFrame): DataFrame = {
-    ConsumerOps.decodeRecords(
-        wire.withWatermark("ts", "1 hour")
-          // fixed-width dedup state: key on a 64-bit payload hash, not the
-          // raw envelope — megabyte-class payloads must never sit in the
-          // state store for the whole watermark (same exact-resend
-          // semantics; 64-bit collision odds are negligible for dedup)
-          .withColumn("__vh", xxhash64(col("kafka_key"), col("value")))
-          .dropDuplicatesWithinWatermark("kafka_key", "__vh")
-          .drop("__vh"),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "id LONG, event_type STRING, value DOUBLE, updated_us LONG"))
-      .select(
-        regexp_extract(col("event"), "event_(.*)", 1).as("event_type"),
-        col("rec.id").as("synced_id"),
-        col("rec.value").as("value"),
-        timestamp_micros(col("rec.updated_us")).as("synced_updated_at"),
-        // the full raw payload always rides along (README.md:932-937)
-        col("synced_data"))
-      .withColumn("synced_created_at", col("synced_updated_at"))
-      .withColumn("canceled_at",
-        when(col("event_type") === "destroyed", col("synced_updated_at")))
-  }
-}
+import graft.consumer.Persistor
 
 /** The consumer's storage surface — what `Persistor` needs from a replica
   * table. [[ParquetReplica]] implements it (the specs also run a thin
@@ -588,68 +461,34 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * current attributes). */
   def merge(updates: DataFrame,
       prepare: (DataFrame, DataFrame) => DataFrame = Replica.identityPrepare): Unit =
-    mergeTouched(updates, None, prepare)
-
-  /** The bucket count the CURRENT version's layout was written with —
-    * callers computing their own touched-bucket sets (see
-    * [[mergeTouched]]) must hash with this, never a remembered
-    * constructor argument ([[compact]] changes it online). */
-  def currentBucketCount: Int = bucketCount(currentVersion)
-
-  /** [[merge]] with a caller-supplied touched-bucket set. A caller that
-    * already materialized the update keys driver-side (a bounded
-    * micro-batch it collected for its own bookkeeping — e.g.
-    * [[StreamBench]]'s per-row lag stamps, or an import manifest) can
-    * compute `pmod(hash(synced_id), currentBucketCount)` in that same
-    * pass and skip this method's distinct+collect job — one fewer
-    * Spark action per merge, which is real latency on a sub-second
-    * micro-batch path (in MoR mode the set isn't used for pruning but
-    * still answers the empty-batch check without an action). The set
-    * must cover every key in `updates` (hashed with
-    * [[currentBucketCount]]); a MISSING bucket would leave its current
-    * rows out of the rewrite, silently dropping the unmerged rows of
-    * that bucket, so over-approximation is safe, under-approximation
-    * never is — and because the caller hashes OUTSIDE this method's
-    * lock, a concurrent [[compact]] to a different bucket count makes
-    * any precomputed set stale: only pass one when nothing re-buckets
-    * this replica concurrently (StreamBench owns its replica; an
-    * import manifest runs in a maintenance window). */
-  def mergeTouched(updates: DataFrame, precomputedTouched: Option[Set[Int]],
-      prepare: (DataFrame, DataFrame) => DataFrame = Replica.identityPrepare): Unit =
     withLock {
-      if (mergeOnRead) {
-        // MoR doesn't prune by bucket, but a caller-provided key set
-        // still answers the empty-batch question for free. WITHOUT one,
-        // the emptiness check is deferred to AFTER the write: deltaMerge
-        // reads the written files' parquet footers (driver-local
-        // metadata, no Spark job) and publishes nothing for an empty
-        // epoch — so the sub-second latency path pays exactly ONE Spark
-        // job per micro-batch (the delta write), with no isEmpty/take(1)
-        // probe job in front of it, while an idle stream's
-        // watermark-advancing empty batches still never append epochs,
-        // bump versions, or trigger pointless compactions
-        if (!precomputedTouched.exists(_.isEmpty))
-          deltaMerge(updates, precomputedTouched, prepare)
-      } else cowMerge(updates, precomputedTouched, prepare)
+      // MoR defers the emptiness check to AFTER the write: deltaMerge
+      // reads the written files' parquet footers (driver-local metadata,
+      // no Spark job) and publishes nothing for an empty epoch — so the
+      // sub-second latency path pays exactly ONE Spark job per
+      // micro-batch (the delta write), with no isEmpty/take(1) probe job
+      // in front of it, while an idle stream's watermark-advancing empty
+      // batches still never append epochs, bump versions, or trigger
+      // pointless compactions
+      if (mergeOnRead) deltaMerge(updates, prepare)
+      else cowMerge(updates, prepare)
     }
 
   /** CoW-mode merge: rewrite the touched buckets, carry the rest. */
   private def cowMerge(updates: DataFrame,
-      precomputedTouched: Option[Set[Int]],
       prepare: (DataFrame, DataFrame) => DataFrame): Unit = {
     val (v, m) = current()
     val next = v + 1
-    // Pin `updates` when WE derive the touched set from it: the
-    // collect and the rewrite below must see the SAME rows — a
-    // nondeterministic updates plan re-evaluated at write time could
-    // land rows in buckets the collect never saw, and the manifest
-    // swap `(dirs -- touched) ++ written` would then REPLACE such a
-    // bucket with only the new rows (silent loss of its current
-    // rows). localCheckpoint (lazy) materializes on the collect and
-    // the write reuses the blocks — evaluated once, or fail loudly.
-    val ups = if (precomputedTouched.isEmpty)
-      updates.localCheckpoint(eager = false) else updates
-    val touched = precomputedTouched.getOrElse(touchedBuckets(ups, m.nb))
+    // Pin `updates`: the touched-bucket collect and the rewrite below
+    // must see the SAME rows — a nondeterministic updates plan
+    // re-evaluated at write time could land rows in buckets the collect
+    // never saw, and the manifest swap `(dirs -- touched) ++ written`
+    // would then REPLACE such a bucket with only the new rows (silent
+    // loss of its current rows). localCheckpoint (lazy) materializes on
+    // the collect and the write reuses the blocks — evaluated once, or
+    // fail loudly.
+    val ups = updates.localCheckpoint(eager = false)
+    val touched = touchedBuckets(ups, m.nb)
     // empty micro-batch slice: nothing to merge, keep the version stable
     if (touched.isEmpty) return
     val target = readDirs(m.dirs.filter(t => touched(t._1)).values.toSeq)
@@ -677,32 +516,28 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * The delta log itself is unbucketed and folds in full, but its size
     * is bounded by `compactEvery`. */
   private def deltaMerge(updates: DataFrame,
-      precomputedTouched: Option[Set[Int]],
       prepare: (DataFrame, DataFrame) => DataFrame): Unit = {
     val (v, m) = current()
     val next = v + 1
     val seq = m.deltas.lastOption.map(_._1).getOrElse(-1L) + 1L
     val dir = s"v$next/delta-$seq"
-    // Pin `updates` on the real-prepare path when WE derive the touched
-    // set: the collect and the write must see the SAME rows, or a
-    // nondeterministic updates plan could hash re-evaluated rows into
-    // buckets the collect missed — prepare would then find no current
-    // row for those keys and silently fall back to update values. The
-    // identity-prepare latency path is untouched (updates evaluated
-    // exactly once there, no pin needed).
-    val needsTouched = !(prepare eq Replica.identityPrepare) &&
-      precomputedTouched.isEmpty
-    val ups = if (needsTouched) updates.localCheckpoint(eager = false)
-      else updates
+    // Pin `updates` on the real-prepare path: the touched-bucket collect
+    // and the write must see the SAME rows, or a nondeterministic updates
+    // plan could hash re-evaluated rows into buckets the collect missed —
+    // prepare would then find no current row for those keys and silently
+    // fall back to update values. The identity-prepare latency path is
+    // untouched (updates evaluated exactly once there, no pin needed).
+    val identity = prepare eq Replica.identityPrepare
+    val ups = if (identity) updates else updates.localCheckpoint(eager = false)
     val target =
-      if (prepare eq Replica.identityPrepare)
+      if (identity)
         // never evaluated — placeholder so the signature stays uniform
         empty
       else {
         // one bounded collect (≤ buckets values), the same cost the CoW
         // path pays; prepare joins on synced_id, so all rows for the
         // update keys live in these buckets
-        val touched = precomputedTouched.getOrElse(touchedBuckets(ups, m.nb))
+        val touched = touchedBuckets(ups, m.nb)
         reconcile(readDirs(m.dirs.filter(t => touched(t._1)).values.toSeq),
           m.deltas)
       }

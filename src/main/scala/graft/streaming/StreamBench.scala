@@ -1,9 +1,13 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.consumer.ConsumerOps
+import org.apache.spark.sql.types.{DoubleType, StructType}
+import org.apache.spark.util.AccumulatorV2
+import graft.Engine
+import graft.registry.{Attribute, ModelDef, Registry, TopicDef}
 
 /** End-to-end streaming latency harness: measures the change→replica SLO
   * the reference's worker loop implies (runner.rb:15-35 polls every 0.2 s,
@@ -11,14 +15,18 @@ import graft.consumer.ConsumerOps
   *
   * Shape: a driver-side feeder stamps each change row's event time with
   * the wall clock at write and appends it as a parquet file to the change
-  * directory; the CONTINUOUS producer query (ProcessingTime trigger ↔ the
-  * 0.2 s poll) classifies + envelope-encodes it onto the file topic; the
-  * continuous consumer query decodes, exact-resend-dedups, keep-latest
-  * reduces and LWW-merges it into a [[ParquetReplica]]. At the end of
-  * each consumer micro-batch's merge the harness records, per row,
-  * `now − stamp` — the full file-commit→discover→encode→topic→discover→
+  * directory; [[graft.Engine.start]] runs the product pipeline over it —
+  * the producer query (ProcessingTime trigger ↔ the 0.2 s poll)
+  * classifies, serializes and envelope-encodes it onto the file topic,
+  * and the consumer query decodes, exact-resend-dedups, keep-latest
+  * reduces and LWW-merges it into the model's replica. The replica is
+  * wrapped (`EngineOptions.replicaFactory`) to record, per merge, the
+  * newest stamp among its rows and the wall clock when it returned; a fed
+  * file's lag is that clock minus its stamp for the first merge that
+  * reached it — the full file-commit→discover→encode→topic→discover→
   * decode→merge path, i.e. what a monitoring page would call replication
-  * lag.
+  * lag. The harness sets no session conf: it measures what a user of
+  * `Engine.start` gets.
   *
   * The first `warmupBatches` feeder files are excluded from the reported
   * percentiles: their latencies pay one-time JIT + codegen + state-store
@@ -31,200 +39,129 @@ object StreamBench {
   final case class Result(p50Ms: Double, p95Ms: Double, maxMs: Double,
       rowsPerSec: Double, nRows: Long, nBatchesFed: Int, warmupRowsDropped: Int)
 
-  /** Per-task sequential row index for the stamp accumulator. Rows of a
-    * task are evaluated on one thread in order, so a ThreadLocal counter
-    * reset per `taskAttemptId` gives every row a stable
-    * (partitionId, idx) identity — a re-run attempt of the same
-    * partition regenerates the SAME keys, letting the driver dedup the
-    * double-add (accumulators are at-least-once under stage retry /
-    * cache-evicted recompute, which would otherwise inflate both the
-    * latency percentiles and awaitMerged's row count). */
-  private val rowIdxLocal = new ThreadLocal[Array[Long]]()
-  private def nextRowIdx(tc: org.apache.spark.TaskContext): Long = {
-    val att = tc.taskAttemptId()
-    var cur = rowIdxLocal.get()
-    if (cur == null || cur(0) != att) {
-      cur = Array(att, 0L); rowIdxLocal.set(cur)
-    }
-    val idx = cur(1); cur(1) = idx + 1; idx
+  /** The harness's one model: a user aggregate keyed by the feeder's
+    * `user_id`, carrying its latest `value`. */
+  def registry(buckets: Int): Registry =
+    Registry("streambench", Seq(TopicDef("events", models = Seq(
+      ModelDef("event", primaryKey = "user_id",
+        attributes = Seq(Attribute("value", DoubleType)), buckets = buckets)))))
+
+  /** Binds [[registry]]'s model to a directory of event files (`user_id`,
+    * `event_type`, `value`, `ts`). Event files carry no row images, so
+    * every event upserts its user and an `error` event cancels it (a soft
+    * delete, published as `event_destroyed`). */
+  final class EventBindings(dir: String, schema: StructType)
+      extends Engine.ModelBindings {
+    def changes(s: SparkSession, m: ModelDef): DataFrame =
+      graft.queries.Q.normalizeEventTs(s.readStream.schema(schema).parquet(dir))
+        .select(col("user_id"), col("value"), lit("update").as("__op"),
+          lit(null).cast("timestamp").as("__old_canceled"),
+          when(col("event_type") === "error", col("ts")).as("__new_canceled"),
+          col("ts").as("__ts"))
+    def snapshot(s: SparkSession, m: ModelDef): DataFrame =
+      throw new UnsupportedOperationException(s"${m.name} sideloads nothing")
   }
 
-  /** Defaults feed ~2.5k rows/s — comfortably BELOW the measured
-    * ~10k rows/s saturated pipeline throughput on local[32], because a
-    * latency SLO is a below-saturation number: feeding past capacity
-    * just measures queue depth (the first harness cut fed 20k rows/s
-    * and read p50 ≈ 4 s of pure backlog). `rowsPerSec` in the result is
-    * per-merge-window throughput, not the saturation ceiling.
+  /** Largest value added. A max is idempotent, so the at-least-once adds
+    * of a retried or recomputed task leave it unchanged. */
+  private final class MaxAccumulator extends AccumulatorV2[Long, Long] {
+    private var m = Long.MinValue
+    def isZero: Boolean = m == Long.MinValue
+    def copy(): MaxAccumulator = { val c = new MaxAccumulator; c.m = m; c }
+    def reset(): Unit = m = Long.MinValue
+    def add(v: Long): Unit = m = math.max(m, v)
+    def merge(o: AccumulatorV2[Long, Long]): Unit = add(o.value)
+    def value: Long = m
+  }
+
+  /** Passes every call through to `inner`; `merge` also runs each row's
+    * `synced_updated_at` (the feeder's stamp) through an accumulator and
+    * records (wall ms when the merge returned, largest stamp µs). The
+    * stamps ride the merge's own jobs, and `prepare` passes through
+    * untouched, so a merge-on-read replica keeps its map-only append. */
+  private final class StampingReplica(inner: Replica,
+      merges: ConcurrentLinkedQueue[(Long, Long)]) extends Replica {
+    def read(): DataFrame = inner.read()
+    override def readBuckets(keys: DataFrame): DataFrame = inner.readBuckets(keys)
+    override def neverCommitted: Boolean = inner.neverCommitted
+    def merge(updates: DataFrame,
+        prepare: (DataFrame, DataFrame) => DataFrame): Unit = {
+      val acc = new MaxAccumulator
+      updates.sparkSession.sparkContext.register(acc, "lag-stamps")
+      val stamp = udf { (us: java.lang.Long) =>
+        if (us != null) acc.add(us.longValue); us
+      }.asNondeterministic() // pin one evaluation per row
+      inner.merge(updates.withColumn("synced_updated_at",
+        timestamp_micros(stamp(unix_micros(col("synced_updated_at"))))), prepare)
+      // stamp AFTER the merge commits — lag includes apply, not just arrival
+      if (!acc.isZero) merges.add((System.currentTimeMillis(), acc.value))
+    }
+    def destroy(ids: DataFrame, idCol: String): Unit = inner.destroy(ids, idCol)
+    def transform(f: DataFrame => DataFrame): Unit = inner.transform(f)
+    def vacuum(retainVersions: Int): Unit = inner.vacuum(retainVersions)
+    def withLock[A](f: => A): A = inner.withLock(f)
+  }
+
+  /** Defaults feed ~1.25k rows/s, below saturation, because a latency SLO
+    * is a below-saturation number: feeding past capacity just measures
+    * queue depth (the first harness cut fed 20k rows/s and read p50 ≈ 4 s
+    * of pure backlog). `rowsPerSec` in the result is per-merge-window
+    * throughput, not the saturation ceiling ([[capacity]] measures that).
     *
-    * Cadence defaults (round-11 A/B, all measured at the same feed):
-    * trigger 25 ms — the reference polls every 200 ms, but each of the
-    * two hops (producer, consumer) adds on average half a trigger
-    * interval of pure discovery WAIT to every row's lag, so a
-    * latency-oriented deployment polls as fast as the source listing
-    * allows (100→25 ms took p50 from 1,077 to 808 ms); 1 state/shuffle
-    * partition — a 500-row micro-batch pays per-partition state-store
-    * open/commit, and 4→2 cut ~100 ms (round 11), 2→1 another ~100 ms
-    * (round 15, four interleaved fresh-JVM readings, SP=1 better in
-    * all four at comparable anchors). Sized to steady-state volume,
-    * same knob as above, opposite direction of the batch default —
-    * a real deployment raises it with feed volume. */
+    * trigger 25 ms (round-11 A/B at the same feed): the reference polls
+    * every 200 ms, but each of the two hops (producer, consumer) adds on
+    * average half a trigger interval of pure discovery WAIT to every
+    * row's lag, so a latency-oriented deployment polls as fast as the
+    * source listing allows. */
   def run(spark: SparkSession,
-      // feedInterval 400 ms ≈ 1.25k rows/s: the SAME effective rate as
-      // before the driver-local feeder (the old Spark-job feeder added
-      // ~100-200 ms of its own cost to every 300 ms sleep; the fast
-      // feeder must pad the sleep instead, or the rate silently rises
-      // toward saturation and the SLO reads queue depth again)
+      // feedInterval 400 ms ≈ 1.25k rows/s: the driver-local feeder costs
+      // ~5 ms a file, so the sleep sets the rate
       batches: Int = 44, rowsPerBatch: Int = 500,
       triggerMs: Int = 25, feedIntervalMs: Int = 400,
-      // warmup 10→24 files fed at a DENSER cadence (150 ms): the fresh-
-      // vs-deep-warm gap (967 vs 808 ms p50, round 11) is residual JIT
-      // in the per-micro-batch planner/codegen path, and JIT warmth
-      // scales with CYCLES executed, not rows or wall time — 24 files
-      // at 150 ms buys 2.4× the warmup iterations in the same ~4 s of
-      // wall clock, and warmup rows drain fully before the measured
-      // phase so the feed-rate spec of the SLO phase is untouched
-      // (measured phase stays 20 batches at 400 ms = ~1.25k rows/s)
+      // warmup files fed at a DENSER cadence (150 ms): residual JIT in the
+      // per-micro-batch planner/codegen path scales with CYCLES executed,
+      // not rows or wall time, and warmup rows drain fully before the
+      // measured phase, so its feed rate is untouched
       warmupBatches: Int = 24, warmupFeedIntervalMs: Int = 150,
       keySpace: Int = 10000, replicaBuckets: Int = 4,
-      statePartitions: Int = 1, mergeOnRead: Boolean = true,
-      timeoutMs: Long = 180000L, verbose: Boolean = false): Result = {
+      mergeOnRead: Boolean = true, timeoutMs: Long = 180000L): Result = {
     require(batches > warmupBatches,
       "need post-warmup batches to report percentiles")
-    // a dedicated session sized for MICRO-batches: 32 shuffle/state
-    // partitions would pay 32 state-store open/commit cycles per
-    // 500-row trigger — pure fixed cost at this batch size. (On a real
-    // cluster you size state partitions to steady-state volume, not to
-    // the batch-analytics default; same knob, same reasoning.)
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // AQE re-plans and re-materializes every shuffle stage as its own
-    // job — the right trade at sf0.1 batch scans, pure fixed cost on a
-    // 500-row micro-batch (measured ~2x on the per-batch merge)
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    import session.implicits._
     // Harness root prefers tmpfs (/dev/shm) over java.io.tmpdir: the
     // SLO measures ENGINE latency (discovery + encode + decode + merge),
     // and a local ext4's write-back contention is representative of
     // neither production sink (Kafka + a distributed store) — measured
     // round 14: at equally degraded window anchors (~250 ms), the
-    // disk-rooted harness read p50 7.9 s where tmpfs read 1.4-3.0 s,
-    // i.e. local-disk write-back dominated the degraded readings and
-    // the measurement basis, not the pipeline. Override with
-    // SPARK_GRAFT_STREAM_TMP; BENCH artifacts from round 14 on use the
-    // tmpfs basis (PERF.md documents the basis change for cross-round
-    // knee comparisons).
+    // disk-rooted harness read p50 7.9 s where tmpfs read 1.4-3.0 s.
+    // Override with SPARK_GRAFT_STREAM_TMP (PERF.md documents the basis).
     val tmpRoot = sys.env.get("SPARK_GRAFT_STREAM_TMP")
       .orElse(Some("/dev/shm").filter(d => new java.io.File(d).canWrite))
       .getOrElse(System.getProperty("java.io.tmpdir"))
     val tmp = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(tmpRoot), "graft-streambench").toString
     val src = s"$tmp/src"
-    val topic = s"$tmp/topic"
     new java.io.File(src).mkdirs()
-    new java.io.File(topic).mkdirs()
-    // merge-on-read: the latency path appends O(batch) delta epochs and
-    // compacts every `compactEvery` merges — the percentiles therefore
-    // INCLUDE periodic compaction stalls, the honest steady-state shape
-    val replica = new ParquetReplica(session, s"$tmp/replica",
-      "synced_id LONG, synced_updated_at TIMESTAMP, synced_created_at TIMESTAMP, " +
-        "synced_canceled_at TIMESTAMP, value DOUBLE, synced_data STRING",
-      buckets = replicaBuckets, mergeOnRead = mergeOnRead, compactEvery = 10)
-
-    val srcSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    val srcSchema = StructType.fromDDL(
       "user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")
-    val wireSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "kafka_key STRING, value STRING, ts TIMESTAMP")
 
-    if (verbose) session.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val p = e.progress
-          if (p.numInputRows > 0) System.err.println(
-            s"[qp] ${p.sink.description.take(30)} batch=${p.batchId} " +
-              s"rows=${p.numInputRows} total=${p.durationMs.get("triggerExecution")}ms " +
-              s"addBatch=${p.durationMs.get("addBatch")}ms " +
-              s"getBatch=${p.durationMs.get("getBatch")}ms " +
-              s"latestOffset=${p.durationMs.get("latestOffset")}ms " +
-              s"commit=${p.durationMs.get("commitOffsets")}ms")
-        }
-      })
-
-    // per-row replication lag (ms), in arrival order; merges as
-    // (wall-ms at merge end, rows in batch). Appended from the
-    // micro-batch thread, read from this one → concurrent queues.
-    val latencies = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val merges = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-
-    // NOT in distinct scheduler pools: an interleaved A/B (round 12, 32
-    // slots) read per-query FAIR pools ~600 ms WORSE on p50 than the
-    // shared default pool, with job p50 191 vs 135 ms — on a box with
-    // more slots than concurrent tasks, pool bookkeeping buys nothing
-    // and the extra scheduling layer costs real latency.
-    val producer = StreamingPipeline.producePlan(session, src, srcSchema)
-      .writeStream
-      .format("parquet")
-      .option("path", topic)
-      .option("checkpointLocation", s"$tmp/cp1")
-      .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds"))
-      .start()
-    val consumer = StreamingPipeline.consumePlan(session, topic, wireSchema)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/cp2")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val t0 = System.currentTimeMillis()
-        // ONE Spark job per micro-batch (was two: a stamp/bucket collect,
-        // then the delta write). The lag stamps ride the WRITE job as a
-        // side-effect accumulator on a pass-through column — the batch
-        // is materialized exactly once — and the MoR merge needs no
-        // up-front bucket set or emptiness probe anymore (deltaMerge
-        // checks the written parquet footers driver-side). Accumulators
-        // are at-least-once under stage retry / recompute, so each
-        // stamp carries a (partitionId, row-idx) identity and the
-        // driver dedups on it — a re-run partition regenerates the
-        // same keys and collapses to one stamp per row.
-        val acc = session.sparkContext
-          .collectionAccumulator[(Int, Long, Long)](s"lag-stamps-$bid")
-        val stampU = udf { (us: java.lang.Long) =>
-          val tc = org.apache.spark.TaskContext.get()
-          acc.add((tc.partitionId(), nextRowIdx(tc), us.longValue())); us
-        }.asNondeterministic() // pin one evaluation per row
-        val stamped = batch.withColumn("synced_updated_at",
-          timestamp_micros(stampU(unix_micros(col("synced_updated_at")))))
-        // no in-batch keepLatest here: the MoR reconcile resolves
-        // multiple rows of a key WITHIN an epoch by the same C7 rule
-        // (sort + fold), so the per-batch window shuffle is redundant
-        // work on the latency path — the delta write stays map-only.
-        // CoW mode runs TWO actions per merge (bucket probe + rewrite);
-        // persist so the batch materializes once, or the capacity
-        // sweep's MoR-vs-CoW comparison is biased by pure harness
-        // re-computation (the stamps are event-time data, so WHEN the
-        // stamp UDF fires — cache fill vs write — changes nothing)
-        val toMerge = if (mergeOnRead) stamped else stamped.persist()
-        try replica.merge(toMerge)
-        finally if (!mergeOnRead) { toMerge.unpersist(); () }
-        // stamp AFTER the merge commits — lag includes apply, not
-        // just arrival. The accumulator is bounded by the feeder total.
-        val now = System.currentTimeMillis()
-        import scala.jdk.CollectionConverters._
-        val seen = new java.util.LinkedHashMap[(Int, Long), Long]()
-        acc.value.asScala.foreach { case (pid, idx, us) =>
-          seen.putIfAbsent((pid, idx), us); ()
-        }
-        val stamps = seen.values.asScala.toSeq
-        stamps.foreach(us => latencies.add(now - us / 1000L))
-        if (stamps.nonEmpty) merges.add((now, stamps.size.toLong))
-        if (verbose) System.err.println(
-          s"[streambench] batch=$bid rows=${stamps.size} " +
-            s"cycle=${now - t0}ms")
-        ()
-      }
-      .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds"))
-      .start()
+    // (wall ms at merge end, largest stamp µs merged), in apply order;
+    // appended from the micro-batch thread, read from this one
+    val merges = new ConcurrentLinkedQueue[(Long, Long)]()
+    // merge-on-read: the latency path appends O(batch) delta epochs and
+    // compacts every `replicaCompactEvery` merges — the percentiles
+    // therefore INCLUDE periodic compaction stalls, the honest
+    // steady-state shape
+    val opts = Engine.EngineOptions(mergeOnRead = mergeOnRead,
+      replicaCompactEvery = 10)
+    val options = opts.copy(replicaFactory = Some((s, m, root) =>
+      new StampingReplica(new ParquetReplica(s, root, m.replicaSchema.toDDL,
+        buckets = m.buckets, mergeOnRead = opts.mergeOnRead,
+        compactEvery = opts.replicaCompactEvery), merges)))
+    val (queries, _) = Engine.start(spark, registry(replicaBuckets),
+      new EventBindings(src, srcSchema), s"$tmp/work", options = options,
+      trigger = Trigger.ProcessingTime(s"$triggerMs milliseconds"))
     // ---- feeder: one small parquet file per tick, stamped at write ----
+    val stampsMs = scala.collection.mutable.ArrayBuffer.empty[Long]
     var warmupEndMs = Long.MaxValue
     try {
       // The feeder writes its change file DRIVER-LOCALLY (parquet-hadoop
@@ -248,7 +185,7 @@ object StreamBench {
         // protocol, a hand writer must do it explicitly
         val path = new org.apache.hadoop.fs.Path(
           s"$src/.feed-$b-$stamp.parquet.tmp")
-        val conf = session.sessionState.newHadoopConf()
+        val conf = spark.sessionState.newHadoopConf()
         org.apache.parquet.hadoop.example.GroupWriteSupport
           .setSchema(feedSchema, conf)
         val fac = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
@@ -277,13 +214,17 @@ object StreamBench {
           java.nio.file.Paths.get(s"$src/.feed-$b-$stamp.parquet.tmp"),
           java.nio.file.Paths.get(s"$src/feed-$b-$stamp.parquet"),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        stampsMs += stamp
       }
-      def awaitMerged(n: Long): Unit = {
+      def awaitApplied(nFiles: Int): Unit = {
+        val stampUs = stampsMs(nFiles - 1) * 1000L
+        def applied = merges.stream().anyMatch(_._2 >= stampUs)
         val deadline = System.currentTimeMillis() + timeoutMs
-        while (latencies.size < n && System.currentTimeMillis() < deadline)
-          Thread.sleep(20)
-        require(latencies.size >= n,
-          s"stream bench timed out: ${latencies.size}/$n rows merged")
+        while (!applied && System.currentTimeMillis() < deadline &&
+            queries.forall(_.isActive)) Thread.sleep(20)
+        queries.foreach(_.exception.foreach(e => throw e))
+        require(applied, s"stream bench timed out: $nFiles fed files not " +
+          s"applied within $timeoutMs ms")
       }
       // phase 1 — warmup, then DRAIN: the first cycles pay JIT + codegen
       // + state-store setup and run seconds long, so a backlog of
@@ -294,19 +235,18 @@ object StreamBench {
       for (b <- 0 until warmupBatches) {
         feed(b); Thread.sleep(warmupFeedIntervalMs.toLong)
       }
-      awaitMerged(warmupBatches.toLong * rowsPerBatch)
+      awaitApplied(warmupBatches)
       warmupEndMs = System.currentTimeMillis()
       // phase 2 — steady state, fed strictly below saturation
       for (b <- warmupBatches until batches) {
         feed(b); Thread.sleep(feedIntervalMs.toLong)
       }
-      awaitMerged(batches.toLong * rowsPerBatch)
+      awaitApplied(batches)
     } finally {
-      producer.stop()
-      consumer.stop()
+      queries.foreach(_.stop())
       // the harness runs twice per Bench sweep (plus every spec run) —
       // reclaim the source files, topic, checkpoints, and replica
-      // versions or /tmp grows without bound across sweeps
+      // versions or the temp root grows without bound across sweeps
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
         f.delete(); ()
@@ -314,22 +254,34 @@ object StreamBench {
       rm(new java.io.File(tmp))
     }
 
+    // Lag per fed FILE, not per merged row: the consumer's in-batch
+    // keep-latest can drop every row of an older file when a newer file
+    // in the same micro-batch carries the same keys. Files are fed in
+    // order with rising stamps and the newest file of a batch always
+    // survives keep-latest, so file f was applied by the first merge
+    // whose largest stamp reached f's stamp.
     import scala.jdk.CollectionConverters._
-    val all = latencies.asScala.toArray
-    val warmupRows = warmupBatches * rowsPerBatch
-    val post = java.util.Arrays.copyOfRange(all, warmupRows, all.length)
-    java.util.Arrays.sort(post)
+    val applied = merges.asScala.toIndexedSeq
+    val applier = stampsMs.toIndexedSeq.map(s =>
+      applied.indexWhere(_._2 >= s * 1000L))
+    val lags = stampsMs.indices.map(f => (applied(applier(f))._1 - stampsMs(f)).toDouble)
+    // every row of a file shares its lag, so per-file percentiles equal
+    // the per-row ones
+    val post = lags.drop(warmupBatches).sorted
     def pct(p: Double): Double =
-      post(math.min(post.length - 1, (p * post.length).toInt)).toDouble
-    // steady-state throughput: rows merged after the warmup window over
-    // the first→last merge span in that window
-    val steady = merges.asScala.filter(_._1 > warmupEndMs).toSeq
+      post(math.min(post.length - 1, (p * post.length).toInt))
+    // steady-state throughput: rows applied by the merges after the
+    // warmup window over the first→last merge span in that window
+    val steady = applier.groupBy(identity).toSeq
+      .map { case (i, files) => (applied(i)._1, files.size.toLong * rowsPerBatch) }
+      .filter(_._1 > warmupEndMs)
     val rps =
       if (steady.size < 2) 0.0
       else steady.map(_._2).sum.toDouble * 1000.0 /
         math.max(1L, steady.map(_._1).max - steady.map(_._1).min)
-    Result(pct(0.50), pct(0.95), post.last.toDouble, rps,
-      all.length.toLong, batches, warmupRows)
+    Result(pct(0.50), pct(0.95), post.last, rps,
+      stampsMs.size.toLong * rowsPerBatch, batches,
+      warmupBatches * rowsPerBatch)
   }
 
   /** `firstP95Ms` is NaN for single-observation points; for retried
@@ -445,15 +397,10 @@ object StreamBench {
     * [[CapacityMain]], "sweep-jvm" when the fork was unavailable and
     * the sweep JVM measured it inline). Per-mode failure isolation: one
     * mode failing reports null without discarding the other's knee. */
-  def capacityJson(spark: SparkSession, basis: String,
-      batches: Int = 15, warmupBatches: Int = 5,
-      startRowsPerBatch: Int = 250, maxRowsPerBatch: Int = 32000): String = {
+  def capacityJson(spark: SparkSession, basis: String): String = {
     def one(mor: Boolean): String =
       try {
-        val c = capacity(spark, mor, batches = batches,
-          warmupBatches = warmupBatches,
-          startRowsPerBatch = startRowsPerBatch,
-          maxRowsPerBatch = maxRowsPerBatch)
+        val c = capacity(spark, mor)
         // 5th element = the DISCARDED observation's p95 for best-of-2
         // points, null for single-observation points — the artifact
         // itself says which points got the retry sampling

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import graft.streaming.{ParquetReplica, StatefulLww, StreamingPipeline}
+import graft.streaming.{ParquetReplica, StatefulLww, StreamBench}
 
 /** End-to-end Structured Streaming replication over a file topic, plus the
   * stateful LWW fallback and registry validation. */
@@ -12,33 +12,37 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("produce → file topic → consume → replica matches batch truth") {
     val tmp = Files.createTempDirectory("graft-stream").toString
-    val topic = s"$tmp/topic"
-    val replica = new ParquetReplica(spark, s"$tmp/replica",
-      "synced_id LONG, synced_updated_at TIMESTAMP, synced_created_at TIMESTAMP, " +
-        "synced_canceled_at TIMESTAMP, value DOUBLE, synced_data STRING")
-
     // stage the change stream into a directory (file-source contract)
     val src = s"$tmp/src"
     new java.io.File(src).mkdirs()
     Files.copy(java.nio.file.Paths.get(s"${sf()}/events.parquet"),
       java.nio.file.Paths.get(s"$src/events.parquet"))
-    StreamingPipeline.produce(spark, src, topic, s"$tmp/cp1")
-    StreamingPipeline.consume(spark, topic, replica, s"$tmp/cp2")
-
-    val got = replica.read()
-      .select($"synced_id", $"value", $"synced_canceled_at".isNotNull.as("canceled"))
-      .as[(Long, Double, Boolean)].collect()
-      .map { case (k, v, c) => k -> (v, c) }.toMap
+    val reg = StreamBench.registry(buckets = 4)
+    val bindings = new StreamBench.EventBindings(src,
+      spark.read.parquet(src).schema)
+    def drain(): Map[Long, (Option[Double], Boolean)] =
+      Engine.runAvailableNow(spark, reg, bindings, s"$tmp/work")
+        .replicas("event").read()
+        .select($"synced_id", $"value",
+          $"synced_canceled_at".isNotNull.as("canceled"))
+        .as[(Long, Option[Double], Boolean)].collect()
+        .map { case (k, v, c) => k -> (v, c) }.toMap
+    val got = drain()
 
     // batch truth: latest event per user (ties by event id are absent at
-    // this scale); canceled iff latest event_type is error
+    // this scale); canceled iff latest event_type is error. A cancel
+    // publishes a key-only destroy payload (P9) that keeps the replica's
+    // current attributes — none yet for a user first seen in this drain —
+    // so a canceled user's value is null.
     val truth = graft.queries.Q.tbl(spark, sf(), "events")
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy($"user_id")
           .orderBy(unix_micros($"ts").desc, $"event_id".desc)))
       .filter($"rn" === 1)
-      .select($"user_id", $"value", ($"event_type" === "error").as("canceled"))
-      .as[(Long, Double, Boolean)].collect()
+      .select($"user_id",
+        when($"event_type" =!= "error", $"value").as("value"),
+        ($"event_type" === "error").as("canceled"))
+      .as[(Long, Option[Double], Boolean)].collect()
       .map { case (k, v, c) => k -> (v, c) }.toMap
 
     assert(got.keySet == truth.keySet)
@@ -47,27 +51,32 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(got(k)._2 == c, s"canceled flag for user $k")
     }
 
-    // idempotency: replaying the same topic into the replica converges
-    StreamingPipeline.consume(spark, topic, replica, s"$tmp/cp3")
-    val replayed = replica.read()
-      .select($"synced_id", $"value").as[(Long, Double)].collect().toMap
-    assert(replayed == got.map { case (k, (v, _)) => k -> v })
+    // idempotency: replaying the whole topic (consumer checkpoint
+    // deleted) into the replica converges
+    new scala.reflect.io.Directory(new java.io.File(s"$tmp/work/cp/consume"))
+      .deleteRecursively()
+    assert(drain() == got)
   }
 
   test("StreamBench measures change→replica lag per row and reports " +
       "steady-state percentiles past the warmup window") {
     // tiny parameters: the spec pins the MEASUREMENT HARNESS (row
-    // accounting, warmup exclusion, percentile math, replica contents),
-    // not the SLO number — that's Bench's job at full size
-    val r = graft.streaming.StreamBench.run(spark,
-      batches = 6, rowsPerBatch = 40, triggerMs = 100, warmupBatches = 2,
-      keySpace = 50)
-    assert(r.nRows == 6L * 40, s"every fed row must be measured: $r")
-    assert(r.nBatchesFed == 6 && r.warmupRowsDropped == 2 * 40)
-    assert(r.p50Ms > 0 && r.p95Ms >= r.p50Ms && r.maxMs >= r.p95Ms, r.toString)
-    // local spec machines are noisy — bound loosely, not at the SLO
-    assert(r.p95Ms < 60000, s"pathological lag: $r")
-    assert(r.rowsPerSec > 0, r.toString)
+    // accounting, warmup exclusion, percentile math), not the SLO
+    // number — that's Bench's job at full size. keySpace 50 < 40 rows a
+    // file × a backlog batch's files: keep-latest collapses keys across
+    // files, which the per-file accounting must survive. Both replica
+    // modes, as the capacity sweep reports both.
+    for (mor <- Seq(true, false)) {
+      val r = StreamBench.run(spark,
+        batches = 6, rowsPerBatch = 40, triggerMs = 100, warmupBatches = 2,
+        keySpace = 50, mergeOnRead = mor)
+      assert(r.nRows == 6L * 40, s"every fed row must be measured: $r")
+      assert(r.nBatchesFed == 6 && r.warmupRowsDropped == 2 * 40)
+      assert(r.p50Ms > 0 && r.p95Ms >= r.p50Ms && r.maxMs >= r.p95Ms, r.toString)
+      // local spec machines are noisy — bound loosely, not at the SLO
+      assert(r.p95Ms < 60000, s"pathological lag: $r")
+      assert(r.rowsPerSec > 0, r.toString)
+    }
   }
 
   test("merge-on-read replica matches copy-on-write across epochs, " +
@@ -245,15 +254,12 @@ class StreamingPipelineSpec extends SparkSpec {
     val v = mor.currentVersion
     val epochs = mor.deltaEntries(v).size
     val emptyBatch = upd().limit(0)
-    // footer-check path (no precomputed set): the delta write runs, the
+    // footer-check path: the delta write runs, the
     // parquet footers read zero rows, nothing publishes — an idle
     // stream's watermark ticks must never bump versions or leave dirs
     mor.merge(emptyBatch)
     assert(mor.currentVersion == v && mor.deltaEntries(v).size == epochs,
       "footer path must not publish an empty epoch")
-    // precomputed-empty path: short-circuits before any Spark job
-    mor.mergeTouched(emptyBatch, Some(Set.empty))
-    assert(mor.currentVersion == v && mor.deltaEntries(v).size == epochs)
     // no orphan delta dir left behind by the aborted write
     val vDirs = Option(new java.io.File(s"$tmp/r/v${v + 1}").listFiles())
       .getOrElse(Array.empty)
