@@ -164,11 +164,15 @@ object Engine {
         * sub-second `Engine.start` cadences (see PERF.md round 10; CoW
         * rewrites every hot bucket once per micro-batch regardless of
         * batch size). Results are bit-identical to CoW (spec-pinned).
-        * The engine's key indexes take the same mode and cadence, so
-        * their per-batch merge is the same one-job delta append (a C11
-        * destroy folds the index's delta log before its anti-join). The
-        * model replicas ignore it when a custom `replicaFactory` is set;
-        * the key indexes, always engine-built, do not. */
+        * Every merge, destroyed rows included, is that one-job delta
+        * append: a soft delete keeps the current attributes in the
+        * read-time fold ([[Replica.preserveOnDestroy]]) instead of
+        * joining against the current rows. The engine's key indexes
+        * take the same mode and cadence, so their per-batch merge is the
+        * same one-job delta append (a C11 destroy folds the index's
+        * delta log before its anti-join). The model replicas ignore it
+        * when a custom `replicaFactory` is set; the key indexes, always
+        * engine-built, do not. */
       mergeOnRead: Boolean = false,
       replicaCompactEvery: Int = 8,
       /** Store each model replica's `synced_data` payload as Spark-4
@@ -931,15 +935,17 @@ object Engine {
             explode_outer(col(s"rec.links.${assoc.name}")).as("synced_id"))
         // bucket-pruned C11: resolve the doomed child KEYS first (one
         // semi+anti join with the micro-batch parent set broadcast,
-        // collected in one action — children of this batch's parents, so
-        // bounded by the batch), then rewrite only the buckets those keys
-        // hash into — O(batch ∩ buckets) like the merge itself, never an
-        // O(child table) rewrite. The common case, no child dropped,
-        // skips both destroys: no probe, no MoR delta fold, no version.
-        // The keys resolve from the secondary (fk, synced_id) index when
-        // the child has one (two longs per row — the reference's
-        // `WHERE parent_id = ?` index lookup, persistor.rb:102-152);
-        // a child-table key scan remains only as the indexless fallback.
+        // collected in one action), then rewrite only the buckets those
+        // keys hash into — never an O(child table) rewrite. The common
+        // case, no child dropped, skips both destroys: no probe, no MoR
+        // delta fold, no version. The keys resolve from the secondary
+        // (fk, synced_id) index when the child has one (two longs per
+        // row — the reference's `WHERE parent_id = ?` index lookup,
+        // persistor.rb:102-152); a child-table key scan remains only as
+        // the indexless fallback. The resolution itself is NOT bounded
+        // by the batch: it scans the whole index, and under
+        // merge-on-read `read()` reconciles every index key (base plus
+        // every delta epoch, one shuffle) on each batch — O(index).
         val rep = replicas(dep)
         rep.withLock {
           val childKeys = indexes.get(dep).map(_.replica.read())
@@ -997,8 +1003,9 @@ object Engine {
     * events carry only the key and timestamps on the wire (P9), so their
     * merge preserves the current row's attributes — the reference's
     * `record.cancel` touches only `canceled_at`
-    * (synchronizable_model.rb:40-50). `hasDestroys = false` (the slice
-    * carries no destroyed row) skips that attribute-preserving join. */
+    * (synchronizable_model.rb:40-50), through
+    * [[Replica.preserveOnDestroy]]. `hasDestroys = false` (the slice
+    * carries no destroyed row) passes [[Replica.identityPrepare]]. */
   private def mergeRecords(
       m: ModelDef,
       parsed: DataFrame,
@@ -1009,9 +1016,6 @@ object Engine {
       options: EngineOptions,
       batchId: Long,
       hasDestroys: Boolean): Unit = {
-    val linkCols = m.linkKinds.map { case (rel, kind) =>
-      LinksFlattener.colName(rel, kind)
-    }
     val shaped = shapeRecords(m, parsed, options.syncedDataVariant)
     // deterministic tiebreak: equal-timestamp events (second-precision CDC
     // writing update+destroy in one tick) must pick the SAME winner on
@@ -1030,25 +1034,13 @@ object Engine {
       tiebreak = Seq(col("event_type"), payloadTiebreak))
 
     val touched = latest.select(col("synced_id"))
-    // preserve current attributes under destroy (key-only payload); the
-    // join is key-local, so the incremental merge stays touched-bucket-only.
-    // Without destroys there is nothing to preserve: the identity sentinel
-    // lets a merge-on-read replica take its map-only, one-job delta append
-    val preserve = m.attributes.map(_.name) ++ linkCols :+ "synced_created_at"
-    def preserving(keep: Seq[String]): (DataFrame, DataFrame) => DataFrame =
-      if (!hasDestroys) Replica.identityPrepare
-      else (current, upd) => {
-        val cur = current.select(
-          col("synced_id") +:
-            keep.map(c => col(c).as(s"__cur_$c")): _*)
-        upd.join(cur, Seq("synced_id"), "left")
-          .select(
-            upd.columns.filterNot(keep.contains).map(col) ++
-              keep.map(c =>
-                when(col("event_type") === EventType.Destroyed,
-                  coalesce(col(s"__cur_$c"), col(c)))
-                  .otherwise(col(c)).as(c)): _*)
-      }
+    // preserve current attributes under destroy (key-only payload). Both
+    // prepares are sentinels: a merge-on-read replica keeps its map-only,
+    // one-job delta append either way and preserves at read time; other
+    // storage runs the key-local join. Without destroys there is nothing
+    // to preserve.
+    val prepare =
+      if (hasDestroys) Replica.preserveOnDestroy else Replica.identityPrepare
     // the whole capture → merge → diff sequence holds the replica lock:
     // a model reachable through several topics is merged by several
     // concurrent queries, and a C12 diff against a snapshot another
@@ -1062,12 +1054,11 @@ object Engine {
             .join(touched, Seq("synced_id"), "left_semi")
             .localCheckpoint(true))
         else None
-      replica.merge(latest, preserving(preserve))
+      replica.merge(latest, prepare)
       // the key index merges the SAME winner rows under the SAME lock, so
       // it can never diverge from the replica (FKs preserved under destroy
       // exactly as the replica preserves attributes)
-      index.foreach(ki => ki.replica.merge(indexSlice(latest, ki),
-        preserving(ki.fks :+ "synced_created_at")))
+      index.foreach(ki => ki.replica.merge(indexSlice(latest, ki), prepare))
       // C14: publish consumed events next to the merge
       consumedDir.foreach { dir =>
         val localChanges = before.map { b =>

@@ -86,10 +86,14 @@ object Persistor {
     * ([[graft.streaming.ParquetReplica]]): shaped rows are written
     * directly (no union with a typed target to coerce the null-filled
     * columns), so the epoch write needs explicit types. One projection,
-    * one analyzer pass. */
+    * one analyzer pass. `destroyedMarker` appends a nullable boolean
+    * column of that name, true on `destroyed` rows and null otherwise,
+    * for the read-time attribute preservation of
+    * [[graft.streaming.Replica.preserveOnDestroy]]. */
   def shapeForMergeTyped(schema: org.apache.spark.sql.types.StructType,
-      updates: DataFrame): DataFrame = {
-    val canceled = when(col("event_type") === "destroyed",
+      updates: DataFrame, destroyedMarker: Option[String] = None): DataFrame = {
+    val destroyed = col("event_type") === "destroyed"
+    val canceled = when(destroyed,
       coalesce(col("canceled_at"), col("synced_updated_at")))
       .otherwise(col("canceled_at"))
     updates.select(schema.fields.toSeq.map { f =>
@@ -98,7 +102,7 @@ object Persistor {
         else if (updates.columns.contains(f.name)) col(f.name)
         else lit(null)
       src.cast(f.dataType).as(f.name)
-    }: _*)
+    } ++ destroyedMarker.map(when(destroyed, lit(true)).as(_)): _*)
   }
 
   def merge(
@@ -167,18 +171,22 @@ object Persistor {
 
   /** C11, incremental form — the child KEYS to disassociate: children of
     * touched parents absent from the incoming `(parentKey, childKey)`
-    * list. The parent set is the micro-batch (bounded → broadcast); the
-    * child table streams through one semi + one anti join reading only
-    * the two key columns, and the storage layer then rewrites only the
-    * buckets the RESULT keys hash into
-    * ([[graft.streaming.ParquetReplica.destroy]]) — never the whole child
-    * table (reference semantics: persistor.rb:102-152, README.md:869-874). */
+    * list. The parent set is the micro-batch (bounded → broadcast, and a
+    * left-semi build side needs no dedup, so no distinct stage); the
+    * storage layer then rewrites only the buckets the RESULT keys hash
+    * into ([[graft.streaming.ParquetReplica.destroy]]) — never the whole
+    * child table (reference semantics: persistor.rb:102-152,
+    * README.md:869-874). The semi + anti joins read only the two key
+    * columns, but they stream ALL of `children`: the caller's read of
+    * the child table or its key index decides the real cost, and a
+    * merge-on-read `read()` reconciles every key (base plus the whole
+    * delta log, one shuffle) on each call. */
   def disassociatedChildKeys(
       children: DataFrame,
       incoming: DataFrame,
       parentKey: String,
       childKey: String): DataFrame = {
-    val touchedParents = incoming.select(col(parentKey)).distinct()
+    val touchedParents = incoming.select(col(parentKey))
     children.select(col(parentKey), col(childKey))
       .join(broadcast(touchedParents), Seq(parentKey), "left_semi")
       .join(incoming.select(col(parentKey), col(childKey)),

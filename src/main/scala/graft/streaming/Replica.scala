@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.consumer.Persistor
+import graft.model.Schemas.EventType
 
 /** The consumer's storage surface — what `Persistor` needs from a replica
   * table. [[ParquetReplica]] implements it (the specs also run a thin
@@ -57,13 +58,56 @@ trait Replica {
 
 object Replica {
   /** The canonical no-op `prepare`. A SENTINEL, not just a convenience:
-    * merge-on-read implementations test `prepare eq identityPrepare` to
-    * know the target will never be evaluated (pure map-only delta append)
-    * versus a real prepare that joins against current rows (which then
-    * gets a bucket-pruned slice, not the full-table reconcile). Callers
-    * passing their own `(_, u) => u` lambda still get correct results —
-    * just via the pruned-slice path. */
+    * merge-on-read implementations test `prepare eq identityPrepare` (or
+    * the other sentinel, [[preserveOnDestroy]]) to know the target will
+    * never be evaluated (pure map-only delta append) versus a real
+    * prepare that joins against current rows (which then gets a
+    * bucket-pruned slice, not the full-table reconcile). Callers passing
+    * their own `(_, u) => u` lambda still get correct results — just via
+    * the pruned-slice path. */
   val identityPrepare: (DataFrame, DataFrame) => DataFrame = (_, u) => u
+
+  /** Columns a destroy never takes from the current row: the key, its
+    * LWW timestamp and cancel stamp, and the raw payload. */
+  private val notPreserved =
+    Set("synced_id", "synced_updated_at", "synced_canceled_at", "synced_data")
+
+  /** The target columns a `destroyed` update keeps from the current row
+    * under [[preserveOnDestroy]]: for a model replica its attributes,
+    * link columns and `synced_created_at`; for a key index its FKs and
+    * `synced_created_at`. */
+  def preservedColumns(targetCols: Seq[String]): Seq[String] =
+    targetCols.filterNot(notPreserved)
+
+  /** The soft-delete `prepare` (C9; synchronizable_model.rb:40-50): a
+    * `destroyed` update takes `coalesce(current, update)` for every
+    * [[preservedColumns]] column — a key-only destroy payload stamps
+    * `canceled_at` and keeps the record's attributes. A SENTINEL like
+    * [[identityPrepare]]: merge-on-read [[ParquetReplica]] tests
+    * `prepare eq preserveOnDestroy` and defers the coalesce to its
+    * read-time LWW fold, so the merge stays the map-only one-job delta
+    * append instead of this join against the current rows. Every other
+    * replica (copy-on-write, custom storage, wrappers) calls it and gets
+    * the write-time join. Expects at most one update row per key, as
+    * [[graft.Engine]]'s in-batch keep-latest guarantees. */
+  val preserveOnDestroy: (DataFrame, DataFrame) => DataFrame = (current, upd) => {
+    val keep = preservedColumns(current.columns.toSeq)
+    val cur = current.select(
+      col("synced_id") +: keep.map(c => col(c).as(s"__cur_$c")): _*)
+    upd.join(cur, Seq("synced_id"), "left")
+      .select(upd.columns.filterNot(keep.contains).map(col) ++
+        keep.map { c =>
+          val u = if (upd.columns.contains(c)) col(c) else lit(null)
+          when(col("event_type") === EventType.Destroyed,
+            coalesce(col(s"__cur_$c"), u)).otherwise(u).as(c)
+        }: _*)
+  }
+
+  /** Nullable boolean column a merge-on-read delta epoch written under
+    * [[preserveOnDestroy]] carries: true on `destroyed` rows, null
+    * otherwise. Base buckets and epochs written without the sentinel lack
+    * it and read it as null. */
+  val DestroyedMarker = "__destroyed"
 }
 
 /** Hash-bucketed, manifest-versioned parquet replica store — the
@@ -261,10 +305,22 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * exact pairwise rule `x wins iff coalesce(x.ts, +∞) >=
     * coalesce(acc.ts, −∞)`. All codegen'd (array_sort + aggregate over a
     * collect_list), group size bounded by `compactEvery` (≤ 1 row per
-    * key per epoch after the in-batch winner agg). */
+    * key per epoch after the in-batch winner agg).
+    *
+    * The fold also applies [[Replica.preserveOnDestroy]] for epochs
+    * written under it: a row carrying the [[Replica.DestroyedMarker]]
+    * meets the accumulator — the fold of the base and every earlier
+    * epoch, exactly the current row a write-time join would have read —
+    * as if its [[Replica.preservedColumns]] were `coalesce(acc, x)`,
+    * both in the comparison (its effective ts falls back to the kept
+    * `synced_created_at`) and in the row it leaves when it wins. Base
+    * rows and epochs without the column read the marker as null. */
   private def reconcile(base: DataFrame,
       deltas: Seq[(Long, String)]): DataFrame = {
     if (deltas.isEmpty) return base
+    val marker = Replica.DestroyedMarker
+    val deltaSchema = schema.add(marker,
+      org.apache.spark.sql.types.BooleanType)
     // `__seq` derives from the manifest per delta directory (the write
     // path stopped storing it — see deltaMerge's codegen-cache note); a
     // pre-round-14 epoch that still stores the column reads fine — the
@@ -281,19 +337,21 @@ final class ParquetReplica(spark: SparkSession, root: String,
       dir.split("/").last == s"delta-$sq" }
     val d =
       if (dirEncodesSeq)
-        spark.read.schema(schema)
+        spark.read.schema(deltaSchema)
           .parquet(deltas.map { case (_, dir) => s"$root/$dir" }: _*)
           .withColumn("__seq",
             regexp_extract(input_file_name(), "delta-([0-9]+)/[^/]*$", 1)
               .cast("long"))
       else deltas
-        .map { case (sq, dir) => spark.read.schema(schema)
+        .map { case (sq, dir) => spark.read.schema(deltaSchema)
           .parquet(s"$root/$dir").withColumn("__seq", lit(sq)) }
         .reduce(_ unionByName _)
     val cols = schema.fieldNames.toSeq
+    val kept = Replica.preservedColumns(cols).toSet
     val maxTs = lit("9999-12-31 00:00:00").cast("timestamp")
     val minTs = lit("0001-01-01 00:00:00").cast("timestamp")
-    val all = base.withColumn("__seq", lit(-1L)).unionByName(d)
+    val all = base.withColumn("__seq", lit(-1L))
+      .withColumn(marker, lit(null).cast("boolean")).unionByName(d)
       .withColumn("__lww",
         Persistor.lwwTimestamp(col("synced_updated_at"), col("synced_created_at")))
     // VARIANT columns (the Spark-4 synced_data mode) are not orderable,
@@ -305,20 +363,17 @@ final class ParquetReplica(spark: SparkSession, root: String,
     // sort the same way on every executor, or the fold's winner flips
     // between reads) and sorts with an explicit (s, o, l, k) comparator
     // that never touches the variant itself. String mode keeps the
-    // default ordering bit-for-bit.
+    // default ordering bit-for-bit; the marker `d` packs after `r`.
     val hasVariant = schema.exists(
       _.dataType.isInstanceOf[org.apache.spark.sql.types.VariantType])
     // sort key: epoch first, then effective-ts with null AS +∞ (within
     // one epoch the in-batch rule is the same max — null persists)
-    val packed =
-      if (hasVariant) struct(
-        col("__seq").as("s"), coalesce(col("__lww"), maxTs).as("o"),
-        col("__lww").as("l"),
-        to_json(struct(cols.map(col): _*)).as("k"),
-        struct(cols.map(col): _*).as("r"))
-      else struct(
-        col("__seq").as("s"), coalesce(col("__lww"), maxTs).as("o"),
-        col("__lww").as("l"), struct(cols.map(col): _*).as("r"))
+    val row = struct(cols.map(col): _*)
+    val packed = struct(
+      Seq(col("__seq").as("s"), coalesce(col("__lww"), maxTs).as("o"),
+        col("__lww").as("l")) ++
+        (if (hasVariant) Seq(to_json(row).as("k")) else Nil) ++
+        Seq(row.as("r"), col(marker).as("d")): _*)
     val grouped = all.groupBy(col("synced_id"))
       .agg(collect_list(packed).as("__rows"))
     // fold the WHOLE sorted array from a null seed — the sorted array
@@ -328,6 +383,7 @@ final class ParquetReplica(spark: SparkSession, root: String,
     // optimizer)
     val packedType = grouped.schema("__rows").dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
     // null `l` sorts FIRST in the comparator branch (matching the
     // default struct ordering's nulls-first) and `k` breaks remaining
     // ties totally — same epoch + same effective ts + same rendered row
@@ -342,13 +398,30 @@ final class ParquetReplica(spark: SparkSession, root: String,
         WHEN a.k < b.k THEN -1 WHEN a.k > b.k THEN 1
         ELSE 0 END)""")
       else expr("array_sort(__rows)")
+    // a marked row over a live accumulator: its kept columns coalesce
+    // onto the accumulator's, and so its effective ts is recomputed
+    // with the kept synced_created_at
+    def preserved(acc: org.apache.spark.sql.Column,
+        x: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+      def field(c: String) =
+        if (kept(c)) coalesce(acc("r")(c), x("r")(c)) else x("r")(c)
+      val l = Persistor.lwwTimestamp(field("synced_updated_at"),
+        field("synced_created_at"))
+      struct(packedType.fieldNames.toSeq.map {
+        case "l" => l.as("l")
+        case "r" => struct(cols.map(c => field(c).as(c)): _*).as("r")
+        case f => x(f).as(f)
+      }: _*)
+    }
     grouped
       .select(aggregate(
         sortedRows,
         lit(null).cast(packedType),
-        (acc, x) => when(acc.isNull, x).otherwise(when(
-          coalesce(x.getField("l"), maxTs) >= coalesce(acc.getField("l"), minTs),
-          x).otherwise(acc))).getField("r").as("w"))
+        (acc, e) => when(acc.isNull, e).otherwise {
+          val x = when(e("d"), preserved(acc, e)).otherwise(e)
+          when(coalesce(x("l"), maxTs) >= coalesce(acc("l"), minTs), x)
+            .otherwise(acc)
+        }).getField("r").as("w"))
       .select(col("w.*"))
   }
 
@@ -457,16 +530,17 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * the replica, rewriting only the buckets that contain updated keys;
     * every other bucket is carried forward by reference. `prepare` may
     * reshape the updates against the current rows of the touched buckets
-    * first (key-local by construction — e.g. the destroy path preserving
-    * current attributes). */
+    * first (key-local by construction — e.g. [[Replica.preserveOnDestroy]]
+    * keeping current attributes under a destroy). */
   def merge(updates: DataFrame,
       prepare: (DataFrame, DataFrame) => DataFrame = Replica.identityPrepare): Unit =
     withLock {
       // MoR defers the emptiness check to AFTER the write: deltaMerge
       // reads the written files' parquet footers (driver-local metadata,
       // no Spark job) and publishes nothing for an empty epoch — so the
-      // sub-second latency path pays exactly ONE Spark job per
-      // micro-batch (the delta write), with no isEmpty/take(1) probe job
+      // sub-second latency path pays exactly ONE Spark job per merge
+      // under either sentinel prepare, destroys included (the delta
+      // write), with no isEmpty/take(1) probe job
       // in front of it, while an idle stream's watermark-advancing empty
       // batches still never append epochs, bump versions, or trigger
       // pointless compactions
@@ -507,12 +581,14 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * compaction per `compactEvery` epochs. Reads pay the reconcile
     * ([[reconcile]]) until then — the same bound.
     *
-    * With the default [[Replica.identityPrepare]] the target is never
-    * even constructed and the path stays map-only. A REAL prepare (the
-    * Engine's attribute-preserving join — key-local by contract) gets the
-    * BUCKET-PRUNED reconciled slice of the base, not the full table:
-    * without the pruning, every micro-batch would re-read and re-fold the
-    * whole replica, forfeiting exactly the O(batch) apply MoR exists for.
+    * With either sentinel prepare the target is never constructed and
+    * the path stays map-only. [[Replica.identityPrepare]] writes the
+    * shaped rows as they are; [[Replica.preserveOnDestroy]] adds the
+    * [[Replica.DestroyedMarker]] column in the same projection and
+    * leaves the attribute coalesce to the read-time fold. A REAL prepare
+    * (any other function — key-local by contract) gets the BUCKET-PRUNED
+    * reconciled slice of the base, not the full table: without the
+    * pruning it would re-read and re-fold the whole replica per merge.
     * The delta log itself is unbucketed and folds in full, but its size
     * is bounded by `compactEvery`. */
   private def deltaMerge(updates: DataFrame,
@@ -521,25 +597,25 @@ final class ParquetReplica(spark: SparkSession, root: String,
     val next = v + 1
     val seq = m.deltas.lastOption.map(_._1).getOrElse(-1L) + 1L
     val dir = s"v$next/delta-$seq"
-    // Pin `updates` on the real-prepare path: the touched-bucket collect
-    // and the write must see the SAME rows, or a nondeterministic updates
-    // plan could hash re-evaluated rows into buckets the collect missed —
-    // prepare would then find no current row for those keys and silently
-    // fall back to update values. The identity-prepare latency path is
-    // untouched (updates evaluated exactly once there, no pin needed).
-    val identity = prepare eq Replica.identityPrepare
-    val ups = if (identity) updates else updates.localCheckpoint(eager = false)
-    val target =
-      if (identity)
-        // never evaluated — placeholder so the signature stays uniform
-        empty
+    val marker =
+      if (prepare eq Replica.preserveOnDestroy) Some(Replica.DestroyedMarker)
+      else None
+    // the sentinels evaluate `updates` exactly once (the write). Pin it
+    // on the real-prepare path: the touched-bucket collect and the write
+    // must see the SAME rows, or a nondeterministic updates plan could
+    // hash re-evaluated rows into buckets the collect missed — prepare
+    // would then find no current row for those keys and silently fall
+    // back to update values.
+    val prepared =
+      if (marker.isDefined || (prepare eq Replica.identityPrepare)) updates
       else {
+        val ups = updates.localCheckpoint(eager = false)
         // one bounded collect (≤ buckets values), the same cost the CoW
         // path pays; prepare joins on synced_id, so all rows for the
         // update keys live in these buckets
         val touched = touchedBuckets(ups, m.nb)
-        reconcile(readDirs(m.dirs.filter(t => touched(t._1)).values.toSeq),
-          m.deltas)
+        prepare(reconcile(readDirs(m.dirs.filter(t => touched(t._1))
+          .values.toSeq), m.deltas), ups)
       }
     // overwrite (the writeBucketsTo rule): a crash between this write
     // and publish() leaves an orphan dir at the SAME next/seq, and the
@@ -558,9 +634,9 @@ final class ParquetReplica(spark: SparkSession, root: String,
     // a fresh Janino compile instead of hitting the codegen cache —
     // pure fixed latency on the sub-second merge path (round-14
     // optimization; the hot write plan is now batch-invariant).
-    // shapeForMergeTyped = the shape + cast + __event-drop as ONE
-    // projection (one analyzer pass — this path runs per micro-batch)
-    val shaped = Persistor.shapeForMergeTyped(schema, prepare(target, ups))
+    // shapeForMergeTyped = the shape + cast + __event-drop (+ marker) as
+    // ONE projection (one analyzer pass — this path runs per micro-batch)
+    val shaped = Persistor.shapeForMergeTyped(schema, prepared, marker)
     shaped.write.mode("overwrite").parquet(s"$root/$dir")
     // deferred emptiness check: the parquet FOOTERS of the files just
     // written carry exact row counts — a driver-local metadata read, no

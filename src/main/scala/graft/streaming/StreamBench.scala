@@ -293,8 +293,11 @@ object StreamBench {
     * statistically non-comparable points uniformly. */
   final case class CapacityPoint(targetRps: Double, measuredRps: Double,
       p50Ms: Double, p95Ms: Double, firstP95Ms: Double = Double.NaN)
+  /** `capped`: the sweep stopped at `maxRowsPerBatch` without any
+    * point crossing the gate, so `kneeRowsPerSec` is the row cap's
+    * throughput — a lower bound on the knee, not the knee. */
   final case class CapacityResult(mode: String, kneeRowsPerSec: Double,
-      points: Seq[CapacityPoint])
+      points: Seq[CapacityPoint], capped: Boolean)
 
   /** SATURATION sweep — the other half of the SLO story: [[run]]
     * reports latency below saturation; this reports the feed rate at
@@ -386,7 +389,7 @@ object StreamBench {
           degraded = true
       }
     }
-    CapacityResult(mode, knee, points.result())
+    CapacityResult(mode, knee, points.result(), capped = !degraded)
   }
 
   /** Formats the two-mode capacity sweep as the BENCH `stream_capacity`
@@ -409,6 +412,7 @@ object StreamBench {
             (if (p.firstP95Ms.isNaN) "null" else f"${p.firstP95Ms}%.0f") + "]")
           .mkString("[", ",", "]")
         f"""{"knee_rows_per_sec":${c.kneeRowsPerSec}%.0f,""" +
+          s""""capped":${c.capped},""" +
           s""""points_target_measured_p50_p95_altp95":$pts}"""
       } catch {
         case e: Throwable =>

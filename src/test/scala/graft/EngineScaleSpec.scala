@@ -83,9 +83,10 @@ class EngineScaleSpec extends SparkSpec {
             ($"id" * 1.0).as("qty"),
             lit("2026-05-02 00:00:00").cast("timestamp").as("__ts"))
     }
-    def orderChange(ids: Seq[Long], file: String, ts: String): Unit =
+    def orderChange(ids: Seq[Long], file: String, ts: String,
+        op: String = "update"): Unit =
       ids.toDF("id").select($"id", ($"id" * 100.0).as("total"),
-          lit("update").as("__op"),
+          lit(op).as("__op"),
           lit(null).cast("timestamp").as("__old_canceled"),
           lit(null).cast("timestamp").as("__new_canceled"),
           lit(ts).cast("timestamp").as("__ts"))
@@ -173,6 +174,30 @@ class EngineScaleSpec extends SparkSpec {
       assert(now.size == deltas.size + 1 && now.startsWith(deltas),
         s"expected one appended epoch: $deltas -> $now")
     }
+  }
+
+  test("merge-on-read: a batch carrying a parent destroy appends exactly " +
+      "one epoch to the parent replica, which keeps the destroyed attributes") {
+    val fx = new C11Fixture("nsd")
+    val opts = Engine.EngineOptions(mergeOnRead = true, replicaCompactEvery = 100)
+    fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
+    val parent = fx.run(opts).replicas("order").asInstanceOf[ParquetReplica]
+    val (v, deltas) = parent.currentVersion -> parent.deltaEntries(parent.currentVersion)
+    // order 3 is deleted (a key-only destroy on the wire) while 4 updates
+    fx.orderChange(Seq(3L), "f2", "2026-05-03 00:00:00", op = "delete")
+    fx.orderChange(Seq(4L), "f3", "2026-05-03 00:00:00")
+    val res = fx.run(opts)
+    val order = res.replicas("order").asInstanceOf[ParquetReplica]
+    assert(order.currentVersion == v + 1, s"v$v -> v${order.currentVersion}")
+    val now = order.deltaEntries(order.currentVersion)
+    assert(now.size == deltas.size + 1 && now.startsWith(deltas),
+      s"expected one appended epoch: $deltas -> $now")
+    // the destroy soft-deletes and keeps the stored attribute
+    val three = order.read().filter($"synced_id" === 3L)
+      .select($"total", $"synced_canceled_at".isNotNull).as[(Double, Boolean)]
+      .collect().toSeq
+    assert(three == Seq((300.0, true)), s"order 3: $three")
+    fx.assertLockstep(res)
   }
 
   test("key index bootstraps from a pre-existing child replica") {

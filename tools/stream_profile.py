@@ -1,0 +1,299 @@
+#!/usr/bin/env python3
+"""Per-micro-batch profile of a streaming Spark run, from its event log.
+
+Usage:
+  tools/stream_profile.py EVENTLOG [--codegen CODEGEN_LOG]
+                          [--query SUBSTR] [--batches FIRST-LAST]
+
+EVENTLOG is a Spark event log: a plain or zstd-compressed events file, or
+a rolling `eventlog_v2_*` directory (or the directory that holds exactly
+one). CODEGEN_LOG is a log written with `tools/codegen-log4j2.properties`:
+the DEBUG records of Spark's `CodeGenerator` (one per compile, carrying the
+generated source) and its INFO "Code generated in X ms" lines, each
+stamped with epoch millis and thread name. tools/README.md has the recipe.
+
+For every micro-batch of every streaming query it prints the batch's
+trigger time, jobs, stages and tasks, and then one line per SQL execution
+the batch ran (nested executions, e.g. the actions inside `foreachBatch`):
+wall time, jobs, stages, tasks, join and aggregate operators in the
+physical plan, and a plan class (a label plus a hash of the operator
+tree, so the same step lines up across batches). With a codegen log each
+line also counts compiles, distinct generated classes (by source hash)
+and compile time. Compiles are attributed by thread:
+  - an executor thread names its stage: stage -> job -> execution;
+  - a `stream execution thread` names its query run: the batch whose
+    trigger window holds the record, then the innermost execution of that
+    batch running at that time;
+  - other driver threads (exchange and query-stage threads) go to the
+    latest-started execution running at that time, and are counted as
+    `by time` in the summary, since concurrent queries make them
+    ambiguous.
+The closing summary gives, per query over the selected batches, compiles
+per batch and the distinct classes of the whole window.
+"""
+import argparse
+import collections
+import glob
+import hashlib
+import json
+import os
+import re
+import subprocess
+import sys
+from datetime import datetime
+
+
+def read_text(path):
+    if not path.endswith(".zstd"):
+        with open(path, encoding="utf-8") as fh:
+            return fh.read()
+    try:
+        import pyarrow as pa
+        return pa.CompressedInputStream(pa.OSFile(path), "zstd").read().decode("utf-8")
+    except ImportError:
+        return subprocess.run(["zstd", "-dc", path], check=True,
+                              stdout=subprocess.PIPE).stdout.decode("utf-8")
+
+
+def event_files(path):
+    if os.path.isfile(path):
+        return [path]
+    dirs = [path] if os.path.basename(path).startswith("eventlog_v2_") else \
+        glob.glob(os.path.join(path, "eventlog_v2_*"))
+    if len(dirs) != 1:
+        sys.exit(f"stream_profile: expected one event log under {path}, found {len(dirs)}")
+    files = glob.glob(os.path.join(dirs[0], "events_*"))
+    return sorted(files, key=lambda f: int(os.path.basename(f).split("_")[1]))
+
+
+def events(path):
+    for f in event_files(path):
+        for line in read_text(f).splitlines():
+            if line.strip():
+                yield json.loads(line)
+
+
+class Exec:
+    def __init__(self, e):
+        self.id = e["executionId"]
+        self.root = e.get("rootExecutionId", self.id)
+        self.start = e["time"]
+        self.end = None
+        self.desc = e.get("description") or ""
+        self.details = e.get("details") or ""
+        self.plan = e.get("physicalPlanDescription") or ""
+        self.jobs = []
+        self.compiles = []
+
+
+def plan_class(plan):
+    """(label, hash, joins, aggregates) of a physical plan description."""
+    tree = plan.split("\n\n\n")[0].split("\n")[1:]
+    ops = [re.sub(r"\s*\(\d+\)$", "", re.sub(r"^[\s:+\-|*]*", "", l)) for l in tree]
+    ops = [o for o in ops if o]
+    digest = hashlib.sha1("\n".join(ops).encode()).hexdigest()[:6]
+    joins = sum("Join" in o for o in ops)
+    aggs = sum("Aggregate" in o for o in ops)
+    m = re.search(r"Arguments: file:(\S+?),", plan)
+    top = [o for o in ops if o != "AdaptiveSparkPlan"]
+    if top and top[0].startswith("Execute InsertIntoHadoopFsRelationCommand") and m:
+        target = m.group(1)
+        r = re.search(r"/replicas/([^/]+)/(v\d+|compact-v\d+)(/delta-\d+)?$", target)
+        if r:
+            label = f"write {r.group(1)} " + (
+                "delta" if r.group(3) else "compaction" if r.group(2)[0] == "c" else "buckets")
+        else:
+            label = "write " + "/".join(re.sub(r"\d+", "N", p)
+                                        for p in target.rstrip("/").split("/")[-2:])
+    else:
+        scans = sorted(set(re.findall(r"/replicas/([^/]+)/", plan)))
+        head = next((o for o in ops if o not in ("AdaptiveSparkPlan", "Project")), "?")
+        label = "query " + head.split(" ")[0] + (" over " + ",".join(scans) if scans else "")
+        if "pmod(hash(" in plan:
+            label += " (bucket set)"
+    return label, digest, joins, aggs
+
+
+LOG_HEAD = re.compile(r"^(\d{13}) \[(.*)\] (TRACE|DEBUG|INFO|WARN|ERROR) (\S+): ?(.*)$")
+TASK_THREAD = re.compile(r"in stage (\d+)\.\d+ \(TID")
+STREAM_THREAD = re.compile(r"^stream execution thread for .*runId = ([0-9a-f-]+)\]$")
+
+
+def compiles(path):
+    """(millis, thread, source hash, compile ms) per CodeGenerator compile."""
+    out, pending, rec = [], {}, None
+
+    def flush():
+        if rec and rec[2] == "DEBUG" and rec[3] == "CodeGenerator":
+            pending.setdefault(rec[1], []).append(
+                [rec[0], rec[1], hashlib.sha1("\n".join(rec[4]).encode()).hexdigest(), 0.0])
+            out.append(pending[rec[1]][-1])
+    with open(path, encoding="utf-8", errors="replace") as fh:
+        for line in fh:
+            m = LOG_HEAD.match(line.rstrip("\n"))
+            if not m:
+                if rec:
+                    rec[4].append(line.rstrip("\n"))
+                continue
+            flush()
+            t, thread, level, logger, msg = m.groups()
+            rec = (int(t), thread, level, logger, [msg])
+            g = re.match(r"Code generated in ([0-9.]+) ms", msg)
+            if logger == "CodeGenerator" and level == "INFO" and g and pending.get(thread):
+                pending[thread].pop(0)[3] = float(g.group(1))
+                rec = None
+    flush()
+    return out
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("eventlog")
+    ap.add_argument("--codegen")
+    ap.add_argument("--query", default="", help="only queries whose label contains this")
+    ap.add_argument("--batches", help="FIRST-LAST batch ids to print and summarize")
+    args = ap.parse_args()
+    lo, hi = (map(int, args.batches.split("-")) if args.batches else (0, 1 << 62))
+
+    execs, jobs, stage_job, stage_tasks, batches, labels = {}, {}, {}, {}, {}, {}
+    for e in events(args.eventlog):
+        kind = e["Event"].rsplit(".", 1)[-1]
+        if kind == "SparkListenerSQLExecutionStart":
+            execs[e["executionId"]] = Exec(e)
+        elif kind == "SparkListenerSQLExecutionEnd":
+            if e["executionId"] in execs:
+                execs[e["executionId"]].end = e["time"]
+        elif kind == "SparkListenerJobStart":
+            p = e.get("Properties") or {}
+            jobs[e["Job ID"]] = {
+                "exec": int(p["spark.sql.execution.id"]) if "spark.sql.execution.id" in p else None,
+                "run": p.get("spark.jobGroup.id"), "batch": p.get("streaming.sql.batchId"),
+                "stages": []}
+            for s in e["Stage IDs"]:
+                stage_job[s] = e["Job ID"]
+        elif kind == "SparkListenerStageCompleted":
+            info = e["Stage Info"]
+            stage_tasks[info["Stage ID"]] = info["Number of Tasks"]
+            j = stage_job.get(info["Stage ID"])
+            if j is not None:
+                jobs[j]["stages"].append(info["Stage ID"])
+        elif kind == "StreamingQueryListener$QueryProgressEvent":
+            p = e["progress"]
+            batches[(p["runId"], p["batchId"])] = p
+        elif kind == "StreamingQueryListener$QueryStartedEvent":
+            labels[e["runId"]] = e.get("name") or e["id"][:8]
+
+    # executions of a micro-batch: its root (description "runId = …
+    # batch = N") and every execution nested under that root
+    for x in execs.values():
+        m = re.search(r"runId = ([0-9a-f-]+)\nbatch = (\d+)", x.desc)
+        x.batch = (m.group(1), int(m.group(2))) if m else None
+    for x in execs.values():
+        if not x.batch and x.root in execs:
+            x.batch = execs[x.root].batch
+    for j, info in jobs.items():
+        if info["exec"] in execs:
+            execs[info["exec"]].jobs.append(j)
+    # a query's label: the engine frame that started it, from its root
+    # executions' call site ("Engine.consumeTopic"), else its name or id
+    for x in execs.values():
+        m = re.search(r"graft\.(\w+)\$\.(\w+)\(", x.details)
+        if x.batch and m:
+            labels[x.batch[0]] = f"{m.group(1)}.{m.group(2)}"
+
+    def millis(ts):
+        return int(datetime.strptime(ts.replace("Z", "+0000"),
+                                     "%Y-%m-%dT%H:%M:%S.%f%z").timestamp() * 1000)
+    windows = collections.defaultdict(list)
+    for (run, b), p in batches.items():
+        t0 = millis(p["timestamp"])
+        windows[run].append((t0, t0 + p["durationMs"].get("triggerExecution", 0), b))
+
+    outside = collections.defaultdict(list)   # (run, batch) -> compiles outside executions
+    by_time = 0
+    comp = compiles(args.codegen) if args.codegen else []
+    for c in comp:
+        t, thread = c[0], c[1]
+        m = TASK_THREAD.search(thread)
+        if m:
+            j = stage_job.get(int(m.group(1)))
+            x = execs.get(jobs[j]["exec"]) if j is not None else None
+            if x:
+                x.compiles.append(c)
+            elif j is not None and jobs[j]["run"]:
+                outside[(jobs[j]["run"], int(jobs[j]["batch"] or -1))].append(c)
+            continue
+        m = STREAM_THREAD.match(thread)
+        if m:
+            run = m.group(1)
+            b = next((b for (s, e, b) in windows[run] if s <= t <= e), None)
+            live = [x for x in execs.values() if x.batch == (run, b) and x.id != x.root
+                    and x.start <= t <= (x.end or t)]
+            if live:
+                max(live, key=lambda x: x.start).compiles.append(c)
+            else:
+                outside[(run, b)].append(c)
+            continue
+        live = [x for x in execs.values() if x.start <= t <= (x.end or t) and x.id != x.root]
+        live = live or [x for x in execs.values() if x.start <= t <= (x.end or t)]
+        if live:
+            max(live, key=lambda x: x.start).compiles.append(c)
+            by_time += 1
+
+    def csum(cs):
+        return len(cs), len({c[2] for c in cs}), sum(c[3] for c in cs)
+
+    summary = collections.defaultdict(lambda: {"batches": 0, "compiles": 0, "classes": set(),
+                                               "jobs": 0, "tasks": 0, "trigger": 0})
+    for (run, b), p in sorted(batches.items(), key=lambda kv: millis(kv[1]["timestamp"])):
+        label = labels.get(run, run[:8])
+        if args.query not in label or not (lo <= b <= hi):
+            continue
+        inner = sorted((x for x in execs.values() if x.batch == (run, b)), key=lambda x: x.id)
+        bj = [j for j, info in jobs.items() if info["run"] == run and info["batch"] == str(b)]
+        stages = [s for j in bj for s in jobs[j]["stages"]]
+        tasks = sum(stage_tasks.get(s, 0) for s in stages)
+        allc = [c for x in inner for c in x.compiles] + outside.get((run, b), [])
+        n, d, ms = csum(allc)
+        trig = p["durationMs"].get("triggerExecution", 0)
+        print(f"{label} run {run[:8]} batch {b}: trigger {trig} ms, "
+              f"addBatch {p['durationMs'].get('addBatch', 0)} ms, {len(bj)} jobs, "
+              f"{len(stages)} stages, {tasks} tasks, {n} compiles "
+              f"({d} distinct, {ms:.0f} ms)")
+        print(f"  {'exec':>5} {'wall_ms':>7} {'jobs':>4} {'stg':>3} {'tasks':>5} "
+              f"{'join':>4} {'agg':>3} {'comp':>4} {'dist':>4} {'c_ms':>5}  step")
+        for x in inner:
+            lab, h, joins, aggs = plan_class(x.plan)
+            if x.id == x.root:
+                lab = "batch root: " + lab
+            st = [s for j in x.jobs for s in jobs[j]["stages"]]
+            n, d, ms = csum(x.compiles)
+            print(f"  {x.id:>5} {(x.end or x.start) - x.start:>7} {len(x.jobs):>4} "
+                  f"{len(st):>3} {sum(stage_tasks.get(s, 0) for s in st):>5} {joins:>4} "
+                  f"{aggs:>3} {n:>4} {d:>4} {ms:>5.0f}  {lab} [{h}]")
+        if outside.get((run, b)):
+            n, d, ms = csum(outside[(run, b)])
+            print(f"  {'-':>5} {'':>7} {'':>4} {'':>3} {'':>5} {'':>4} {'':>3} "
+                  f"{n:>4} {d:>4} {ms:>5.0f}  outside executions")
+        s = summary[label]
+        s["batches"] += 1
+        s["compiles"] += len(allc)
+        s["classes"] |= {c[2] for c in allc}
+        s["jobs"] += len(bj)
+        s["tasks"] += tasks
+        s["trigger"] += trig
+    print()
+    for label, s in summary.items():
+        k = max(s["batches"], 1)
+        line = (f"summary {label}: {s['batches']} batches, trigger {s['trigger'] / k:.0f} ms, "
+                f"{s['jobs'] / k:.1f} jobs, {s['tasks'] / k:.1f} tasks per batch")
+        if args.codegen:
+            line += (f"; {s['compiles'] / k:.1f} compiles per batch, "
+                     f"{len(s['classes'])} distinct classes over the window")
+        print(line)
+    if args.codegen:
+        print(f"compiles attributed by time (non-task driver threads): {by_time} of {len(comp)}")
+
+
+if __name__ == "__main__":
+    main()
