@@ -66,18 +66,11 @@ object Engine {
   final case class EngineResult(
       topics: Seq[String],
       replicas: Map[String, Replica],
-      /** Secondary `(fk, synced_id)` key indexes, one per sideloaded child
-        * model whose parent association FK is a declared child attribute —
-        * the structure C11 disassociation resolves doomed keys from
-        * (two longs + timestamps per row) instead of scanning the child
-        * table. Maintained inside every merge/destroy of the child, under
-        * the child replica's lock. */
+      /** Always empty: the engine no longer builds key indexes (C11
+        * resolves doomed keys from a column-pruned read of the child
+        * replica). Kept only because `perfbench`'s trace still reads it;
+        * the field goes with the next `perfbench` change. */
       keyIndexes: Map[String, Replica] = Map.empty)
-
-  /** A child model's key index: the `(synced_id, fk…)` projection of its
-    * replica, kept in lockstep with it (same LWW decisions — it merges the
-    * same winner rows under the same lock). */
-  private final case class KeyIndex(replica: Replica, fks: Seq[String])
 
   /** Consumer-side behavior knobs, all registry-adjacent (the reference
     * configures these per consumer app):
@@ -108,7 +101,9 @@ object Engine {
     *    silently degrades the C12 capture path to an O(table) read per
     *    micro-batch (the trait's documented fallback) — implement
     *    pruning for any at-scale backend; the contract suite pins it for
-    *    ParquetReplica and the double.
+    *    ParquetReplica and the double. Likewise one that does not
+    *    override `Replica.read(columns)` resolves C11's doomed keys from
+    *    a full-width read of the child table.
     *  - `changesetKey`: P24 — when set, change feeds may carry their
     *    `__changeset` sealed at rest ([[graft.producer.ChangesetCrypto]],
     *    an opaque string column); observer resolution opens it
@@ -122,8 +117,8 @@ object Engine {
     *    via `ChangesetCrypto.seal(col, key, strict = true)`.
     *  - `maintainEvery` / `retainVersions`: live-mode storage maintenance.
     *    Every `maintainEvery` micro-batches, each of the topic's replicas
-    *    (and key indexes) runs `vacuum(retainVersions)` — without it a
-    *    long-running `Engine.start` deployment accumulates one version per
+    *    runs `vacuum(retainVersions)` — without it a long-running
+    *    `Engine.start` deployment accumulates one version per
     *    micro-batch per replica, unboundedly. `retainVersions` keeps a
     *    window for concurrent readers whose lazy plans still reference
     *    recent versions (the Delta retention analogue); 0 disables
@@ -167,12 +162,10 @@ object Engine {
         * Every merge, destroyed rows included, is that one-job delta
         * append: a soft delete keeps the current attributes in the
         * read-time fold ([[Replica.preserveOnDestroy]]) instead of
-        * joining against the current rows. The engine's key indexes
-        * take the same mode and cadence, so their per-batch merge is the
-        * same one-job delta append (a C11 destroy folds the index's
-        * delta log before its anti-join). The model replicas ignore it
-        * when a custom `replicaFactory` is set; the key indexes, always
-        * engine-built, do not. */
+        * joining against the current rows. C11 reads the child's key
+        * columns through the same fold, and its destroy folds the delta
+        * log before its anti-join. Ignored when a custom
+        * `replicaFactory` is set. */
       mergeOnRead: Boolean = false,
       replicaCompactEvery: Int = 8,
       /** Store each model replica's `synced_data` payload as Spark-4
@@ -235,17 +228,15 @@ object Engine {
     // (genesis replica topics are consumed alongside their primaries,
     // as the reference's consumer subscribes both)
     val replicas = makeReplicas(spark, registry, workDir, options)
-    val indexes = makeKeyIndexes(spark, registry, workDir, replicas, options)
     val consumers = consumedTopicNames(registry).map { case (t, name) =>
-      consumeTopic(spark, registry, t, name, topics, replicas, indexes,
+      consumeTopic(spark, registry, t, name, topics, replicas,
         workDir, options, Trigger.AvailableNow())
     }
     consumers.foreach(_.awaitTermination())
     // drained: no concurrent writers, so reclaim unreachable versions
-    (replicas.values ++ indexes.values.map(_.replica)).foreach(_.vacuum())
+    replicas.values.foreach(_.vacuum())
 
-    EngineResult(registry.topics.map(registry.topicName), replicas,
-      indexes.map { case (k, v) => k -> v.replica })
+    EngineResult(registry.topics.map(registry.topicName), replicas)
   }
 
   /** Live deployment form: start every producer and consumer query
@@ -266,18 +257,16 @@ object Engine {
     val topics = transport.getOrElse(
       new FileTopics(s"$workDir/topics", options.sourceMaxFilesPerTrigger))
     val replicas = makeReplicas(spark, registry, workDir, options)
-    val indexes = makeKeyIndexes(spark, registry, workDir, replicas, options)
     val producers = registry.topics.map { t =>
       produceTopic(spark, registry, t, bindings, topics,
         s"$workDir/cp/produce/${registry.topicName(t)}", trigger, options)
     }
     val consumers = consumedTopicNames(registry).map { case (t, name) =>
-      consumeTopic(spark, registry, t, name, topics, replicas, indexes,
+      consumeTopic(spark, registry, t, name, topics, replicas,
         workDir, options, trigger)
     }
     (producers ++ consumers,
-      EngineResult(registry.topics.map(registry.topicName), replicas,
-        indexes.map { case (k, v) => k -> v.replica }))
+      EngineResult(registry.topics.map(registry.topicName), replicas))
   }
 
   /** Every (topic, physical name) the consumer subscribes: the primary
@@ -352,72 +341,6 @@ object Engine {
         target.migrateColumn(replicaSchemaFor(m, !toVariant).toDDL,
           "synced_data",
           c => if (toVariant) parse_json(c) else to_json(c))
-    }
-
-  /** FK columns to index per sideloaded child model: every parent hasMany
-    * association whose FK is a declared child attribute (the precondition
-    * for C11 disassociation). A child reachable from several parents
-    * carries every parent FK in one index. */
-  private def fkIndexAttrs(registry: Registry): Map[String, Seq[graft.registry.Attribute]] = {
-    val pairs = for {
-      m <- registry.allModels
-      dep <- m.sideloads
-      assoc <- m.hasMany.find(_.model == dep).toSeq
-      child <- registry.modelDef(dep).toSeq
-      attr <- child.attributes.find(_.name == assoc.fk).toSeq
-    } yield dep -> attr
-    pairs.groupBy(_._1).map { case (dep, as) =>
-      dep -> as.map(_._2).distinctBy(_.name)
-    }
-  }
-
-  /** One tiny bucketed replica per FK-indexed child model, holding only
-    * `(synced_id, fk…, timestamps)` — O(rows × two longs), so even a
-    * full-index scan is cheap where a child-table scan is not. Always a
-    * [[ParquetReplica]] (an engine-internal acceleration structure, not
-    * user storage — a custom `replicaFactory` does not change it), in the
-    * replicas' write mode (`mergeOnRead`, `replicaCompactEvery`): one
-    * replica write path.
-    *
-    * An index that does not exist yet while its child replica already has
-    * rows (a workDir created before key indexes existed, or a custom
-    * `replicaFactory` pointing at pre-existing data) is bootstrapped from
-    * the replica's key projection before any query starts — C11 resolving
-    * doomed keys from an incomplete index would let children that should
-    * disassociate silently survive. An empty replica no-ops inside the
-    * bootstrap merge (no version bump), so the probe costs one bounded
-    * bucket collect. */
-  private def makeKeyIndexes(spark: SparkSession, registry: Registry,
-      workDir: String, replicas: Map[String, Replica],
-      options: EngineOptions): Map[String, KeyIndex] =
-    fkIndexAttrs(registry).map { case (dep, attrs) =>
-      val child = registry.modelDef(dep).get
-      val schema = org.apache.spark.sql.types.StructType(
-        Seq(org.apache.spark.sql.types.StructField("synced_id",
-          org.apache.spark.sql.types.LongType, nullable = false)) ++
-          attrs.map(a => org.apache.spark.sql.types.StructField(a.name, a.dataType)) ++
-          Seq("synced_created_at", "synced_updated_at", "synced_canceled_at")
-            .map(org.apache.spark.sql.types.StructField(_,
-              org.apache.spark.sql.types.TimestampType)))
-      val idx = new ParquetReplica(spark, s"$workDir/replicas/${dep}__keyidx",
-        schema.toDDL, buckets = child.buckets,
-        mergeOnRead = options.mergeOnRead,
-        compactEvery = options.replicaCompactEvery)
-      val ki = KeyIndex(idx, attrs.map(_.name))
-      val rep = replicas(dep)
-      if (idx.currentVersion < 0 && !rep.neverCommitted) rep.withLock {
-        if (idx.currentVersion < 0) {
-          // replica rows → merge shape (the canceled_at alias is the
-          // replica-vs-update naming difference), then the SAME
-          // indexSlice projection every index merge goes through — one
-          // home for the index-row contract
-          val shaped = rep.read()
-            .withColumn("event_type", lit(EventType.Updated))
-            .withColumnRenamed("synced_canceled_at", "canceled_at")
-          idx.merge(indexSlice(shaped, ki))
-        }
-      }
-      dep -> ki
     }
 
   /** P16–P18 through the registry-derived serializer: stream the model's
@@ -695,7 +618,6 @@ object Engine {
       topicName: String,
       source: TopicSource,
       replicas: Map[String, Replica],
-      indexes: Map[String, KeyIndex],
       workDir: String,
       options: EngineOptions,
       trigger: Trigger): StreamingQuery = {
@@ -716,11 +638,9 @@ object Engine {
       else EnvelopeCodec.explodeRecords(EnvelopeCodec.decode(deduped))
     // live-mode maintenance cadence (one counter per topic query)
     val batchCounter = new java.util.concurrent.atomic.AtomicLong()
-    val maintained: Seq[Replica] = {
-      val models = t.models.flatMap(m => m.name +: m.sideloads).distinct
-      models.flatMap(replicas.get) ++
-        models.flatMap(indexes.get).map(_.replica)
-    }
+    val maintained: Seq[Replica] =
+      t.models.flatMap(m => m.name +: m.sideloads).distinct
+        .flatMap(replicas.get)
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$workDir/cp/consume/$topicName")
@@ -768,7 +688,7 @@ object Engine {
           // this micro-batch skip their merge entirely, driver-side
           val stats = collectStats(b, t)
           t.models.foreach(
-            mergeModel(registry, t, _, b, replicas, indexes, topicName,
+            mergeModel(registry, t, _, b, replicas, topicName,
               consumedDir, options, stats, batchId))
         }
         // C17: poison batches park in the DLQ instead of failing the query
@@ -859,7 +779,6 @@ object Engine {
       m: ModelDef,
       batch: DataFrame,
       replicas: Map[String, Replica],
-      indexes: Map[String, KeyIndex],
       topicName: String,
       consumedDir: Option[String],
       options: EngineOptions,
@@ -877,29 +796,15 @@ object Engine {
 
     if (t.importMode) {
       val shaped = shapeRecords(m, parsed, options.syncedDataVariant)
-      val idx = indexes.get(m.name)
-      // replica + index mutate under ONE shared replica lock (as
-      // mergeRecords and the C11 block do): a concurrent C11 key
-      // resolution on another topic must never observe an index missing
-      // just-merged rows between the two writes
-      replicas(m.name).withLock {
-        if (slice.nLive > 0) {
-          val live = shaped.filter(col("event_type") =!= EventType.Destroyed)
-          replicas(m.name).merge(live)
-          idx.foreach(ki => ki.replica.merge(indexSlice(live, ki)))
-        }
-        if (slice.nDestroyed > 0) {
-          val destroyedIds = shaped
-            .filter(col("event_type") === EventType.Destroyed)
-            .select(col("synced_id")).localCheckpoint(true)
-          replicas(m.name).destroy(destroyedIds)
-          idx.foreach(_.replica.destroy(destroyedIds))
-        }
-      }
+      if (slice.nLive > 0) replicas(m.name).merge(
+        shaped.filter(col("event_type") =!= EventType.Destroyed))
+      if (slice.nDestroyed > 0) replicas(m.name).destroy(
+        shaped.filter(col("event_type") === EventType.Destroyed)
+          .select(col("synced_id")))
       return
     }
 
-    mergeRecords(m, parsed, replicas(m.name), indexes.get(m.name), topicName,
+    mergeRecords(m, parsed, replicas(m.name), topicName,
       consumedDir, options, batchId, hasDestroys = slice.nDestroyed > 0)
 
     // C4 recursion: embedded sideload payloads persist as their own models
@@ -917,8 +822,8 @@ object Engine {
         .select(lit(EventType.Updated).as("event_type"), col("rec"),
           to_json(col("rec")).as("payload_json"))
       // sideloaded children are all stamped `updated`: no destroys
-      mergeRecords(child, childParsed, replicas(dep), indexes.get(dep),
-        topicName, consumedDir, options, batchId, hasDestroys = false)
+      mergeRecords(child, childParsed, replicas(dep), topicName,
+        consumedDir, options, batchId, hasDestroys = false)
 
       // C11: children of touched parents absent from the incoming id list
       // disassociate — needs the child replica to carry the FK attribute.
@@ -937,41 +842,27 @@ object Engine {
         // semi+anti join with the micro-batch parent set broadcast,
         // collected in one action), then rewrite only the buckets those
         // keys hash into — never an O(child table) rewrite. The common
-        // case, no child dropped, skips both destroys: no probe, no MoR
-        // delta fold, no version. The keys resolve from the secondary
-        // (fk, synced_id) index when the child has one (two longs per
-        // row — the reference's `WHERE parent_id = ?` index lookup,
-        // persistor.rb:102-152); a child-table key scan remains only as
-        // the indexless fallback. The resolution itself is NOT bounded
-        // by the batch: it scans the whole index, and under
-        // merge-on-read `read()` reconciles every index key (base plus
-        // every delta epoch, one shuffle) on each batch — O(index).
+        // case, no child dropped, skips the destroy: no probe, no MoR
+        // delta fold, no version. The keys resolve from a column-pruned
+        // read of the child replica's (synced_id, fk) columns — the
+        // reference's `WHERE parent_id = ?` lookup on the child table,
+        // persistor.rb:102-152 — which never scans the payload. The
+        // resolution is NOT bounded by the batch: it reads every child
+        // key, and under merge-on-read folds the base plus every delta
+        // epoch in one shuffle on each batch — O(child keys).
         val rep = replicas(dep)
         rep.withLock {
-          val childKeys = indexes.get(dep).map(_.replica.read())
-            .getOrElse(rep.read())
           val doomedKeys = Persistor.disassociatedChildKeys(
-            childKeys, incoming, parentKey = assoc.fk,
-            childKey = "synced_id")
+            rep.read(Seq("synced_id", assoc.fk)), incoming,
+            parentKey = assoc.fk, childKey = "synced_id")
           val rows = doomedKeys.collect()
-          if (rows.nonEmpty) {
-            val doomed = batch.sparkSession.createDataFrame(
-              java.util.Arrays.asList(rows: _*), doomedKeys.schema)
-            rep.destroy(doomed)
-            indexes.get(dep).foreach(_.replica.destroy(doomed))
-          }
+          if (rows.nonEmpty)
+            rep.destroy(batch.sparkSession.createDataFrame(
+              java.util.Arrays.asList(rows: _*), doomedKeys.schema))
         }
       }
     }
   }
-
-  /** Project merge-shaped rows onto a child's key-index schema
-    * (`event_type` and `canceled_at` ride along for the LWW merge). */
-  private def indexSlice(shaped: DataFrame, ki: KeyIndex): DataFrame =
-    shaped.select(
-      (Seq("event_type", "synced_id") ++ ki.fks ++
-        Seq("synced_created_at", "synced_updated_at", "canceled_at"))
-        .map(col): _*)
 
   /** Project parsed records onto the model's replica update shape: C5
     * renames, link flattening, timestamp casts, raw payload carry
@@ -1010,7 +901,6 @@ object Engine {
       m: ModelDef,
       parsed: DataFrame,
       replica: Replica,
-      index: Option[KeyIndex],
       topicName: String,
       consumedDir: Option[String],
       options: EngineOptions,
@@ -1055,10 +945,6 @@ object Engine {
             .localCheckpoint(true))
         else None
       replica.merge(latest, prepare)
-      // the key index merges the SAME winner rows under the SAME lock, so
-      // it can never diverge from the replica (FKs preserved under destroy
-      // exactly as the replica preserves attributes)
-      index.foreach(ki => ki.replica.merge(indexSlice(latest, ki), prepare))
       // C14: publish consumed events next to the merge
       consumedDir.foreach { dir =>
         val localChanges = before.map { b =>

@@ -71,11 +71,7 @@ object Persistor {
     // sub-second streaming merge path (round-15: the fold cost ~8
     // analyzer passes per batch of pure fixed latency)
     updates.select(targetCols.map {
-      case "synced_canceled_at" =>
-        when(col("event_type") === "destroyed",
-          coalesce(col("canceled_at"), col("synced_updated_at")))
-          .otherwise(col("canceled_at")) // null clears = restore
-          .as("synced_canceled_at")
+      case "synced_canceled_at" => cancelStamp.as("synced_canceled_at")
       case c if updates.columns.contains(c) => col(c)
       case c => lit(null).as(c)
     } :+ col("event_type").as("__event"): _*)
@@ -92,18 +88,23 @@ object Persistor {
     * [[graft.streaming.Replica.preserveOnDestroy]]. */
   def shapeForMergeTyped(schema: org.apache.spark.sql.types.StructType,
       updates: DataFrame, destroyedMarker: Option[String] = None): DataFrame = {
-    val destroyed = col("event_type") === "destroyed"
-    val canceled = when(destroyed,
-      coalesce(col("canceled_at"), col("synced_updated_at")))
-      .otherwise(col("canceled_at"))
     updates.select(schema.fields.toSeq.map { f =>
       val src =
-        if (f.name == "synced_canceled_at") canceled
+        if (f.name == "synced_canceled_at") cancelStamp
         else if (updates.columns.contains(f.name)) col(f.name)
         else lit(null)
       src.cast(f.dataType).as(f.name)
-    } ++ destroyedMarker.map(when(destroyed, lit(true)).as(_)): _*)
+    } ++ destroyedMarker.map(when(isDestroyed, lit(true)).as(_)): _*)
   }
+
+  private val isDestroyed: Column = col("event_type") === "destroyed"
+
+  /** C9's `synced_canceled_at` of an update row: a destroy stamps the
+    * payload's `canceled_at`, else its event time; any other event takes
+    * the payload value, so a null clears the stamp (restore). */
+  private val cancelStamp: Column =
+    when(isDestroyed, coalesce(col("canceled_at"), col("synced_updated_at")))
+      .otherwise(col("canceled_at"))
 
   def merge(
       target: DataFrame,
@@ -178,9 +179,10 @@ object Persistor {
     * child table (reference semantics: persistor.rb:102-152,
     * README.md:869-874). The semi + anti joins read only the two key
     * columns, but they stream ALL of `children`: the caller's read of
-    * the child table or its key index decides the real cost, and a
-    * merge-on-read `read()` reconciles every key (base plus the whole
-    * delta log, one shuffle) on each call. */
+    * the child table decides the real cost — [[graft.Engine]] passes a
+    * column-pruned `Replica.read(columns)`, which under merge-on-read
+    * still folds every key (base plus the whole delta log, one shuffle)
+    * on each call. */
   def disassociatedChildKeys(
       children: DataFrame,
       incoming: DataFrame,

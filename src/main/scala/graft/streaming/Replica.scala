@@ -16,21 +16,23 @@ trait Replica {
   /** Current table state. */
   def read(): DataFrame
 
+  /** Current table state restricted to `columns` — a key-column read
+    * (C11 doomed-key resolution) that storage able to scan fewer columns
+    * overrides, so it never reads the payload. */
+  def read(columns: Seq[String]): DataFrame = read().select(columns.map(col): _*)
+
   /** Current rows, restricted to the storage units that can contain the
     * given keys (`keys` must carry a `synced_id` column). The default is
     * the full table — storage layouts that can prune (hash buckets,
     * partitions, a transactional format's file-level stats) override this
-    * so key-local reads (C12 change capture, C11 key resolution) cost
-    * O(batch ∩ buckets) I/O instead of O(table). Callers must still
-    * filter/join: the result may contain rows for OTHER keys that share a
-    * storage unit. */
+    * so key-local reads (C12 change capture) cost O(batch ∩ buckets) I/O
+    * instead of O(table). Callers must still filter/join: the result may
+    * contain rows for OTHER keys that share a storage unit. */
   def readBuckets(keys: DataFrame): DataFrame = read()
 
   /** True when no commit has ever been published — a brand-new table.
-    * Lets startup-time work (key-index bootstrap) skip a table read it
-    * knows must be empty. The conservative default (`false`) makes
-    * unknown storage pay the read instead of risking a skipped
-    * bootstrap. */
+    * The conservative default (`false`) claims nothing about unknown
+    * storage. */
   def neverCommitted: Boolean = false
 
   /** LWW-merge `updates` (shaped per [[Persistor.merge]] contract).
@@ -73,9 +75,9 @@ object Replica {
     Set("synced_id", "synced_updated_at", "synced_canceled_at", "synced_data")
 
   /** The target columns a `destroyed` update keeps from the current row
-    * under [[preserveOnDestroy]]: for a model replica its attributes,
-    * link columns and `synced_created_at`; for a key index its FKs and
-    * `synced_created_at`. */
+    * under [[preserveOnDestroy]]: a model replica's attributes, link
+    * columns and `synced_created_at` (of a column-pruned read, the
+    * requested columns among them). */
   def preservedColumns(targetCols: Seq[String]): Seq[String] =
     targetCols.filterNot(notPreserved)
 
@@ -255,15 +257,30 @@ final class ParquetReplica(spark: SparkSession, root: String,
       }
     }
 
-  private def empty: DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  private def readDirs(dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) empty
-    else spark.read.schema(schema).parquet(dirs.map(d => s"$root/$d"): _*)
+  private def readDirs(dirs: Seq[String],
+      sch: org.apache.spark.sql.types.StructType = schema): DataFrame =
+    if (dirs.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+    else spark.read.schema(sch).parquet(dirs.map(d => s"$root/$d"): _*)
 
   def read(): DataFrame = rows(current()._2)
+
+  /** Column-pruned read: the scan and the merge-on-read fold carry only
+    * `columns` plus the LWW inputs (`synced_id`, `synced_updated_at`,
+    * `synced_created_at`; the destroy marker rides the delta scan), never
+    * the payload. Equal to `read().select(columns)` while every delta
+    * epoch holds at most one row per key — [[graft.Engine]]'s in-batch
+    * keep-latest guarantees it — because then the fold's full-row
+    * tiebreak never decides a winner. */
+  override def read(columns: Seq[String]): DataFrame = {
+    val keep = (columns ++
+      Seq("synced_id", "synced_updated_at", "synced_created_at")).toSet
+    val narrow = org.apache.spark.sql.types.StructType(
+      schema.filter(f => keep(f.name)))
+    val m = current()._2
+    reconcile(readDirs(m.dirs.values.toSeq, narrow), m.deltas, narrow)
+      .select(columns.map(col): _*)
+  }
 
   /** Every row of one version: its base buckets plus its delta log. */
   private def rows(m: Manifest): DataFrame =
@@ -314,12 +331,15 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * as if its [[Replica.preservedColumns]] were `coalesce(acc, x)`,
     * both in the comparison (its effective ts falls back to the kept
     * `synced_created_at`) and in the row it leaves when it wins. Base
-    * rows and epochs without the column read the marker as null. */
-  private def reconcile(base: DataFrame,
-      deltas: Seq[(Long, String)]): DataFrame = {
+    * rows and epochs without the column read the marker as null.
+    *
+    * `sch` is the row shape folded: the replica schema, or the narrower
+    * one of a column-pruned [[read]] (`base` is read with it). */
+  private def reconcile(base: DataFrame, deltas: Seq[(Long, String)],
+      sch: org.apache.spark.sql.types.StructType = schema): DataFrame = {
     if (deltas.isEmpty) return base
     val marker = Replica.DestroyedMarker
-    val deltaSchema = schema.add(marker,
+    val deltaSchema = sch.add(marker,
       org.apache.spark.sql.types.BooleanType)
     // `__seq` derives from the manifest per delta directory (the write
     // path stopped storing it — see deltaMerge's codegen-cache note); a
@@ -329,24 +349,20 @@ final class ParquetReplica(spark: SparkSession, root: String,
     // reads (round-15): per-read analysis/planning grew linearly in the
     // delta-log length — bounded by compactEvery, but a stalled
     // compactor at scale made every MoR read progressively costlier to
-    // PLAN. The epoch seq is recovered from each row's source directory
-    // (`delta-<seq>`, the name [[deltaMerge]] writes — verified against
-    // the manifest below, which stays authoritative: any mismatch falls
-    // back to the per-directory union).
-    val dirEncodesSeq = deltas.forall { case (sq, dir) =>
-      dir.split("/").last == s"delta-$sq" }
-    val d =
-      if (dirEncodesSeq)
-        spark.read.schema(deltaSchema)
-          .parquet(deltas.map { case (_, dir) => s"$root/$dir" }: _*)
-          .withColumn("__seq",
-            regexp_extract(input_file_name(), "delta-([0-9]+)/[^/]*$", 1)
-              .cast("long"))
-      else deltas
-        .map { case (sq, dir) => spark.read.schema(deltaSchema)
-          .parquet(s"$root/$dir").withColumn("__seq", lit(sq)) }
-        .reduce(_ unionByName _)
-    val cols = schema.fieldNames.toSeq
+    // PLAN. The epoch seq is recovered from each row's source directory:
+    // [[deltaMerge]] names every epoch `v<n>/delta-<seq>` and compaction
+    // only carries entries forward, so a manifest entry of any other
+    // shape is corruption, not a layout to read around.
+    deltas.foreach { case (sq, dir) =>
+      require(dir.split("/").last == s"delta-$sq",
+        s"replica $root: delta entry $sq -> $dir is not named delta-$sq")
+    }
+    val d = spark.read.schema(deltaSchema)
+      .parquet(deltas.map { case (_, dir) => s"$root/$dir" }: _*)
+      .withColumn("__seq",
+        regexp_extract(input_file_name(), "delta-([0-9]+)/[^/]*$", 1)
+          .cast("long"))
+    val cols = sch.fieldNames.toSeq
     val kept = Replica.preservedColumns(cols).toSet
     val maxTs = lit("9999-12-31 00:00:00").cast("timestamp")
     val minTs = lit("0001-01-01 00:00:00").cast("timestamp")
@@ -364,7 +380,7 @@ final class ParquetReplica(spark: SparkSession, root: String,
     // between reads) and sorts with an explicit (s, o, l, k) comparator
     // that never touches the variant itself. String mode keeps the
     // default ordering bit-for-bit; the marker `d` packs after `r`.
-    val hasVariant = schema.exists(
+    val hasVariant = sch.exists(
       _.dataType.isInstanceOf[org.apache.spark.sql.types.VariantType])
     // sort key: epoch first, then effective-ts with null AS +∞ (within
     // one epoch the in-batch rule is the same max — null persists)

@@ -82,6 +82,7 @@ object StreamBench {
   private final class StampingReplica(inner: Replica,
       merges: ConcurrentLinkedQueue[(Long, Long)]) extends Replica {
     def read(): DataFrame = inner.read()
+    override def read(columns: Seq[String]): DataFrame = inner.read(columns)
     override def readBuckets(keys: DataFrame): DataFrame = inner.readBuckets(keys)
     override def neverCommitted: Boolean = inner.neverCommitted
     def merge(updates: DataFrame,

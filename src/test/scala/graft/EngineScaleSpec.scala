@@ -7,7 +7,7 @@ import graft.registry._
 import graft.streaming.{ParquetReplica, Replica}
 
 /** Scale-path guarantees of the engine's consumer half: bucket-pruned
-  * reads (C12 capture), index-resolved disassociation (C11), empty-slice
+  * reads (C12 capture), key-column disassociation (C11), empty-slice
   * skipping, live-mode storage maintenance, genesis pacing, and the
   * multi-record wire path — the behaviors that decide whether a
   * micro-batch costs O(batch) or O(table) at 100 TB. */
@@ -16,10 +16,13 @@ class EngineScaleSpec extends SparkSpec {
 
   /** Replica proxy counting FULL-table reads issued by the engine — the
     * anti-pattern these tests exist to keep out of the merge hot path.
-    * Bucket-pruned reads delegate without counting. */
-  private final class CountingReplica(underlying: Replica) extends Replica {
+    * Bucket-pruned and column-pruned reads delegate without counting. */
+  private final class CountingReplica(val underlying: ParquetReplica)
+      extends Replica {
     val fullReads = new java.util.concurrent.atomic.AtomicInteger()
     def read(): DataFrame = { fullReads.incrementAndGet(); underlying.read() }
+    override def read(columns: Seq[String]): DataFrame =
+      underlying.read(columns)
     override def readBuckets(keys: DataFrame): DataFrame =
       underlying.readBuckets(keys)
     override def neverCommitted: Boolean = underlying.neverCommitted
@@ -93,23 +96,18 @@ class EngineScaleSpec extends SparkSpec {
         .write.parquet(s"$src/$file")
     def run(opts: Engine.EngineOptions = Engine.EngineOptions()): Engine.EngineResult =
       Engine.runAvailableNow(spark, reg, bindings, work, options = opts)
-    /** The replica and the key index hold the same (order_id, line) pairs. */
-    def assertLockstep(res: Engine.EngineResult): Unit = {
-      val idxPairs = res.keyIndexes("order_line").read()
-        .select("order_id", "synced_id").as[(Long, Long)].collect().toSet
-      val repPairs = res.replicas("order_line").read()
-        .select("order_id", "synced_id").as[(Long, Long)].collect().toSet
-      assert(idxPairs == repPairs, s"index diverged: ${idxPairs.diff(repPairs)}")
-    }
+    def childIds(res: Engine.EngineResult): Set[Long] =
+      res.replicas("order_line").read()
+        .select("synced_id").as[Long].collect().toSet
   }
 
   /** C11 disassociation with C12 capture on, every model replica behind a
-    * [[CountingReplica]]: the dropped child leaves the replica and the key
-    * index in lockstep, and no engine path reads a full model table. */
+    * [[CountingReplica]]: the dropped child leaves the replica, and no
+    * engine path reads a full model table. */
   private def c11WithoutFullReads(mergeOnRead: Boolean): Unit = {
     val fx = new C11Fixture(if (mergeOnRead) "nscm" else "nsc")
-    // compaction never runs on its own here: under merge-on-read the key
-    // index still holds pending delta epochs when the drop arrives
+    // compaction never runs on its own here: under merge-on-read the child
+    // replica still holds pending delta epochs when the drop arrives
     val compactEvery = 100
     // every replica the engine touches goes through the counting proxy;
     // C12 tracking is ON, so the capture path runs too
@@ -123,9 +121,10 @@ class EngineScaleSpec extends SparkSpec {
           compactEvery = compactEvery)))))
 
     fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
-    val idx = fx.run(opts).keyIndexes("order_line").asInstanceOf[ParquetReplica]
-    if (mergeOnRead) assert(idx.deltaEntries(idx.currentVersion).nonEmpty,
-      "the key index must take the merge-on-read delta append")
+    fx.run(opts)
+    val child = proxies("order_line").underlying
+    if (mergeOnRead) assert(child.deltaEntries(child.currentVersion).nonEmpty,
+      "the child replica must hold pending delta epochs")
     // parent 1 republishes with line 4 gone — the disassociating merge
     fx.dropped = Set(4L)
     fx.orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
@@ -133,47 +132,44 @@ class EngineScaleSpec extends SparkSpec {
     val scans = proxies.map { case (n, p) => n -> p.fullReads.get() }.toMap
 
     // correctness: the vanished child disassociated, everything else kept
-    val left = res.replicas("order_line").read()
-      .select("synced_id").as[Long].collect().toSet
+    val left = fx.childIds(res)
     assert(left == (1L to 32L).toSet - 4L, s"got $left")
-    // the key index tracked every merge and destroy in lockstep
-    fx.assertLockstep(res)
-    // the destroy folded the index's pending epochs before its anti-join
-    if (mergeOnRead) assert(idx.deltaEntries(idx.currentVersion).isEmpty,
-      "the key-index destroy must fold its delta log first")
+    // the destroy folded the pending epochs before its anti-join
+    if (mergeOnRead) assert(child.deltaEntries(child.currentVersion).isEmpty,
+      "the C11 destroy must fold the delta log first")
     // THE point: no engine path issued a full-table read — C12 captures
-    // went through readBuckets, C11 key resolution through the index
+    // went through readBuckets, C11 key resolution through read(columns)
     assert(scans.values.sum == 0, s"full-table reads during merges: $scans")
+    // the child replica is the only table C11 reads or writes
+    val keyIdx = Files.walk(java.nio.file.Paths.get(fx.work))
+      .filter(_.getFileName.toString.contains("__keyidx")).count()
+    assert(keyIdx == 0, "no key-index directory may be created")
   }
 
   test("C11/C12: merge, capture and disassociation never read a full table") {
     c11WithoutFullReads(mergeOnRead = false)
   }
 
-  test("C11/C12 under merge-on-read: the dropped child leaves the replica " +
-      "and the pending-delta key index in lockstep, with no full read") {
+  test("C11/C12 under merge-on-read: the dropped child leaves a replica " +
+      "with pending delta epochs, with no full read") {
     c11WithoutFullReads(mergeOnRead = true)
   }
 
   test("merge-on-read: a batch that drops no child appends exactly one " +
-      "epoch to the child replica and its key index, and no destroy publishes") {
+      "epoch to the child replica, and no destroy publishes") {
     val fx = new C11Fixture("nsk")
     val opts = Engine.EngineOptions(mergeOnRead = true, replicaCompactEvery = 100)
     fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
-    val res = fx.run(opts)
-    val tables = Seq(res.replicas("order_line"), res.keyIndexes("order_line"))
-      .map(_.asInstanceOf[ParquetReplica])
-    val before = tables.map(t => t.currentVersion -> t.deltaEntries(t.currentVersion))
+    val t = fx.run(opts).replicas("order_line").asInstanceOf[ParquetReplica]
+    val (v, deltas) = t.currentVersion -> t.deltaEntries(t.currentVersion)
     // parent 1 republishes with all four lines: C11 runs, dooms nothing
     fx.orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
-    fx.assertLockstep(fx.run(opts))
-    tables.zip(before).foreach { case (t, (v, deltas)) =>
-      // one version, one appended epoch: no fold and no destroy publish
-      assert(t.currentVersion == v + 1, s"$t: v$v -> v${t.currentVersion}")
-      val now = t.deltaEntries(t.currentVersion)
-      assert(now.size == deltas.size + 1 && now.startsWith(deltas),
-        s"expected one appended epoch: $deltas -> $now")
-    }
+    assert(fx.childIds(fx.run(opts)) == (1L to 32L).toSet)
+    // one version, one appended epoch: no fold and no destroy publish
+    assert(t.currentVersion == v + 1, s"v$v -> v${t.currentVersion}")
+    val now = t.deltaEntries(t.currentVersion)
+    assert(now.size == deltas.size + 1 && now.startsWith(deltas),
+      s"expected one appended epoch: $deltas -> $now")
   }
 
   test("merge-on-read: a batch carrying a parent destroy appends exactly " +
@@ -197,32 +193,20 @@ class EngineScaleSpec extends SparkSpec {
       .select($"total", $"synced_canceled_at".isNotNull).as[(Double, Boolean)]
       .collect().toSeq
     assert(three == Seq((300.0, true)), s"order 3: $three")
-    fx.assertLockstep(res)
   }
 
-  test("key index bootstraps from a pre-existing child replica") {
+  test("C11 on a resumed workDir disassociates children merged before " +
+      "the restart") {
     val fx = new C11Fixture("nsb")
     fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
     fx.run()
-    // a workDir from before key indexes existed: the child replica has 32
-    // rows but the index is gone entirely
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete()
-    }
-    rm(new java.io.File(s"${fx.work}/replicas/order_line__keyidx"))
-
-    // parent 1 republishes with line 4 gone; an UNbootstrapped index knows
-    // only the just-merged children {1,2,3}, so doomed = ∅ and line 4
-    // silently survives — the divergence this test pins out
+    // a second engine run on the same workDir: parent 1 republishes with
+    // line 4 gone, and C11 must find line 4 among the children the first
+    // run merged, not only among this batch's {1,2,3}
     fx.dropped = Set(4L)
     fx.orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
-    val res = fx.run()
-
-    val left = res.replicas("order_line").read()
-      .select("synced_id").as[Long].collect().toSet
+    val left = fx.childIds(fx.run())
     assert(left == (1L to 32L).toSet - 4L, s"got $left")
-    // and the rebuilt index is complete, in lockstep with the replica
-    fx.assertLockstep(res)
   }
 
   test("models absent from a micro-batch skip their merge path entirely") {
@@ -363,8 +347,8 @@ class EngineScaleSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-sharedchild").toString
     val src = s"$tmp/src"
     // order (topic A) and invoice (topic B) both sideload `item`: their
-    // consumer queries run CONCURRENTLY and both merge the item replica
-    // and its key index — the per-root lock must keep them in lockstep
+    // consumer queries run CONCURRENTLY and both merge the item replica —
+    // the per-root lock must keep either from losing the other's rows
     val orderDef = ModelDef("order",
       attributes = Seq(Attribute("total", org.apache.spark.sql.types.DoubleType)),
       hasMany = Seq(Association("items", "item", fk = "order_id")),
@@ -418,10 +402,6 @@ class EngineScaleSpec extends SparkSpec {
     // every order's items and every invoice's items arrived through the
     // two concurrent writers; nothing lost to interleaved merges
     assert(ids == ((1L to 32L) ++ (101L to 132L)).toSet, s"got $ids")
-    // index in lockstep with the replica across both concurrent writers
-    val idxPairs = res.keyIndexes("item").read()
-      .select("synced_id").as[Long].collect().toSet
-    assert(idxPairs == ids, s"index diverged: ${idxPairs.diff(ids)} ${ids.diff(idxPairs)}")
   }
 
   test("two models sharing an association name keep per-model link gates") {
