@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import graft.codec.{EnvelopeCodec, LinksFlattener}
 import graft.consumer.{ConsumerOps, Persistor}
 import graft.model.Schemas.EventType
@@ -683,10 +684,10 @@ object Engine {
           if (options.publishConsumedEvents)
             Some(s"$workDir/consumed/$topicName") else None
         def persist(b: DataFrame): Unit = {
-          // ONE aggregation job replaces every per-model / per-path
+          // ONE map-only pass replaces every per-model / per-path
           // emptiness probe below: models (and sideload paths) absent from
           // this micro-batch skip their merge entirely, driver-side
-          val stats = collectStats(b, t)
+          val stats = collectStats(b, t, options.syncedDataVariant)
           t.models.foreach(
             mergeModel(registry, t, _, b, replicas, topicName,
               consumedDir, options, stats, batchId))
@@ -709,58 +710,90 @@ object Engine {
       .start()
   }
 
-  /** Per-model facts of one micro-batch, collected in a single Spark job
-    * over the cached batch: row count, destroy count, and — for every
-    * declared to-many association — how many live payloads carry a
-    * non-null incoming id list (the C11 participation test). */
-  private final case class SliceStats(
-      n: Long, nDestroyed: Long, links: Map[String, Long]) {
+  /** Per-model facts of one micro-batch: row count, destroy count, and —
+    * for every declared to-many association — the C11 input: each
+    * touched parent's incoming id list, taken from its in-batch
+    * keep-latest winner (the row `mergeRecords` applies). A parent whose
+    * winner declares no list (a destroy, an observer republish) is
+    * absent, and so takes no part in C11. */
+  private[graft] final case class SliceStats(
+      n: Long, nDestroyed: Long, lists: Map[String, Map[Long, Seq[Long]]]) {
     def nLive: Long = n - nDestroyed
   }
 
-  private def collectStats(batch: DataFrame, t: TopicDef): Map[String, SliceStats] = {
-    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
-    // link probes keyed by (model, association): two models declaring
-    // same-named to-many associations on one topic never share a count
-    val byModel: Seq[(String, Seq[String])] = t.models.map(m =>
-      m.name -> m.sideloads
-        .flatMap(dep => m.hasMany.find(_.model == dep)).map(_.name).distinct)
-      .filter(_._2.nonEmpty)
+  /** [[SliceStats]] of every model the topic declares, read from
+    * `Dataset.observe` metrics on one map-only pass over the batch (a
+    * `noop` write): the pass materializes the persisted batch for the
+    * merges that follow and adds no shuffle and no collect of its own. A
+    * model absent from the batch reads `n = 0`. For a model with to-many
+    * sideloads the metrics also carry one small struct per row (key,
+    * keep-latest order, links), from which the driver picks each key's
+    * in-batch winner exactly as [[ConsumerOps.keepLatest]] does in
+    * `mergeRecords`: greatest (`synced_updated_at`, `event_type`, payload
+    * hash), each DESC NULLS LAST. */
+  private[graft] def collectStats(batch: DataFrame, t: TopicDef,
+      syncedDataVariant: Boolean): Map[String, SliceStats] = {
     val destroyed = eventTypeCol === EventType.Destroyed
-    // ONE links-only from_json per model, carrying every probed
-    // association, materialized as a column all of that model's probes
-    // share (K associations cost one parse, not K). The probe parses with
-    // from_json exactly like the merge path's incoming set
-    // (rec.links.<name>) — a JSONPath probe diverges on case handling and
-    // on association names carrying JSONPath-special chars. The when()
-    // keeps rows of OTHER models from paying the parse at all.
-    val withLinks = byModel.foldLeft(batch) { case (df, (mn, assocs)) =>
-      val linksOnly = StructType(Seq(StructField("links",
-        StructType(assocs.map(a => StructField(a, ArrayType(LongType)))))))
-      df.withColumn(s"__lk_$mn",
-        when(col("model_name") === mn && !destroyed,
-          from_json(col("payload_json"), linksOnly).getField("links")))
+    // per model: the to-many associations C11 may run for, and the index
+    // that names the model's columns and metrics
+    val probes: Seq[(ModelDef, Seq[String], Int)] = t.models.zipWithIndex
+      .map { case (m, i) =>
+        (m, m.sideloads.flatMap(dep => m.hasMany.find(_.model == dep))
+          .map(_.name).distinct, i)
+      }
+    // ONE narrow from_json per model (key, updated_at and every probed
+    // association), parsed exactly like the merge path's records — a
+    // JSONPath probe diverges on case handling and on association names
+    // carrying JSONPath-special chars. The when() keeps rows of OTHER
+    // models from paying the parse at all. Columns and metrics are named
+    // by index: names composed from model and association names could
+    // collide.
+    val withProbes = probes.foldLeft(batch) {
+      case (df, (m, assocs, i)) if assocs.nonEmpty =>
+        val narrow = StructType(Seq(StructField("id", LongType),
+          StructField("updated_at", StringType),
+          StructField("links",
+            StructType(assocs.map(a => StructField(a, ArrayType(LongType)))))))
+        val rec = from_json(col("payload_json"), narrow)
+        df.withColumn(s"__pr_$i", when(col("model_name") === m.name,
+          struct(rec.getField("id").as("id"),
+            unix_micros(rec.getField("updated_at").cast("timestamp")).as("ts"),
+            eventTypeCol.as("et"),
+            payloadTiebreak(storedPayload(syncedDataVariant),
+              syncedDataVariant).as("h"),
+            rec.getField("links").as("links"))))
+      case (df, _) => df
     }
-    val pairs = byModel.flatMap { case (mn, as) => as.map(mn -> _) }
-    // index-based aliases: a name-composed form (`__lnk_${mn}__$a`) can
-    // collide when names themselves contain `__` (model `a` + assoc
-    // `b__c` vs model `a__b` + assoc `c`); extraction below is positional
-    // either way, but the index makes uniqueness unconditional
-    val aggs =
-      count(lit(1)).as("__n") +:
-        sum(when(destroyed, 1L).otherwise(0L)).as("__nd") +:
-        pairs.zipWithIndex.map { case ((mn, a), i) =>
-          sum(when(col(s"__lk_$mn").getField(a).isNotNull, 1L).otherwise(0L))
-            .as(s"__lnk_$i")
-        }
-    withLinks.groupBy(col("model_name")).agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val model = r.getString(0)
-        model -> SliceStats(r.getLong(1), r.getLong(2),
-          pairs.zipWithIndex.collect { case ((mn, a), i) if mn == model =>
-            a -> r.getLong(3 + i)
-          }.toMap)
-      }.toMap
+    val metrics = probes.flatMap { case (m, assocs, i) =>
+      val isModel = col("model_name") === m.name
+      Seq(count(when(isModel, lit(1))).as(s"__n_$i"),
+        count(when(isModel && destroyed, lit(1))).as(s"__nd_$i")) ++
+        (if (assocs.isEmpty) Nil
+         else Seq(collect_list(col(s"__pr_$i")).as(s"__rows_$i")))
+    }
+    val observation = org.apache.spark.sql.Observation()
+    withProbes.observe(observation, metrics.head, metrics.tail: _*)
+      .write.format("noop").mode("overwrite").save()
+    val row = observation.get
+    def n(name: String): Long = row(name).asInstanceOf[Long]
+    // keepLatest's order: nulls rank lowest under DESC NULLS LAST
+    val order: Ordering[Row] = Ordering.by((r: Row) =>
+      (if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getString(2),
+        r.getLong(3)))
+    probes.map { case (m, assocs, i) =>
+      val winners =
+        if (assocs.isEmpty) Nil
+        else row(s"__rows_$i").asInstanceOf[Seq[Row]].filterNot(_.isNullAt(0))
+          .groupBy(_.getLong(0)).values.map(_.max(order)).toSeq
+          .filter(_.getString(2) != EventType.Destroyed)
+      m.name -> SliceStats(n(s"__n_$i"), n(s"__nd_$i"),
+        assocs.map { a =>
+          a -> winners.flatMap { w =>
+            Option(w.getStruct(4)).flatMap(l => Option(l.getSeq[Long](l.fieldIndex(a))))
+              .map(w.getLong(0) -> _)
+          }.toMap
+        }.toMap)
+    }.toMap
   }
 
   /** Event-type suffix of a wire event name (`order_line_created` →
@@ -816,9 +849,14 @@ object Engine {
       val assoc = m.hasMany.find(_.model == dep).getOrElse(
         throw new IllegalArgumentException(
           s"sideload $dep on ${m.name} needs a matching hasMany association"))
-      val live = parsed.filter(col("event_type") =!= EventType.Destroyed)
-      val childParsed = live
-        .select(explode(col(s"rec.$dep")).as("rec"))
+      // a destroyed payload embeds nothing: its children read as null.
+      // explode_outer and a null filter, not explode: for explode Spark
+      // infers a non-empty-list pre-filter that parses every payload
+      // again in a plan step of its own
+      val childParsed = parsed
+        .select(explode_outer(when(col("event_type") =!= EventType.Destroyed,
+          col(s"rec.$dep"))).as("rec"))
+        .filter(col("rec").isNotNull)
         .select(lit(EventType.Updated).as("event_type"), col("rec"),
           to_json(col("rec")).as("payload_json"))
       // sideloaded children are all stamped `updated`: no destroys
@@ -827,25 +865,29 @@ object Engine {
 
       // C11: children of touched parents absent from the incoming id list
       // disassociate — needs the child replica to carry the FK attribute.
-      // Only payloads that DECLARE a to-many list (non-null, possibly
+      // The incoming list is the one each parent's in-batch keep-latest
+      // winner declares, the row `mergeRecords` applied (the reference's
+      // default remove-duplicates strategy never lets an older payload of
+      // the batch reach C11); the stats pass already picked the winners.
+      // Only winners that DECLARE a to-many list (non-null, possibly
       // empty) participate — observer republishes and destroys carry no
-      // list and must not disassociate anything; the stats row already
-      // counted them, so batches without lists skip driver-side.
-      if (child.attributes.exists(_.name == assoc.fk) &&
-          slice.links.getOrElse(assoc.name, 0L) > 0) {
-        val incoming = live
-          .filter(col(s"rec.links.${assoc.name}").isNotNull)
-          .select(
-            col("rec.id").as(assoc.fk),
-            explode_outer(col(s"rec.links.${assoc.name}")).as("synced_id"))
+      // list and must not disassociate anything, so batches without any
+      // skip driver-side.
+      val lists = slice.lists.getOrElse(assoc.name, Map.empty)
+      if (child.attributes.exists(_.name == assoc.fk) && lists.nonEmpty) {
+        val winners = batch.sparkSession.createDataFrame(
+          java.util.Arrays.asList(lists.toSeq.map { case (p, ids) => Row(p, ids) }: _*),
+          // a non-null key spares the join a null filter on this side
+          StructType(Seq(StructField(assoc.fk, LongType, nullable = false),
+            StructField("__ids", ArrayType(LongType)))))
         // bucket-pruned C11: resolve the doomed child KEYS first (one
-        // semi+anti join with the micro-batch parent set broadcast,
-        // collected in one action), then rewrite only the buckets those
-        // keys hash into — never an O(child table) rewrite. The common
-        // case, no child dropped, skips the destroy: no probe, no MoR
-        // delta fold, no version. The keys resolve from a column-pruned
-        // read of the child replica's (synced_id, fk) columns — the
-        // reference's `WHERE parent_id = ?` lookup on the child table,
+        // semi join with the winners' lists broadcast, collected in one
+        // action), then rewrite only the buckets those keys hash into —
+        // never an O(child table) rewrite. The common case, no child
+        // dropped, skips the destroy: no probe, no MoR delta fold, no
+        // version. The keys resolve from a column-pruned read of the
+        // child replica's (synced_id, fk) columns — the reference's
+        // `WHERE parent_id = ?` lookup on the child table,
         // persistor.rb:102-152 — which never scans the payload. The
         // resolution is NOT bounded by the batch: it reads every child
         // key, and under merge-on-read folds the base plus every delta
@@ -853,8 +895,8 @@ object Engine {
         val rep = replicas(dep)
         rep.withLock {
           val doomedKeys = Persistor.disassociatedChildKeys(
-            rep.read(Seq("synced_id", assoc.fk)), incoming,
-            parentKey = assoc.fk, childKey = "synced_id")
+            rep.read(Seq("synced_id", assoc.fk)), winners,
+            parentKey = assoc.fk, childKey = "synced_id", listCol = "__ids")
           val rows = doomedKeys.collect()
           if (rows.nonEmpty)
             rep.destroy(batch.sparkSession.createDataFrame(
@@ -886,9 +928,23 @@ object Engine {
           col("rec.updated_at").cast("timestamp").as("synced_updated_at"),
           col("rec.canceled_at").cast("timestamp").as("canceled_at")) ++:
         linkCols.map(col) ++:
-        Seq((if (variantPayload) parse_json(col("payload_json"))
-             else col("payload_json")).as("synced_data")): _*)
+        Seq(storedPayload(variantPayload).as("synced_data")): _*)
   }
+
+  /** The `synced_data` a record stores: its raw payload, parsed once into
+    * VARIANT under `EngineOptions.syncedDataVariant`. */
+  private def storedPayload(variant: Boolean): Column =
+    if (variant) parse_json(col("payload_json")) else col("payload_json")
+
+  /** Keep-latest payload tiebreak over a stored payload: a 64-bit hash,
+    * not the raw JSON string, so the window sort compares fixed-width
+    * longs instead of whole payloads (same determinism — any total order
+    * on equal-timestamp events works). Variant payloads hash their
+    * canonical JSON rendering: VARIANT is not hashable in Spark 4.1, and
+    * to_json(parse_json(x)) is a deterministic function of the wire
+    * bytes — still a total order. */
+  private def payloadTiebreak(payload: Column, variant: Boolean): Column =
+    if (variant) xxhash64(to_json(payload)) else xxhash64(payload)
 
   /** LWW-merge one model's shaped records into its replica. Destroyed
     * events carry only the key and timestamps on the wire (P9), so their
@@ -909,19 +965,12 @@ object Engine {
     val shaped = shapeRecords(m, parsed, options.syncedDataVariant)
     // deterministic tiebreak: equal-timestamp events (second-precision CDC
     // writing update+destroy in one tick) must pick the SAME winner on
-    // at-least-once replay, or replicas diverge
-    // payload tiebreak by 64-bit hash, not the raw JSON string: the window
-    // sort compares fixed-width longs instead of whole payloads (same
-    // determinism — any total order on equal-timestamp events works)
-    // (variant payloads hash their canonical JSON rendering: VARIANT is
-    // not hashable in Spark 4.1, and to_json(parse_json(x)) is a
-    // deterministic function of the wire bytes — still a total order)
-    val payloadTiebreak =
-      if (options.syncedDataVariant) xxhash64(to_json(col("synced_data")))
-      else xxhash64(col("synced_data"))
+    // at-least-once replay, or replicas diverge. `collectStats` picks the
+    // same winner for C11 by the same order.
     val latest = ConsumerOps.keepLatest(shaped,
       keyCols = Seq("synced_id"), orderCol = "synced_updated_at",
-      tiebreak = Seq(col("event_type"), payloadTiebreak))
+      tiebreak = Seq(col("event_type"),
+        payloadTiebreak(col("synced_data"), options.syncedDataVariant)))
 
     val touched = latest.select(col("synced_id"))
     // preserve current attributes under destroy (key-only payload). Both

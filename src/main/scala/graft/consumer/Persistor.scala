@@ -171,28 +171,34 @@ object Persistor {
   }
 
   /** C11, incremental form — the child KEYS to disassociate: children of
-    * touched parents absent from the incoming `(parentKey, childKey)`
-    * list. The parent set is the micro-batch (bounded → broadcast, and a
-    * left-semi build side needs no dedup, so no distinct stage); the
-    * storage layer then rewrites only the buckets the RESULT keys hash
-    * into ([[graft.streaming.ParquetReplica.destroy]]) — never the whole
-    * child table (reference semantics: persistor.rb:102-152,
-    * README.md:869-874). The semi + anti joins read only the two key
-    * columns, but they stream ALL of `children`: the caller's read of
-    * the child table decides the real cost — [[graft.Engine]] passes a
-    * column-pruned `Replica.read(columns)`, which under merge-on-read
-    * still folds every key (base plus the whole delta log, one shuffle)
-    * on each call. */
+    * touched parents absent from their parent's incoming id list.
+    * `parentLists` holds one row per touched parent: its key under
+    * `parentKey` and its declared list (`array<bigint>`, possibly empty)
+    * under `listCol`. The parent set is the micro-batch (bounded →
+    * broadcast), so this is ONE broadcast left-semi join conditioned on
+    * the list not containing the child; the storage layer then rewrites
+    * only the buckets the RESULT keys hash into
+    * ([[graft.streaming.ParquetReplica.destroy]]) — never the whole child
+    * table (reference semantics: persistor.rb:102-152,
+    * README.md:869-874). The join reads only the two key columns, but it
+    * streams ALL of `children`: the caller's read of the child table
+    * decides the real cost — [[graft.Engine]] passes a column-pruned
+    * `Replica.read(columns)`, which under merge-on-read still folds every
+    * key (base plus the whole delta log, one shuffle) on each call. */
   def disassociatedChildKeys(
       children: DataFrame,
-      incoming: DataFrame,
+      parentLists: DataFrame,
       parentKey: String,
-      childKey: String): DataFrame = {
-    val touchedParents = incoming.select(col(parentKey))
+      childKey: String,
+      listCol: String): DataFrame = {
+    val lists = parentLists.select(col(parentKey).as("__parent"),
+      col(listCol).as("__list"))
+    // a list holding a null element makes array_contains null for a
+    // child it does not hold: that child is still absent from the list
     children.select(col(parentKey), col(childKey))
-      .join(broadcast(touchedParents), Seq(parentKey), "left_semi")
-      .join(incoming.select(col(parentKey), col(childKey)),
-        Seq(parentKey, childKey), "left_anti")
+      .join(broadcast(lists), col(parentKey) === col("__parent") &&
+        !coalesce(array_contains(col("__list"), col(childKey)), lit(false)),
+        "left_semi")
       .select(col(childKey))
   }
 

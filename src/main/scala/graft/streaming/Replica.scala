@@ -278,13 +278,13 @@ final class ParquetReplica(spark: SparkSession, root: String,
     val narrow = org.apache.spark.sql.types.StructType(
       schema.filter(f => keep(f.name)))
     val m = current()._2
-    reconcile(readDirs(m.dirs.values.toSeq, narrow), m.deltas, narrow)
+    reconcile(m.dirs.values.toSeq, m.deltas, narrow)
       .select(columns.map(col): _*)
   }
 
   /** Every row of one version: its base buckets plus its delta log. */
   private def rows(m: Manifest): DataFrame =
-    reconcile(readDirs(m.dirs.values.toSeq), m.deltas)
+    reconcile(m.dirs.values.toSeq, m.deltas)
 
   /** The bucket set the keys of `df` hash into — one bounded collect
     * (at most `nb` distinct values). */
@@ -304,8 +304,7 @@ final class ParquetReplica(spark: SparkSession, root: String,
   override def readBuckets(keys: DataFrame): DataFrame = {
     val (_, m) = current()
     val touched = touchedBuckets(keys, m.nb)
-    reconcile(readDirs(m.dirs.filter(t => touched(t._1)).values.toSeq),
-      m.deltas)
+    reconcile(m.dirs.filter(t => touched(t._1)).values.toSeq, m.deltas)
   }
 
   /** Read-time LWW resolution of base rows + delta-log rows (MoR mode;
@@ -333,11 +332,12 @@ final class ParquetReplica(spark: SparkSession, root: String,
     * `synced_created_at`) and in the row it leaves when it wins. Base
     * rows and epochs without the column read the marker as null.
     *
-    * `sch` is the row shape folded: the replica schema, or the narrower
-    * one of a column-pruned [[read]] (`base` is read with it). */
-  private def reconcile(base: DataFrame, deltas: Seq[(Long, String)],
+    * `baseDirs` are the base bucket directories to read. `sch` is the
+    * row shape folded: the replica schema, or the narrower one of a
+    * column-pruned [[read]]. */
+  private def reconcile(baseDirs: Seq[String], deltas: Seq[(Long, String)],
       sch: org.apache.spark.sql.types.StructType = schema): DataFrame = {
-    if (deltas.isEmpty) return base
+    if (deltas.isEmpty) return readDirs(baseDirs, sch)
     val marker = Replica.DestroyedMarker
     val deltaSchema = sch.add(marker,
       org.apache.spark.sql.types.BooleanType)
@@ -345,29 +345,31 @@ final class ParquetReplica(spark: SparkSession, root: String,
     // path stopped storing it — see deltaMerge's codegen-cache note); a
     // pre-round-14 epoch that still stores the column reads fine — the
     // explicit schema drops it and the manifest value is identical.
-    // ONE multi-path scan, not an N-way unionByName of per-directory
-    // reads (round-15): per-read analysis/planning grew linearly in the
-    // delta-log length — bounded by compactEvery, but a stalled
-    // compactor at scale made every MoR read progressively costlier to
-    // PLAN. The epoch seq is recovered from each row's source directory:
-    // [[deltaMerge]] names every epoch `v<n>/delta-<seq>` and compaction
-    // only carries entries forward, so a manifest entry of any other
-    // shape is corruption, not a layout to read around.
+    // ONE multi-path scan over the base buckets and every epoch, not a
+    // union of per-directory reads (round-15): per-read analysis and
+    // planning grew linearly in the delta-log length — bounded by
+    // compactEvery, but a stalled compactor at scale made every MoR read
+    // progressively costlier to PLAN — and each scan of a union is its
+    // own generated stage. The epoch seq is recovered from each row's
+    // source directory: [[deltaMerge]] names every epoch
+    // `v<n>/delta-<seq>` and compaction only carries entries forward, so
+    // a manifest entry of any other shape is corruption, not a layout to
+    // read around. Base files sit in `__b=<b>` directories: they take
+    // seq -1 and read the marker as null.
     deltas.foreach { case (sq, dir) =>
       require(dir.split("/").last == s"delta-$sq",
         s"replica $root: delta entry $sq -> $dir is not named delta-$sq")
     }
-    val d = spark.read.schema(deltaSchema)
-      .parquet(deltas.map { case (_, dir) => s"$root/$dir" }: _*)
+    val seqOf = regexp_extract(input_file_name(), "delta-([0-9]+)/[^/]*$", 1)
+    val scanned = spark.read.schema(deltaSchema)
+      .parquet((baseDirs ++ deltas.map(_._2)).map(d => s"$root/$d"): _*)
       .withColumn("__seq",
-        regexp_extract(input_file_name(), "delta-([0-9]+)/[^/]*$", 1)
-          .cast("long"))
+        when(seqOf === "", lit(-1L)).otherwise(seqOf.cast("long")))
     val cols = sch.fieldNames.toSeq
     val kept = Replica.preservedColumns(cols).toSet
     val maxTs = lit("9999-12-31 00:00:00").cast("timestamp")
     val minTs = lit("0001-01-01 00:00:00").cast("timestamp")
-    val all = base.withColumn("__seq", lit(-1L))
-      .withColumn(marker, lit(null).cast("boolean")).unionByName(d)
+    val all = scanned
       .withColumn("__lww",
         Persistor.lwwTimestamp(col("synced_updated_at"), col("synced_created_at")))
     // VARIANT columns (the Spark-4 synced_data mode) are not orderable,
@@ -630,8 +632,8 @@ final class ParquetReplica(spark: SparkSession, root: String,
         // path pays; prepare joins on synced_id, so all rows for the
         // update keys live in these buckets
         val touched = touchedBuckets(ups, m.nb)
-        prepare(reconcile(readDirs(m.dirs.filter(t => touched(t._1))
-          .values.toSeq), m.deltas), ups)
+        prepare(reconcile(m.dirs.filter(t => touched(t._1)).values.toSeq,
+          m.deltas), ups)
       }
     // overwrite (the writeBucketsTo rule): a crash between this write
     // and publish() leaves an orphan dir at the SAME next/seq, and the

@@ -125,7 +125,11 @@ object StreamBench {
       // measured phase, so its feed rate is untouched
       warmupBatches: Int = 24, warmupFeedIntervalMs: Int = 150,
       keySpace: Int = 10000, replicaBuckets: Int = 4,
-      mergeOnRead: Boolean = true, timeoutMs: Long = 180000L): Result = {
+      mergeOnRead: Boolean = true, timeoutMs: Long = 180000L,
+      // keep feeding past `batches` until this many merges have ended
+      // after the warm-up, so the measured window spans micro-batches
+      // and not a fraction of one
+      minMeasuredMerges: Int = 0): Result = {
     require(batches > warmupBatches,
       "need post-warmup batches to report percentiles")
     // Harness root prefers tmpfs (/dev/shm) over java.io.tmpdir: the
@@ -239,10 +243,16 @@ object StreamBench {
       awaitApplied(warmupBatches)
       warmupEndMs = System.currentTimeMillis()
       // phase 2 — steady state, fed strictly below saturation
-      for (b <- warmupBatches until batches) {
+      def measuredMerges = merges.stream().filter(_._1 > warmupEndMs).count()
+      val feedDeadline = System.currentTimeMillis() + timeoutMs
+      var b = warmupBatches
+      while ((b < batches || measuredMerges < minMeasuredMerges) &&
+          System.currentTimeMillis() < feedDeadline &&
+          queries.forall(_.isActive)) {
         feed(b); Thread.sleep(feedIntervalMs.toLong)
+        b += 1
       }
-      awaitApplied(batches)
+      awaitApplied(b)
     } finally {
       queries.foreach(_.stop())
       // the harness runs twice per Bench sweep (plus every spec run) —
@@ -271,18 +281,35 @@ object StreamBench {
     val post = lags.drop(warmupBatches).sorted
     def pct(p: Double): Double =
       post(math.min(post.length - 1, (p * post.length).toInt))
-    // steady-state throughput: rows applied by the merges after the
-    // warmup window over the first→last merge span in that window
-    val steady = applier.groupBy(identity).toSeq
-      .map { case (i, files) => (applied(i)._1, files.size.toLong * rowsPerBatch) }
-      .filter(_._1 > warmupEndMs)
-    val rps =
-      if (steady.size < 2) 0.0
-      else steady.map(_._2).sum.toDouble * 1000.0 /
-        math.max(1L, steady.map(_._1).max - steady.map(_._1).min)
+    val rps = steadyRowsPerSec(applied.map(_._1), applier,
+      stampsMs.toIndexedSeq, rowsPerBatch, warmupEndMs)
     Result(pct(0.50), pct(0.95), post.last, rps,
-      stampsMs.size.toLong * rowsPerBatch, batches,
+      stampsMs.size.toLong * rowsPerBatch, stampsMs.size,
       warmupBatches * rowsPerBatch)
+  }
+
+  /** Steady-state throughput of a run: the rows of every file whose
+    * applying merge ended after the warm-up (`warmupEndMs`), over the
+    * span in which those merges could work — from the end of the merge
+    * before the first measured one, or the first measured file's stamp
+    * if that is later, to the last measured merge's end. Merge `i` ended
+    * at `mergeEndMs(i)`; file `f`, stamped `stampsMs(f)` with
+    * `rowsPerFile` rows, was applied by merge `applier(f)`. Spans that
+    * start at the first measured merge's END under-read a feed shorter
+    * than a few micro-batches: one merge's work falls outside them. */
+  private[graft] def steadyRowsPerSec(mergeEndMs: IndexedSeq[Long],
+      applier: IndexedSeq[Int], stampsMs: IndexedSeq[Long], rowsPerFile: Long,
+      warmupEndMs: Long): Double = {
+    val measured = applier.indices.filter(f => mergeEndMs(applier(f)) > warmupEndMs)
+    if (measured.isEmpty) 0.0
+    else {
+      val first = measured.map(applier).min
+      val start = math.max(
+        if (first > 0) mergeEndMs(first - 1) else Long.MinValue,
+        stampsMs(measured.head))
+      val end = measured.map(f => mergeEndMs(applier(f))).max
+      measured.size * rowsPerFile * 1000.0 / math.max(1L, end - start)
+    }
   }
 
   /** `firstP95Ms` is NaN for single-observation points; for retried
@@ -309,7 +336,9 @@ object StreamBench {
     * entered the percentiles = the pipeline is past capacity); the
     * KNEE is the last measured throughput that stayed under the gate.
     * Short runs per point — the sweep wants the shape, not tight
-    * percentiles. Run per replica mode: merge-on-read applies O(batch)
+    * percentiles — but each point feeds for at least five micro-batches
+    * after its warm-up, so its throughput is the pipeline's and not a
+    * fraction of one batch's. Run per replica mode: merge-on-read applies O(batch)
     * epochs, copy-on-write rewrites touched buckets — the knee is
     * where that difference becomes operational. */
   def capacity(spark: SparkSession, mergeOnRead: Boolean,
@@ -345,7 +374,7 @@ object StreamBench {
           // rowsPerBatch a denser warmup feed would just manufacture
           // backlog the drain then has to clear before the point starts
           warmupFeedIntervalMs = feedIntervalMs,
-          mergeOnRead = mergeOnRead))
+          mergeOnRead = mergeOnRead, minMeasuredMerges = 5))
       measure() match {
         case scala.util.Success(first) =>
           // gate on the BEST p95 seen so far, not the first point: a

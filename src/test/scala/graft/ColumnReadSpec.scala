@@ -138,13 +138,17 @@ class ColumnReadSpec extends SparkSpec {
     // a base to scan beside the delta log
     p.r.compact(4)
     p.merge(live(7, 5, 7.0))
+    def scans(df: DataFrame): Seq[FileSourceScanExec] =
+      df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
     def readSchemas(df: DataFrame): Seq[Seq[String]] =
-      df.queryExecution.sparkPlan.collect {
-        case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq
-      }
-    val pruned = readSchemas(p.r.read(Seq("synced_id", "parent_id")))
-    // the base scan and the delta-log scan
-    assert(pruned.size == 2, s"scans: $pruned")
+      scans(df).map(_.requiredSchema.fieldNames.toSeq)
+    val narrow = p.r.read(Seq("synced_id", "parent_id"))
+    val pruned = readSchemas(narrow)
+    // ONE scan reads the base buckets and the delta log together
+    assert(pruned.size == 1, s"scans: $pruned")
+    val roots = scans(narrow).head.relation.location.rootPaths.map(_.toString)
+    assert(roots.exists(_.contains("__b=")) && roots.exists(_.contains("/delta-")),
+      s"scanned roots: $roots")
     assert(pruned.forall(!_.contains("synced_data")), s"scans: $pruned")
     assert(readSchemas(p.r.read()).exists(_.contains("synced_data")),
       "the full read must scan the payload, or this check proves nothing")

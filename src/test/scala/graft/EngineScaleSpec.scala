@@ -209,6 +209,214 @@ class EngineScaleSpec extends SparkSpec {
     assert(left == (1L to 32L).toSet - 4L, s"got $left")
   }
 
+  /** Jobs per (streaming query id, batch id) started while `f` runs, and
+    * the executed plans of the stats passes (the executions observing
+    * metrics). Listener events arrive in posting order: once a fence job
+    * started after `f` is seen, every event of `f` has been delivered. */
+  private def traceJobs(f: => Unit): (Map[(String, String), Int],
+      Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+          .getOrElse("")
+        jobs.add((prop("sql.streaming.queryId"), prop("streaming.sql.batchId"),
+          prop("spark.jobGroup.id")))
+      }
+    }
+    val stats = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit =
+        if (qe.analyzed.exists(_.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.logical.CollectMetrics]))
+          stats.add(qe.executedPlan)
+      def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    import scala.jdk.CollectionConverters._
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      f
+      val fence = s"fence-${System.nanoTime()}"
+      sc.setJobGroup(fence, fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.asScala.exists(_._3 == fence) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+      // execution listeners run on their own queue: wait for the stats
+      // pass of the traced batch as well
+      while (stats.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    (jobs.asScala.toSeq.filter(_._1.nonEmpty).groupBy(j => (j._1, j._2))
+      .map { case (k, js) => k -> js.size }, stats.asScala.toSeq)
+  }
+
+  test("a merge-on-read consumer micro-batch that carries lists and drops " +
+      "no child runs at most 6 jobs, and its stats pass shuffles nothing") {
+    val fx = new C11Fixture("nsj")
+    val opts = Engine.EngineOptions(mergeOnRead = true, replicaCompactEvery = 100)
+    fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
+    fx.run(opts)
+    // the consumer query's id, from its checkpoint
+    val meta = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      s"${fx.work}/cp/consume/${fx.reg.topicName(fx.reg.topics.head)}/metadata")))
+    val consumer = """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(meta).get.group(1)
+    // parent 1 republishes with all four lines: C11 runs, dooms nothing
+    fx.orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
+    var res: Engine.EngineResult = null
+    val (jobs, statsPlans) = traceJobs { res = fx.run(opts) }
+    assert(fx.childIds(res) == (1L to 32L).toSet)
+    val perBatch = jobs.collect { case ((q, _), n) if q == consumer => n }
+    assert(perBatch.nonEmpty, s"no consumer job traced: $jobs")
+    assert(perBatch.max <= 6, s"consumer jobs per batch: $jobs")
+    assertNoExchange(statsPlans)
+  }
+
+  private def assertNoExchange(
+      plans: Seq[org.apache.spark.sql.execution.SparkPlan]): Unit = {
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    assert(plans.nonEmpty, "no stats pass traced")
+    plans.foreach { p =>
+      val exchanges = Plans.collect(p) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }
+      assert(exchanges.isEmpty, s"the stats pass shuffles:\n$p")
+    }
+  }
+
+  test("the stats pass gives each model's skip decisions and each parent's " +
+      "keep-latest winner list") {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val order = ModelDef("order", attributes = Seq(Attribute("total", DoubleType)),
+      hasMany = Seq(Association("order_lines", "order_line", fk = "order_id")),
+      sideloads = Seq("order_line"))
+    val invoice = ModelDef("invoice", attributes = Seq(Attribute("total", DoubleType)))
+    val note = ModelDef("note", attributes = Seq(Attribute("total", DoubleType)))
+    val t = TopicDef("mix", Seq(order, invoice, note))
+    def rec(id: Long, at: String, links: String = "") =
+      s"""{"id":$id,"created_at":"$at","updated_at":"$at","canceled_at":null$links}"""
+    def lines(ids: Long*) = s""","links":{"order_lines":[${ids.mkString(",")}]}"""
+    val batch = Seq(
+      // order 1: the newer of two payloads wins, whatever its position
+      ("order_created", "order", rec(1, "2026-06-01 00:00:00", lines(1, 2, 3))),
+      ("order_updated", "order", rec(1, "2026-06-02 00:00:00", lines(1, 2))),
+      // order 2 declares an empty list: every child disassociates
+      ("order_updated", "order", rec(2, "2026-06-02 00:00:00", lines())),
+      // order 3 declares no list (null): it makes no claim
+      ("order_updated", "order", rec(3, "2026-06-02 00:00:00")),
+      // invoice: a destroys-only slice; note: absent
+      ("invoice_destroyed", "invoice", rec(5, "2026-06-02 00:00:00")),
+      ("invoice_destroyed", "invoice", rec(6, "2026-06-02 00:00:00")))
+      .toDF("event", "model_name", "payload_json").persist()
+    val (_, statsPlans) = traceJobs {
+      val stats = Engine.collectStats(batch, t, syncedDataVariant = false)
+      // absent: the model's merge path is skipped
+      assert(stats("note").n == 0, stats.toString)
+      // destroys only: merged with destroys, no live (sideload) path
+      assert(stats("invoice").n == 2 && stats("invoice").nDestroyed == 2 &&
+        stats("invoice").nLive == 0, stats.toString)
+      // C11 takes part for orders 1 and 2 only, with the winners' lists
+      assert(stats("order").n == 4 && stats("order").nDestroyed == 0,
+        stats.toString)
+      assert(stats("order").lists ==
+        Map("order_lines" -> Map(1L -> Seq(1L, 2L), 2L -> Seq.empty[Long])),
+        stats.toString)
+    }
+    batch.unpersist()
+    assertNoExchange(statsPlans)
+  }
+
+  /** C11 under one replica mode: each touched parent's incoming list is
+    * the one its in-batch keep-latest winner declares — the row the
+    * parent replica stores — in either arrival order, and a destroy
+    * winner disassociates nothing. */
+  private def c11FromWinners(mergeOnRead: Boolean): Unit = {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val tmp = Files.createTempDirectory("graft-c11win").toString
+    val work = s"$tmp/work"
+    val order = ModelDef("order", attributes = Seq(Attribute("total", DoubleType)),
+      hasMany = Seq(Association("order_lines", "order_line", fk = "order_id")),
+      sideloads = Seq("order_line"))
+    val line = ModelDef("order_line", attributes = Seq(Attribute("order_id", LongType)))
+    val reg = Registry(if (mergeOnRead) "cwm" else "cwc",
+      Seq(TopicDef("orders", Seq(order))), dependencyModels = Seq(line))
+    def stamps(at: String) =
+      s""""created_at":"$at","updated_at":"$at","canceled_at":null"""
+    def live(id: Long, at: String, lines: Long*) = "order_updated" ->
+      (s"""{"id":$id,"total":${id * 10.0},${stamps(at)},""" +
+        s""""links":{"order_lines":[${lines.mkString(",")}]},"order_line":[""" +
+        lines.map(l => s"""{"id":$l,"order_id":$id,${stamps(at)}}""")
+          .mkString(",") + "]}")
+    def destroyed(id: Long, at: String) = "order_destroyed" ->
+      s"""{"id":$id,"created_at":"$at","updated_at":"$at","canceled_at":"$at"}"""
+    // one topic file per call, in call order
+    def write(events: (String, String)*): Unit =
+      events.zipWithIndex.map { case ((ev, payload), i) =>
+        (s"order:$i", s"""{"message":[{"event":"$ev","model_name":"order","data":[$payload]}]}""")
+      }.toDF("kafka_key", "value")
+        .withColumn("partition_key", lit(null).cast("string"))
+        .withColumn("ts", lit("2026-06-01 00:00:00").cast("timestamp"))
+        .select("kafka_key", "partition_key", "value", "ts").coalesce(1)
+        .write.mode("append").parquet(s"$work/topics/${reg.topicName(reg.topics.head)}")
+    val empty = s"$tmp/empty"
+    Seq.empty[(Long, Double)].toDF("id", "total")
+      .withColumn("__op", lit("update"))
+      .withColumn("__old_canceled", lit(null).cast("timestamp"))
+      .withColumn("__new_canceled", lit(null).cast("timestamp"))
+      .withColumn("__ts", lit(null).cast("timestamp"))
+      .write.parquet(empty)
+    val bindings = new Engine.ModelBindings {
+      def changes(s: org.apache.spark.sql.SparkSession, m: ModelDef) =
+        s.readStream.schema(s.read.parquet(empty).schema).parquet(empty)
+      def snapshot(s: org.apache.spark.sql.SparkSession, m: ModelDef) =
+        Seq.empty[(Long, Long, java.sql.Timestamp)].toDF("id", "order_id", "__ts")
+    }
+    val opts = Engine.EngineOptions(mergeOnRead = mergeOnRead,
+      replicaCompactEvery = 100)
+    val t0 = "2026-06-01 00:00:00"
+    val (t1, t2) = ("2026-06-02 00:00:00", "2026-06-03 00:00:00")
+    write(live(1, t0, 11, 12), live(2, t0, 21, 22), live(3, t0, 31, 32),
+      live(4, t0, 41, 42))
+    Engine.runAvailableNow(spark, reg, bindings, work, options = opts)
+
+    // one micro-batch: order 1 arrives older-first, order 2 newer-first,
+    // order 3's winner is a destroy, order 4's two payloads tie on time
+    write(live(1, t1, 11, 12), live(2, t2, 21), live(3, t1, 31),
+      live(4, t1, 41))
+    write(live(1, t2, 11), live(2, t1, 21, 22), destroyed(3, t2),
+      live(4, t1, 41, 42))
+    val res = Engine.runAvailableNow(spark, reg, bindings, work, options = opts)
+    val children = res.replicas("order_line").read()
+      .select($"order_id", $"synced_id").as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (p, cs) => p -> cs.map(_._2).toSet }
+    val stored = res.replicas("order").read()
+      .select($"synced_id", $"synced_order_line_ids").as[(Long, Option[Seq[Long]])]
+      .collect().toMap
+    assert(children(1L) == Set(11L) && children(2L) == Set(21L), s"$children")
+    // the destroy winner carries no list: t1's {31} must not drop 32
+    assert(children(3L) == Set(31L, 32L), s"$children")
+    // the tie resolves as the parent merge resolved it
+    assert(stored(4L).exists(_.toSet == children(4L)),
+      s"children ${children(4L)} vs stored list ${stored(4L)}")
+  }
+
+  test("C11 takes each parent's list from its in-batch keep-latest winner " +
+      "under merge-on-read") {
+    c11FromWinners(mergeOnRead = true)
+  }
+
+  test("C11 takes each parent's list from its in-batch keep-latest winner " +
+      "under copy-on-write") {
+    c11FromWinners(mergeOnRead = false)
+  }
+
   test("models absent from a micro-batch skip their merge path entirely") {
     val tmp = Files.createTempDirectory("graft-skip").toString
     val chg = s"$tmp/chg"

@@ -289,12 +289,18 @@ class PersistorSpec extends SparkSpec {
   test("disassociatedChildKeys: only vanished children of touched parents") {
     val children = Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 1L))
       .toDF("parent_id", "child_id")
-    val incoming = Seq((10L, 1L), (10L, 2L)).toDF("parent_id", "child_id")
+    val lists = Seq((10L, Seq(1L, 2L))).toDF("parent_id", "ids")
     val doomed = Persistor.disassociatedChildKeys(
-        children, incoming, "parent_id", "child_id")
+        children, lists, "parent_id", "child_id", "ids")
       .as[Long].collect().toSet
     // child 3 of touched parent 10 vanishes; parent 20's children untouched
     assert(doomed == Set(3L))
+    // an empty list disassociates every child of its parent
+    val emptied = Persistor.disassociatedChildKeys(children,
+        Seq((20L, Seq.empty[Long])).toDF("parent_id", "ids"),
+        "parent_id", "child_id", "ids")
+      .as[Long].collect().toSet
+    assert(emptied == Set(1L))
   }
 
   test("streaming C11 disassociation rewrites only the doomed keys' buckets") {
@@ -315,10 +321,10 @@ class PersistorSpec extends SparkSpec {
 
     // parent 1's incoming aggregate keeps children 1..7 → only child 8
     // disassociates; every other parent is untouched
-    val incoming = (1L to 7L).map(c => (1L, c)).toDF("parent_id", "synced_id")
+    val lists = Seq((1L, 1L to 7L)).toDF("parent_id", "ids")
     replica.withLock {
       val doomed = Persistor.disassociatedChildKeys(
-        replica.read(), incoming, "parent_id", "synced_id")
+        replica.read(), lists, "parent_id", "synced_id", "ids")
         .localCheckpoint(true)
       assert(doomed.as[Long].collect().toSet == Set(8L))
       replica.destroy(doomed)

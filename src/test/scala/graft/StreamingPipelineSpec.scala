@@ -79,6 +79,29 @@ class StreamingPipelineSpec extends SparkSpec {
     }
   }
 
+  test("StreamBench's steady rate counts a measured merge from the end of " +
+      "the merge before it") {
+    // merges end at 1 s (warm-up), 4 s and 7 s; files 0-1 are warm-up,
+    // files 2-11 are stamped every 200 ms from 1.2 s
+    val ends = IndexedSeq(1000L, 4000L, 7000L)
+    val stamps = IndexedSeq(0L, 200L) ++ (0 until 10).map(i => 1200L + 200L * i)
+    val applier = IndexedSeq(0, 0) ++ IndexedSeq.fill(8)(1) ++ IndexedSeq(2, 2)
+    // 10 measured files of 100 rows from 1.2 s (the first measured stamp,
+    // later than the warm-up merge's end) to 7 s: 1,000 rows over 5.8 s
+    assert(math.abs(StreamBench.steadyRowsPerSec(ends, applier, stamps,
+      100L, warmupEndMs = 1000L) - 1000 * 1000.0 / 5800) < 1e-9)
+    // a feed shorter than one micro-batch: ONE measured merge still reads
+    // its rows over the span it worked, from the previous merge's end
+    val oneEnd = IndexedSeq(1000L, 4000L)
+    val oneApplier = IndexedSeq(0, 0) ++ IndexedSeq.fill(10)(1)
+    val early = IndexedSeq(0L, 200L) ++ (0 until 10).map(i => 600L + 200L * i)
+    assert(math.abs(StreamBench.steadyRowsPerSec(oneEnd, oneApplier, early,
+      100L, warmupEndMs = 1000L) - 1000 * 1000.0 / 3000) < 1e-9)
+    // nothing measured reads 0
+    assert(StreamBench.steadyRowsPerSec(ends, applier, stamps, 100L,
+      warmupEndMs = 9000L) == 0.0)
+  }
+
   test("merge-on-read replica matches copy-on-write across epochs, " +
       "order-dependent null-ts folds, destroy, and async compaction") {
     val ddl = "synced_id LONG, synced_updated_at TIMESTAMP, " +

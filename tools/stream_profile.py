@@ -4,6 +4,7 @@
 Usage:
   tools/stream_profile.py EVENTLOG [--codegen CODEGEN_LOG]
                           [--query SUBSTR] [--batches FIRST-LAST]
+                          [--working-set]
 
 EVENTLOG is a Spark event log: a plain or zstd-compressed events file, or
 a rolling `eventlog_v2_*` directory (or the directory that holds exactly
@@ -30,6 +31,16 @@ and compile time. Compiles are attributed by thread:
     ambiguous.
 The closing summary gives, per query over the selected batches, compiles
 per batch and the distinct classes of the whole window.
+
+--working-set needs a CODEGEN_LOG written with
+`tools/codegen-refs-log4j2.properties`, which also logs every codegen
+cache lookup, hits included. Spark keys that cache by (thread context
+class loader, source), so for each selected batch of the --query queries
+it counts the distinct (loader side, source hash) keys looked up from the
+batch's start to the next batch of the same query, other queries'
+batches in that time included, and splits them by the step (execution)
+that looked them up. A whole-stage class counts twice: the driver
+validates it and each executor compiles it under its own loader.
 """
 import argparse
 import collections
@@ -119,15 +130,9 @@ TASK_THREAD = re.compile(r"in stage (\d+)\.\d+ \(TID")
 STREAM_THREAD = re.compile(r"^stream execution thread for .*runId = ([0-9a-f-]+)\]$")
 
 
-def compiles(path):
-    """(millis, thread, source hash, compile ms) per CodeGenerator compile."""
-    out, pending, rec = [], {}, None
-
-    def flush():
-        if rec and rec[2] == "DEBUG" and rec[3] == "CodeGenerator":
-            pending.setdefault(rec[1], []).append(
-                [rec[0], rec[1], hashlib.sha1("\n".join(rec[4]).encode()).hexdigest(), 0.0])
-            out.append(pending[rec[1]][-1])
+def records(path):
+    """(millis, thread, level, logger, message lines) per log record."""
+    rec = None
     with open(path, encoding="utf-8", errors="replace") as fh:
         for line in fh:
             m = LOG_HEAD.match(line.rstrip("\n"))
@@ -135,15 +140,60 @@ def compiles(path):
                 if rec:
                     rec[4].append(line.rstrip("\n"))
                 continue
-            flush()
+            if rec:
+                yield rec
             t, thread, level, logger, msg = m.groups()
             rec = (int(t), thread, level, logger, [msg])
-            g = re.match(r"Code generated in ([0-9.]+) ms", msg)
-            if logger == "CodeGenerator" and level == "INFO" and g and pending.get(thread):
-                pending[thread].pop(0)[3] = float(g.group(1))
-                rec = None
-    flush()
+    if rec:
+        yield rec
+
+
+def source_hash(lines):
+    """Hash of the generated source a record carries: its lines from the
+    formatter's first numbered line on, so a lookup record ("code for
+    ...:" header) and the compile record of the same source agree."""
+    for i, l in enumerate(lines):
+        if l.startswith("/* 001 */"):
+            return hashlib.sha1("\n".join(lines[i:]).encode()).hexdigest()
+    return None
+
+
+def compiles(path):
+    """(millis, thread, source hash, compile ms) per CodeGenerator compile."""
+    out, pending = [], {}
+    for t, thread, level, logger, lines in records(path):
+        if logger != "CodeGenerator":
+            continue
+        g = re.match(r"Code generated in ([0-9.]+) ms", lines[0])
+        h = source_hash(lines) if level == "DEBUG" else None
+        if h:
+            pending.setdefault(thread, []).append([t, thread, h, 0.0])
+            out.append(pending[thread][-1])
+        elif level == "INFO" and g and pending.get(thread):
+            pending[thread].pop(0)[3] = float(g.group(1))
     return out
+
+
+def cache_keys(path):
+    """(millis, thread, keys) per codegen cache lookup in a log written with
+    tools/codegen-refs-log4j2.properties. Spark keys its codegen cache by
+    (thread context class loader, source): a key is (side, source hash),
+    side `executor` on a task thread and `driver` elsewhere. A whole-stage
+    class is logged once, at driver-side code generation, but looked up
+    twice (the driver's validation compile and the executor's), so its
+    record carries both keys. A compile record is a lookup that missed;
+    it adds the keys of generators that log no lookup of their own."""
+    for t, thread, level, logger, lines in records(path):
+        if level != "DEBUG" or not (logger.startswith("Generate") or
+                                    logger in ("WholeStageCodegenExec", "CodeGenerator")):
+            continue
+        h = source_hash(lines)
+        if not h:
+            continue
+        if logger == "WholeStageCodegenExec":
+            yield t, thread, (("driver", h), ("executor", h))
+        else:
+            yield t, thread, (("executor" if TASK_THREAD.search(thread) else "driver", h),)
 
 
 def main():
@@ -152,6 +202,9 @@ def main():
     ap.add_argument("--codegen")
     ap.add_argument("--query", default="", help="only queries whose label contains this")
     ap.add_argument("--batches", help="FIRST-LAST batch ids to print and summarize")
+    ap.add_argument("--working-set", action="store_true",
+                    help="codegen cache keys per cycle of the --query batches, by step "
+                         "(needs --codegen from tools/codegen-refs-log4j2.properties)")
     args = ap.parse_args()
     lo, hi = (map(int, args.batches.split("-")) if args.batches else (0, 1 << 62))
 
@@ -209,20 +262,19 @@ def main():
         t0 = millis(p["timestamp"])
         windows[run].append((t0, t0 + p["durationMs"].get("triggerExecution", 0), b))
 
-    outside = collections.defaultdict(list)   # (run, batch) -> compiles outside executions
-    by_time = 0
-    comp = compiles(args.codegen) if args.codegen else []
-    for c in comp:
-        t, thread = c[0], c[1]
+    def attribute(t, thread):
+        """("exec", execution) or ("outside", (run, batch)) of a record
+        stamped `t` on `thread`, with whether it went by time; None if it
+        falls in no execution or batch."""
         m = TASK_THREAD.search(thread)
         if m:
             j = stage_job.get(int(m.group(1)))
             x = execs.get(jobs[j]["exec"]) if j is not None else None
             if x:
-                x.compiles.append(c)
-            elif j is not None and jobs[j]["run"]:
-                outside[(jobs[j]["run"], int(jobs[j]["batch"] or -1))].append(c)
-            continue
+                return ("exec", x), False
+            if j is not None and jobs[j]["run"]:
+                return ("outside", (jobs[j]["run"], int(jobs[j]["batch"] or -1))), False
+            return None, False
         m = STREAM_THREAD.match(thread)
         if m:
             run = m.group(1)
@@ -230,15 +282,24 @@ def main():
             live = [x for x in execs.values() if x.batch == (run, b) and x.id != x.root
                     and x.start <= t <= (x.end or t)]
             if live:
-                max(live, key=lambda x: x.start).compiles.append(c)
-            else:
-                outside[(run, b)].append(c)
-            continue
+                return ("exec", max(live, key=lambda x: x.start)), False
+            return ("outside", (run, b)), False
         live = [x for x in execs.values() if x.start <= t <= (x.end or t) and x.id != x.root]
         live = live or [x for x in execs.values() if x.start <= t <= (x.end or t)]
         if live:
-            max(live, key=lambda x: x.start).compiles.append(c)
-            by_time += 1
+            return ("exec", max(live, key=lambda x: x.start)), True
+        return None, False
+
+    outside = collections.defaultdict(list)   # (run, batch) -> compiles outside executions
+    by_time = 0
+    comp = compiles(args.codegen) if args.codegen else []
+    for c in comp:
+        where, timed = attribute(c[0], c[1])
+        if where and where[0] == "exec":
+            where[1].compiles.append(c)
+            by_time += timed
+        elif where:
+            outside[where[1]].append(c)
 
     def csum(cs):
         return len(cs), len({c[2] for c in cs}), sum(c[3] for c in cs)
@@ -293,6 +354,64 @@ def main():
         print(line)
     if args.codegen:
         print(f"compiles attributed by time (non-task driver threads): {by_time} of {len(comp)}")
+    if args.working_set and args.codegen:
+        working_set(args, lo, hi, batches, labels, millis, attribute)
+
+
+def working_set(args, lo, hi, batches, labels, millis, attribute):
+    """Distinct codegen cache keys of each selected batch's cycle: every
+    lookup from the batch's start to the next batch of the same query
+    (the other queries' batches in that time included), split by the step
+    that looked the key up. `own` counts the keys no other step of the
+    cycle looked up."""
+    cycles = collections.defaultdict(list)
+    for (run, b), p in batches.items():
+        if args.query in labels.get(run, run[:8]):
+            cycles[run].append((millis(p["timestamp"]), b, p))
+    windows = []
+    for run, bs in cycles.items():
+        bs.sort()
+        for i, (t0, b, p) in enumerate(bs):
+            end = bs[i + 1][0] if i + 1 < len(bs) else \
+                t0 + p["durationMs"].get("triggerExecution", 0)
+            if lo <= b <= hi:
+                windows.append((t0, end, run, b))
+    if not windows:
+        return
+    steps = {w: collections.defaultdict(set) for w in windows}
+    for t, thread, keys in cache_keys(args.codegen):
+        w = next((w for w in windows if w[0] <= t < w[1]), None)
+        if not w:
+            continue
+        where, _ = attribute(t, thread)
+        if where is None:
+            step = "unattributed"
+        elif where[0] == "outside":
+            step = f"{labels.get(where[1][0], where[1][0][:8])}: outside executions"
+        else:
+            x = where[1]
+            q = labels.get(x.batch[0], x.batch[0][:8]) if x.batch else "no batch"
+            if x.batch and x.batch[0] == w[2]:
+                lab, h, _, _ = plan_class(x.plan)
+                step = ("batch root: " if x.id == x.root else "") + f"{lab} [{h}]"
+            else:
+                step = q
+        steps[w][step].update(keys)
+    print()
+    totals = []
+    for w in sorted(windows):
+        by_step = steps[w]
+        cycle = set().union(*by_step.values()) if by_step else set()
+        totals.append(len(cycle))
+        driver = sum(k[0] == "driver" for k in cycle)
+        print(f"working set {labels.get(w[2], w[2][:8])} batch {w[3]}: {len(cycle)} keys "
+              f"({driver} driver, {len(cycle) - driver} executor) over {w[1] - w[0]} ms")
+        print(f"  {'keys':>4} {'own':>4}  step")
+        for step, ks in sorted(by_step.items(), key=lambda kv: -len(kv[1])):
+            others = set().union(*(v for s, v in by_step.items() if s != step))
+            print(f"  {len(ks):>4} {len(ks - others):>4}  {step}")
+    print(f"working set summary: {len(totals)} cycles, "
+          f"{sum(totals) / len(totals):.1f} keys per cycle (min {min(totals)}, max {max(totals)})")
 
 
 if __name__ == "__main__":
