@@ -25,7 +25,13 @@ import graft.streaming.{FileTopics, ParquetReplica, Replica, TopicSink, TopicSou
   * registry-derived `from_json` schema (C3/C4), reserved-attribute mapping
   * and links flattening (C5), recursive extraction of embedded sideload
   * records into their own model replicas (C4), LWW merge (C7/C8/C9), and
-  * to-many disassociation of vanished children (C11).
+  * to-many disassociation of vanished children (C11). Within one
+  * micro-batch, after the stats pass, the replica steps run in lanes, one
+  * per replica written: a model's merge in its own lane, a sideload's
+  * child merge followed by that association's C11 in the child's lane.
+  * Each lane keeps its steps' order; different lanes run at the same time
+  * (the reference's per-association thread pool,
+  * karafka_consumer_generator.rb:16-27).
   *
   * All topic queries start before any is awaited — the reference runs one
   * runner thread per topic (I5); here each topic is an independent
@@ -40,7 +46,11 @@ import graft.streaming.{FileTopics, ParquetReplica, Replica, TopicSink, TopicSou
   * consumer's tables), not per topic, so a model reachable through several
   * topics converges to one table; concurrent merges are serialized by the
   * storage layer ([[ParquetReplica.transform]] here, transactional MERGE in
-  * production).
+  * production). A consumer micro-batch submits up to one concurrent Spark
+  * job per replica it touches: its lanes share no state but the persisted
+  * batch, and LWW merges into different replicas commute, so overlapping
+  * them changes no result and hides the driver and storage latency of
+  * each step behind the others.
   */
 object Engine {
 
@@ -688,11 +698,15 @@ object Engine {
           // emptiness probe below: models (and sideload paths) absent from
           // this micro-batch skip their merge entirely, driver-side
           val stats = collectStats(b, t, options.syncedDataVariant)
-          t.models.foreach(
-            mergeModel(registry, t, _, b, replicas, topicName,
-              consumedDir, options, stats, batchId))
+          runLanes(t.models.flatMap(
+            modelSteps(registry, t, _, b, replicas, topicName,
+              consumedDir, options, stats, batchId)))
         }
-        // C17: poison batches park in the DLQ instead of failing the query
+        // C17: poison batches park in the DLQ instead of failing the query;
+        // `persist` returns only once every lane has ended, so a parked
+        // batch has no lane still writing (the lanes that succeeded keep
+        // their LWW writes, which a replay of the batch re-applies as
+        // no-ops)
         try {
           if (options.deadLetter)
             ConsumerOps.withDeadLetter(kept,
@@ -801,12 +815,17 @@ object Engine {
   private def eventTypeCol: Column =
     regexp_extract(col("event"), "_(created|updated|destroyed)$", 1)
 
-  /** Merge one model's slice of a decoded batch (and, recursively, its
-    * embedded sideload records) into the replicas. Import-mode topics
-    * (reference: persistor.rb:12-24) bulk-upsert `created` batches and
-    * HARD-destroy `destroyed` ids — no soft delete, no attribute
-    * preservation. */
-  private def mergeModel(
+  /** The replica steps of one model's slice of a decoded batch (and,
+    * recursively, of its embedded sideload records), each tagged with the
+    * replica it writes, in the order they must run within that replica:
+    * the model's own merge (with its C12 capture and C14 publish) in the
+    * model's lane; each sideload's child merge and then that
+    * association's C11 in the child's lane. Every step reads only the
+    * persisted batch, the driver-side [[SliceStats]] and its own replica.
+    * Import-mode topics (reference: persistor.rb:12-24) bulk-upsert
+    * `created` batches and HARD-destroy `destroyed` ids — no soft delete,
+    * no attribute preservation. */
+  private def modelSteps(
       registry: Registry,
       t: TopicDef,
       m: ModelDef,
@@ -816,92 +835,150 @@ object Engine {
       consumedDir: Option[String],
       options: EngineOptions,
       stats: Map[String, SliceStats],
-      batchId: Long): Unit = {
+      batchId: Long): Seq[(String, () => Unit)] = {
     // a model with no rows in this micro-batch skips its whole merge path
     // (the common case on multi-model topics) — no empty-frame Spark jobs
     val slice = stats.getOrElse(m.name, SliceStats(0, 0, Map.empty))
-    if (slice.n == 0) return
+    if (slice.n == 0) return Nil
     val parsed = batch
       .filter(col("model_name") === m.name)
       .select(eventTypeCol.as("event_type"),
         from_json(col("payload_json"), m.aggregateSchema(registry)).as("rec"),
         col("payload_json"))
 
-    if (t.importMode) {
+    if (t.importMode) return Seq(m.name -> { () =>
       val shaped = shapeRecords(m, parsed, options.syncedDataVariant)
       if (slice.nLive > 0) replicas(m.name).merge(
         shaped.filter(col("event_type") =!= EventType.Destroyed))
       if (slice.nDestroyed > 0) replicas(m.name).destroy(
         shaped.filter(col("event_type") === EventType.Destroyed)
           .select(col("synced_id")))
-      return
-    }
+    })
 
-    mergeRecords(m, parsed, replicas(m.name), topicName,
-      consumedDir, options, batchId, hasDestroys = slice.nDestroyed > 0)
+    val own = m.name -> { () =>
+      mergeRecords(m, parsed, replicas(m.name), topicName,
+        consumedDir, options, batchId, hasDestroys = slice.nDestroyed > 0)
+    }
 
     // C4 recursion: embedded sideload payloads persist as their own models
     // (only live parent payloads embed children — skip when none)
-    if (slice.nLive > 0) m.sideloads.foreach { dep =>
+    val children = if (slice.nLive == 0) Nil else m.sideloads.map { dep =>
       val child = registry.modelDef(dep).getOrElse(
         throw new IllegalArgumentException(
           s"unknown sideload model $dep on ${m.name}"))
       val assoc = m.hasMany.find(_.model == dep).getOrElse(
         throw new IllegalArgumentException(
           s"sideload $dep on ${m.name} needs a matching hasMany association"))
-      // a destroyed payload embeds nothing: its children read as null.
-      // explode_outer and a null filter, not explode: for explode Spark
-      // infers a non-empty-list pre-filter that parses every payload
-      // again in a plan step of its own
-      val childParsed = parsed
-        .select(explode_outer(when(col("event_type") =!= EventType.Destroyed,
-          col(s"rec.$dep"))).as("rec"))
-        .filter(col("rec").isNotNull)
-        .select(lit(EventType.Updated).as("event_type"), col("rec"),
-          to_json(col("rec")).as("payload_json"))
-      // sideloaded children are all stamped `updated`: no destroys
-      mergeRecords(child, childParsed, replicas(dep), topicName,
-        consumedDir, options, batchId, hasDestroys = false)
+      dep -> { () =>
+        // a destroyed payload embeds nothing: its children read as null.
+        // explode_outer and a null filter, not explode: for explode Spark
+        // infers a non-empty-list pre-filter that parses every payload
+        // again in a plan step of its own
+        val childParsed = parsed
+          .select(explode_outer(when(col("event_type") =!= EventType.Destroyed,
+            col(s"rec.$dep"))).as("rec"))
+          .filter(col("rec").isNotNull)
+          .select(lit(EventType.Updated).as("event_type"), col("rec"),
+            to_json(col("rec")).as("payload_json"))
+        // sideloaded children are all stamped `updated`: no destroys
+        mergeRecords(child, childParsed, replicas(dep), topicName,
+          consumedDir, options, batchId, hasDestroys = false)
 
-      // C11: children of touched parents absent from the incoming id list
-      // disassociate — needs the child replica to carry the FK attribute.
-      // The incoming list is the one each parent's in-batch keep-latest
-      // winner declares, the row `mergeRecords` applied (the reference's
-      // default remove-duplicates strategy never lets an older payload of
-      // the batch reach C11); the stats pass already picked the winners.
-      // Only winners that DECLARE a to-many list (non-null, possibly
-      // empty) participate — observer republishes and destroys carry no
-      // list and must not disassociate anything, so batches without any
-      // skip driver-side.
-      val lists = slice.lists.getOrElse(assoc.name, Map.empty)
-      if (child.attributes.exists(_.name == assoc.fk) && lists.nonEmpty) {
-        val winners = batch.sparkSession.createDataFrame(
-          java.util.Arrays.asList(lists.toSeq.map { case (p, ids) => Row(p, ids) }: _*),
-          // a non-null key spares the join a null filter on this side
-          StructType(Seq(StructField(assoc.fk, LongType, nullable = false),
-            StructField("__ids", ArrayType(LongType)))))
-        // bucket-pruned C11: resolve the doomed child KEYS first (one
-        // semi join with the winners' lists broadcast, collected in one
-        // action), then rewrite only the buckets those keys hash into —
-        // never an O(child table) rewrite. The common case, no child
-        // dropped, skips the destroy: no probe, no MoR delta fold, no
-        // version. The keys resolve from a column-pruned read of the
-        // child replica's (synced_id, fk) columns — the reference's
-        // `WHERE parent_id = ?` lookup on the child table,
-        // persistor.rb:102-152 — which never scans the payload. The
-        // resolution is NOT bounded by the batch: it reads every child
-        // key, and under merge-on-read folds the base plus every delta
-        // epoch in one shuffle on each batch — O(child keys).
-        val rep = replicas(dep)
-        rep.withLock {
-          val doomedKeys = Persistor.disassociatedChildKeys(
-            rep.read(Seq("synced_id", assoc.fk)), winners,
-            parentKey = assoc.fk, childKey = "synced_id", listCol = "__ids")
-          val rows = doomedKeys.collect()
-          if (rows.nonEmpty)
-            rep.destroy(batch.sparkSession.createDataFrame(
-              java.util.Arrays.asList(rows: _*), doomedKeys.schema))
+        // C11: children of touched parents absent from the incoming id
+        // list disassociate — needs the child replica to carry the FK
+        // attribute. It runs after the child's merge in the same lane: a
+        // child that moved between parents inside this batch resolves
+        // only from its post-merge FK. The incoming list is the one each
+        // parent's in-batch keep-latest winner declares, the row
+        // `mergeRecords` applied (the reference's default
+        // remove-duplicates strategy never lets an older payload of the
+        // batch reach C11); the stats pass already picked the winners.
+        // Only winners that DECLARE a to-many list (non-null, possibly
+        // empty) participate — observer republishes and destroys carry no
+        // list and must not disassociate anything, so batches without any
+        // skip driver-side.
+        val lists = slice.lists.getOrElse(assoc.name, Map.empty)
+        if (child.attributes.exists(_.name == assoc.fk) && lists.nonEmpty) {
+          val winners = batch.sparkSession.createDataFrame(
+            java.util.Arrays.asList(lists.toSeq.map { case (p, ids) => Row(p, ids) }: _*),
+            // a non-null key spares the join a null filter on this side
+            StructType(Seq(StructField(assoc.fk, LongType, nullable = false),
+              StructField("__ids", ArrayType(LongType)))))
+          // bucket-pruned C11: resolve the doomed child KEYS first (one
+          // semi join with the winners' lists broadcast, collected in one
+          // action), then rewrite only the buckets those keys hash into —
+          // never an O(child table) rewrite. The common case, no child
+          // dropped, skips the destroy: no probe, no MoR delta fold, no
+          // version. The keys resolve from a column-pruned read of the
+          // child replica's (synced_id, fk) columns — the reference's
+          // `WHERE parent_id = ?` lookup on the child table,
+          // persistor.rb:102-152 — which never scans the payload. The
+          // resolution is NOT bounded by the batch: it reads every child
+          // key, and under merge-on-read folds the base plus every delta
+          // epoch in one shuffle on each batch — O(child keys).
+          val rep = replicas(dep)
+          rep.withLock {
+            val doomedKeys = Persistor.disassociatedChildKeys(
+              rep.read(Seq("synced_id", assoc.fk)), winners,
+              parentKey = assoc.fk, childKey = "synced_id", listCol = "__ids")
+            val rows = doomedKeys.collect()
+            if (rows.nonEmpty)
+              rep.destroy(batch.sparkSession.createDataFrame(
+                java.util.Arrays.asList(rows: _*), doomedKeys.schema))
+          }
         }
+      }
+    }
+    own +: children
+  }
+
+  /** Run a micro-batch's replica steps in lanes, one per replica: each
+    * lane runs its steps in their given order, and different lanes run at
+    * the same time (the reference's per-association thread pool,
+    * karafka_consumer_generator.rb:16-27). Lanes share nothing but the
+    * persisted batch and driver-side values, and LWW merges into
+    * different replicas commute, so the result is the sequential one.
+    *
+    * A single lane runs inline. Otherwise each lane gets a thread of its
+    * own, `graft-lane-<replica>`, created here for this batch only: a
+    * fresh thread inherits the caller's Spark local properties (the
+    * streaming query and batch ids, the job group, the root SQL
+    * execution id), its active session and its context class loader,
+    * which keeps the lanes' jobs counted under the batch and their
+    * generated classes under the same codegen cache keys; a pooled
+    * thread would carry another batch's properties. Returns once every
+    * lane has ended, rethrowing the first failure (later ones
+    * suppressed); an interrupt is passed on to the lanes, awaited and
+    * rethrown. */
+  private def runLanes(steps: Seq[(String, () => Unit)]): Unit = {
+    val lanes = steps.map(_._1).distinct
+      .map(r => r -> steps.collect { case (`r`, step) => step })
+    if (lanes.size <= 1) steps.foreach(_._2())
+    else {
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = lanes.map { case (r, laneSteps) =>
+        val th = new Thread(() =>
+          try laneSteps.foreach(_()) catch { case e: Throwable => failures.add(e); () },
+          s"graft-lane-$r")
+        th.setDaemon(true)
+        th.start()
+        th
+      }
+      var interrupt: Option[InterruptedException] = None
+      threads.foreach { th =>
+        while (th.isAlive)
+          try th.join()
+          catch {
+            case e: InterruptedException if interrupt.isEmpty =>
+              interrupt = Some(e)
+              threads.foreach(_.interrupt())
+            case _: InterruptedException =>
+          }
+      }
+      interrupt.foreach(e => throw e)
+      Option(failures.peek()).foreach { first =>
+        failures.forEach(e => if (e ne first) first.addSuppressed(e))
+        throw first
       }
     }
   }

@@ -115,8 +115,9 @@ object StreamBench {
     * row's lag, so a latency-oriented deployment polls as fast as the
     * source listing allows. */
   def run(spark: SparkSession,
-      // feedInterval 400 ms ≈ 1.25k rows/s: the driver-local feeder costs
-      // ~5 ms a file, so the sleep sets the rate
+      // feedInterval 400 ms ≈ 1.25k rows/s: file k of a phase is due k
+      // intervals after the phase starts, so the driver-local feeder's
+      // ~5 ms a file does not lower the rate
       batches: Int = 44, rowsPerBatch: Int = 500,
       triggerMs: Int = 25, feedIntervalMs: Int = 400,
       // warmup files fed at a DENSER cadence (150 ms): residual JIT in the
@@ -237,20 +238,27 @@ object StreamBench {
       // latency requires that backlog fully applied before the
       // measured phase starts, or queue-clearing catch-up batches
       // smear into the percentiles
+      def sleepUntil(dueMs: Long): Unit = {
+        val wait = dueMs - System.currentTimeMillis()
+        if (wait > 0) Thread.sleep(wait)
+      }
+      val warmupT0 = System.currentTimeMillis()
       for (b <- 0 until warmupBatches) {
-        feed(b); Thread.sleep(warmupFeedIntervalMs.toLong)
+        feed(b); sleepUntil(warmupT0 + (b + 1L) * warmupFeedIntervalMs)
       }
       awaitApplied(warmupBatches)
       warmupEndMs = System.currentTimeMillis()
       // phase 2 — steady state, fed strictly below saturation
       def measuredMerges = merges.stream().filter(_._1 > warmupEndMs).count()
       val feedDeadline = System.currentTimeMillis() + timeoutMs
+      val feedT0 = System.currentTimeMillis()
       var b = warmupBatches
       while ((b < batches || measuredMerges < minMeasuredMerges) &&
           System.currentTimeMillis() < feedDeadline &&
           queries.forall(_.isActive)) {
-        feed(b); Thread.sleep(feedIntervalMs.toLong)
+        feed(b)
         b += 1
+        sleepUntil(feedT0 + (b - warmupBatches).toLong * feedIntervalMs)
       }
       awaitApplied(b)
     } finally {

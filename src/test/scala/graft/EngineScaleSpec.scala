@@ -417,6 +417,143 @@ class EngineScaleSpec extends SparkSpec {
     c11FromWinners(mergeOnRead = false)
   }
 
+  /** One merge or destroy a [[RecordingReplica]] ran: the replica, the
+    * operation, its thread, its start and end (`System.nanoTime`) and its
+    * end in wall-clock millis. */
+  private final case class Call(replica: String, op: String, thread: String,
+      start: Long, end: Long, endMs: Long)
+
+  /** Replica double around a [[ParquetReplica]] that records every merge
+    * and destroy into `calls`. `before(replica, op)` runs at the start of
+    * each, inside its recorded span: the hook a test holds or fails a
+    * call with. */
+  private final class RecordingReplica(name: String, underlying: ParquetReplica,
+      calls: java.util.concurrent.ConcurrentLinkedQueue[Call],
+      before: (String, String) => Unit) extends Replica {
+    private def record(op: String)(f: => Unit): Unit = {
+      val start = System.nanoTime()
+      try { before(name, op); f }
+      finally calls.add(Call(name, op, Thread.currentThread.getName, start,
+        System.nanoTime(), System.currentTimeMillis()))
+    }
+    def read(): DataFrame = underlying.read()
+    override def read(columns: Seq[String]): DataFrame =
+      underlying.read(columns)
+    override def readBuckets(keys: DataFrame): DataFrame =
+      underlying.readBuckets(keys)
+    override def neverCommitted: Boolean = underlying.neverCommitted
+    def merge(updates: DataFrame,
+        prepare: (DataFrame, DataFrame) => DataFrame): Unit =
+      record("merge")(underlying.merge(updates, prepare))
+    def destroy(ids: DataFrame, idCol: String): Unit =
+      record("destroy")(underlying.destroy(ids, idCol))
+    def transform(f: DataFrame => DataFrame): Unit = underlying.transform(f)
+    def vacuum(retainVersions: Int): Unit = underlying.vacuum(retainVersions)
+    def withLock[A](f: => A): A = underlying.withLock(f)
+  }
+
+  private def recordingOptions(mergeOnRead: Boolean,
+      calls: java.util.concurrent.ConcurrentLinkedQueue[Call],
+      before: (String, String) => Unit): Engine.EngineOptions =
+    Engine.EngineOptions(mergeOnRead = mergeOnRead, replicaCompactEvery = 100,
+      replicaFactory = Some((s, m, root) => new RecordingReplica(m.name,
+        new ParquetReplica(s, root, m.replicaSchema.toDDL, buckets = m.buckets,
+          mergeOnRead = mergeOnRead, compactEvery = 100), calls, before)))
+
+  private def laneThreadsAlive: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      .filter(_.startsWith("graft-lane-")).toSet
+  }
+
+  /** One consumer micro-batch carrying two parents, their sideloaded
+    * children and a dropped child: the parent's merge runs beside the
+    * child's lane, and inside that lane C11's destroy starts after the
+    * child's merge has ended. The parent's merge holds until the child's
+    * merge has started, so steps run one after another would keep them
+    * apart (the hold times out after 30 s). */
+  private def lanesOverlapInOrder(mergeOnRead: Boolean): Unit = {
+    import scala.jdk.CollectionConverters._
+    val fx = new C11Fixture(if (mergeOnRead) "nlm" else "nlc")
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[Call]()
+    @volatile var armed = false
+    val childMerging = new java.util.concurrent.CountDownLatch(1)
+    val opts = recordingOptions(mergeOnRead, calls, (rep, op) =>
+      if (armed && op == "merge") {
+        if (rep == "order_line") childMerging.countDown()
+        if (rep == "order")
+          childMerging.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      })
+    fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
+    fx.run(opts)
+    // parents 1 and 2 republish; line 4 of parent 1 is gone
+    fx.dropped = Set(4L)
+    fx.orderChange(Seq(1L, 2L), "f2", "2026-05-03 00:00:00")
+    calls.clear()
+    armed = true
+    val res = fx.run(opts)
+    armed = false
+    assert(fx.childIds(res) == (1L to 32L).toSet - 4L)
+    val totals = res.replicas("order").read().select($"synced_id", $"total")
+      .as[(Long, Double)].collect().toMap
+    assert(totals == (1L to 8L).map(i => i -> i * 100.0).toMap, s"$totals")
+
+    val seen = calls.asScala.toSeq
+    val parent = seen.filter(_.replica == "order")
+    val child = seen.filter(_.replica == "order_line")
+    assert(parent.map(_.op) == Seq("merge") && child.map(_.op) == Seq("merge", "destroy"),
+      s"calls: $seen")
+    val (p, cMerge, cDestroy) = (parent.head, child.head, child(1))
+    assert(p.thread == "graft-lane-order" &&
+      child.forall(_.thread == "graft-lane-order_line"), s"threads: $seen")
+    assert(p.start < cDestroy.end && cMerge.start < p.end,
+      s"the parent's merge must overlap the child lane: $seen")
+    assert(cDestroy.start >= cMerge.end,
+      s"C11's destroy must follow the child's merge: $seen")
+    assert(laneThreadsAlive.isEmpty, s"lane threads alive: $laneThreadsAlive")
+  }
+
+  test("lanes: the parent's merge overlaps the child lane, and C11 follows " +
+      "the child's merge, under merge-on-read") {
+    lanesOverlapInOrder(mergeOnRead = true)
+  }
+
+  test("lanes: the parent's merge overlaps the child lane, and C11 follows " +
+      "the child's merge, under copy-on-write") {
+    lanesOverlapInOrder(mergeOnRead = false)
+  }
+
+  test("lanes: a failing lane parks the batch in the DLQ only after the " +
+      "other lanes have ended, and leaves no lane thread alive") {
+    import scala.jdk.CollectionConverters._
+    val fx = new C11Fixture("nlf")
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[Call]()
+    val opts = recordingOptions(mergeOnRead = true, calls, (rep, op) =>
+      (rep, op) match {
+        case ("order", "merge") => throw new IllegalStateException("parent merge fails")
+        // the child lane outlasts the failure by far
+        case ("order_line", "merge") => Thread.sleep(1500)
+        case _ =>
+      })
+    fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
+    val res = fx.run(opts)
+    val dlq = new java.io.File(s"${fx.work}/dlq/${fx.reg.topicName(fx.reg.topics.head)}")
+    assert(Option(dlq.list()).map(_.toSeq.sorted).contains(Seq("__batch=0")),
+      s"parked: ${Option(dlq.list()).map(_.toSeq)}")
+    val parts = Files.walk(new java.io.File(dlq, "__batch=0").toPath).iterator.asScala
+      .filter(f => f.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.nonEmpty)
+    val parkedMs = parts.map(Files.getLastModifiedTime(_).toMillis).min
+    val childEndMs = calls.asScala.filter(_.replica == "order_line").map(_.endMs).max
+    assert(parkedMs >= childEndMs,
+      s"parked at $parkedMs, before the child lane ended at $childEndMs")
+    // the child lane ran to its end: the failed parent merge stops no
+    // other replica's steps
+    assert(fx.childIds(res) == (1L to 32L).toSet)
+    assert(res.replicas("order").neverCommitted)
+    assert(laneThreadsAlive.isEmpty, s"lane threads alive: $laneThreadsAlive")
+  }
+
   test("models absent from a micro-batch skip their merge path entirely") {
     val tmp = Files.createTempDirectory("graft-skip").toString
     val chg = s"$tmp/chg"

@@ -25,12 +25,19 @@ and compile time. Compiles are attributed by thread:
   - a `stream execution thread` names its query run: the batch whose
     trigger window holds the record, then the innermost execution of that
     batch running at that time;
+  - a `graft-lane-<model>` thread (one replica lane of a consumer
+    micro-batch) names its replica: the latest-started nested execution
+    running at that time whose step label names `<model>`;
   - other driver threads (exchange and query-stage threads) go to the
     latest-started execution running at that time, and are counted as
     `by time` in the summary, since concurrent queries make them
     ambiguous.
+Each batch line also prints its `overlap`: the summed walls of the
+batch's nested executions over the wall of its root execution. Steps run
+one after another read below 1; above 1, some ran at the same time (the
+consumer's replica lanes).
 The closing summary gives, per query over the selected batches, compiles
-per batch and the distinct classes of the whole window.
+per batch, the distinct classes of the whole window and the mean overlap.
 
 --working-set needs a CODEGEN_LOG written with
 `tools/codegen-refs-log4j2.properties`, which also logs every codegen
@@ -95,6 +102,15 @@ class Exec:
         self.plan = e.get("physicalPlanDescription") or ""
         self.jobs = []
         self.compiles = []
+        self.names = None   # the words of its step label, set on first use
+
+    def wall(self):
+        return (self.end or self.start) - self.start
+
+    def names_model(self, model):
+        if self.names is None:
+            self.names = set(re.split(r"[^A-Za-z0-9_]+", plan_class(self.plan)[0]))
+        return model in self.names
 
 
 def plan_class(plan):
@@ -128,6 +144,7 @@ def plan_class(plan):
 LOG_HEAD = re.compile(r"^(\d{13}) \[(.*)\] (TRACE|DEBUG|INFO|WARN|ERROR) (\S+): ?(.*)$")
 TASK_THREAD = re.compile(r"in stage (\d+)\.\d+ \(TID")
 STREAM_THREAD = re.compile(r"^stream execution thread for .*runId = ([0-9a-f-]+)\]$")
+LANE_THREAD = re.compile(r"^graft-lane-(.+)$")
 
 
 def records(path):
@@ -284,6 +301,12 @@ def main():
             if live:
                 return ("exec", max(live, key=lambda x: x.start)), False
             return ("outside", (run, b)), False
+        m = LANE_THREAD.match(thread)
+        if m:
+            live = [x for x in execs.values() if x.batch and x.id != x.root
+                    and x.start <= t <= (x.end or t) and x.names_model(m.group(1))]
+            if live:
+                return ("exec", max(live, key=lambda x: x.start)), False
         live = [x for x in execs.values() if x.start <= t <= (x.end or t) and x.id != x.root]
         live = live or [x for x in execs.values() if x.start <= t <= (x.end or t)]
         if live:
@@ -305,7 +328,8 @@ def main():
         return len(cs), len({c[2] for c in cs}), sum(c[3] for c in cs)
 
     summary = collections.defaultdict(lambda: {"batches": 0, "compiles": 0, "classes": set(),
-                                               "jobs": 0, "tasks": 0, "trigger": 0})
+                                               "jobs": 0, "tasks": 0, "trigger": 0,
+                                               "overlap": []})
     for (run, b), p in sorted(batches.items(), key=lambda kv: millis(kv[1]["timestamp"])):
         label = labels.get(run, run[:8])
         if args.query not in label or not (lo <= b <= hi):
@@ -317,10 +341,14 @@ def main():
         allc = [c for x in inner for c in x.compiles] + outside.get((run, b), [])
         n, d, ms = csum(allc)
         trig = p["durationMs"].get("triggerExecution", 0)
+        root = next((x for x in inner if x.id == x.root), None)
+        overlap = (sum(x.wall() for x in inner if x.id != x.root) / root.wall()
+                   if root and root.wall() else None)
         print(f"{label} run {run[:8]} batch {b}: trigger {trig} ms, "
               f"addBatch {p['durationMs'].get('addBatch', 0)} ms, {len(bj)} jobs, "
               f"{len(stages)} stages, {tasks} tasks, {n} compiles "
-              f"({d} distinct, {ms:.0f} ms)")
+              f"({d} distinct, {ms:.0f} ms)"
+              + (f", overlap {overlap:.2f}" if overlap is not None else ""))
         print(f"  {'exec':>5} {'wall_ms':>7} {'jobs':>4} {'stg':>3} {'tasks':>5} "
               f"{'join':>4} {'agg':>3} {'comp':>4} {'dist':>4} {'c_ms':>5}  step")
         for x in inner:
@@ -329,7 +357,7 @@ def main():
                 lab = "batch root: " + lab
             st = [s for j in x.jobs for s in jobs[j]["stages"]]
             n, d, ms = csum(x.compiles)
-            print(f"  {x.id:>5} {(x.end or x.start) - x.start:>7} {len(x.jobs):>4} "
+            print(f"  {x.id:>5} {x.wall():>7} {len(x.jobs):>4} "
                   f"{len(st):>3} {sum(stage_tasks.get(s, 0) for s in st):>5} {joins:>4} "
                   f"{aggs:>3} {n:>4} {d:>4} {ms:>5.0f}  {lab} [{h}]")
         if outside.get((run, b)):
@@ -343,6 +371,8 @@ def main():
         s["jobs"] += len(bj)
         s["tasks"] += tasks
         s["trigger"] += trig
+        if overlap is not None:
+            s["overlap"].append(overlap)
     print()
     for label, s in summary.items():
         k = max(s["batches"], 1)
@@ -351,6 +381,8 @@ def main():
         if args.codegen:
             line += (f"; {s['compiles'] / k:.1f} compiles per batch, "
                      f"{len(s['classes'])} distinct classes over the window")
+        if s["overlap"]:
+            line += f"; overlap {sum(s['overlap']) / len(s['overlap']):.2f}"
         print(line)
     if args.codegen:
         print(f"compiles attributed by time (non-task driver threads): {by_time} of {len(comp)}")
