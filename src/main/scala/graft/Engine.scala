@@ -361,8 +361,8 @@ object Engine {
     * the primary topic otherwise. The snapshot may carry a `__canceled`
     * column for the soft-delete image; dependency-only models are refused
     * (P19). The scan is one batch append per topic; pacing at scale is
-    * writer partitioning ([[graft.producer.Genesis.assignBatchesDense]]),
-    * not driver-side sleeps. */
+    * writer partitioning (`paceFiles` repartitions the wire into that
+    * many files per topic), not driver-side sleeps. */
   def genesis(
       spark: SparkSession,
       registry: Registry,
@@ -541,9 +541,9 @@ object Engine {
     * built by [[EventClassifier.changeset]]), navigate the declared
     * association to the dependent records, and re-serialize them as
     * `<model>_updated` (reference: producer.rb:101-120 +
-    * outbox/publisher.rb:41-61). Single-hop associations stream here;
-    * dotted chains compose via [[graft.producer.Observers.resolve]] in
-    * batch. The matched keys are the micro-batch (small side); the
+    * outbox/publisher.rb:41-61). The association path streams here
+    * whole, dotted chains included: each hop joins the next model's
+    * snapshot. The matched keys are the micro-batch (small side); the
     * dependent snapshot is the table — the join keeps the snapshot
     * unbroadcast, so the plan survives a dependent table of any size. */
   private def observerWire(

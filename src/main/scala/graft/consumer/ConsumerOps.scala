@@ -52,15 +52,6 @@ object ConsumerOps {
       if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d
     }
 
-  /** Link-column naming for relationship ids (C5):
-    * to-one `synced_<rel>_id`, to-many `synced_<singular(rel)>_ids`,
-    * polymorphic adds `synced_<rel>_type`
-    * (see [[graft.codec.LinksFlattener]]). */
-  def linkColName(rel: String, toMany: Boolean): String =
-    graft.codec.LinksFlattener.colName(rel,
-      if (toMany) graft.codec.LinksFlattener.ToMany
-      else graft.codec.LinksFlattener.ToOne)
-
   /** C6 — message filters: predicate chain; matching rows are dropped from
     * the main flow and land in a quarantine side output
     * (reference: params_batch_processor.rb:30-34, default_message_filter.rb:11-24).

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity.IvfPqIndex
 
-/** The STANDING form of the persisted ANN index: a manifest-versioned,
+/** The persisted ANN index — the one writer and reader of a stored
+  * [[Similarity.IvfPqIndex]]: a manifest-versioned,
   * epoch-structured store that composes the whole maintenance
   * lifecycle — O(batch) extends, tombstone deletes, drift-triggered
   * repair — under continuous ingest, with every reader answering from
@@ -24,8 +25,9 @@ import graft.ext.Similarity.IvfPqIndex
   *
   * Why epochs + dead cells instead of rewriting `codes/`: an extend
   * must cost O(batch) — one new epoch directory, partitioned by cell
-  * so probes still prune at the file level ([[Similarity
-  * .saveIvfPqIndex]]'s layout, per epoch). A repair re-routes ONLY the
+  * and sorted by (nid, sub) within each cell file, so a probe's
+  * broadcast cell gate dynamic-partition-prunes every epoch scan to its
+  * `nProbe` cell directories (PlanShapeSpec). A repair re-routes ONLY the
   * drifted cells' rows into a fresh epoch under FRESH cell ids
   * ([[Similarity.repairDriftedCells]] semantics) and marks the old
   * cell ids DEAD in the next manifest — prior epochs are never
@@ -41,7 +43,9 @@ import graft.ext.Similarity.IvfPqIndex
   *
   * Every mutation publishes through the layout, so a crash leaves the
   * old version fully readable and a concurrent reader never sees a torn
-  * index. Mutations serialize on the layout's writer lock.
+  * index. Extends, deletes and repairs keep every loaded snapshot
+  * readable; a compaction vacuums the versions it folds. Mutations
+  * serialize on the layout's writer lock.
   */
 final class AnnIndexStore(spark: SparkSession, root: String) {
   import graft.storage.{Hcfs, VersionedLayout}
@@ -90,6 +94,8 @@ final class AnnIndexStore(spark: SparkSession, root: String) {
   /** Initialize the store from a freshly built index (version 0). */
   def init(index: IvfPqIndex): Unit = layout.withLock {
     require(currentVersion < 0, s"ann store $root already initialized")
+    require(index.centroids.nonEmpty && index.codebook.nonEmpty,
+      s"refusing to persist an index with no fit artifacts to $root")
     Hcfs.mkdirs(spark, root)
     import spark.implicits._
     index.codebook.map { case (s_, c_, v_) => (s_, c_, v_.toSeq) }
@@ -183,14 +189,20 @@ final class AnnIndexStore(spark: SparkSession, root: String) {
 
   /** Fold epochs + tombstones + dead cells into one fresh epoch — the
     * periodic debt collection ([[graft.streaming.ParquetReplica]]'s
-    * compaction, same trade). */
+    * compaction, same trade) — and vacuum what it folded: the old
+    * epochs, tombstones, superseded centroid sets and manifests. So a
+    * compaction INVALIDATES older snapshots: an index loaded before it
+    * must be reloaded, as after [[TextSearch.saveBm25Index]]. */
   def compact(): Unit = layout.withLock {
     val (v, m) = current()
     val dir = s"epoch-${v + 1}"
     // reads the LIVE rows from the old epochs, writes a NEW directory —
-    // never a self-overwrite; the old epochs stay until a vacuum
+    // never a self-overwrite
     writeEpoch(dir, load(m).codes)
     publish(v + 1,
       Manifest(m.centroidVersion, Seq(Epoch(Seq(dir))), Set.empty))
+    layout.vacuum(v + 1, (_, lines) =>
+      VersionedLayout.logDirs(VersionedLayout.parseLog(lines)) ++
+        Seq("codebook", s"centroids-v${m.centroidVersion}"), async = true)
   }
 }

@@ -772,11 +772,10 @@ object Similarity {
 
   /** The persistable IVF-PQ index: the two seeded fit artifacts plus the
     * per-vector code table `codes` — (nid, cell, sub: one row per
-    * subspace, code). Write `codes` partitioned by `cell` and store the
-    * constants beside it; [[Similarity.ivfPqTopKOnIndex]] accepts the
-    * reloaded frame unchanged (IvfPqSpec round-trips it through
-    * parquet), so the corpus floats are read exactly once per index
-    * build, never per query batch. */
+    * subspace, code). [[AnnIndexStore]] persists it (codes partitioned
+    * by `cell`, the constants beside them) and every index entry point
+    * accepts its `load()` unchanged, so the corpus floats are read
+    * exactly once per index build, never per query batch. */
   final case class IvfPqIndex(
       centroids: Seq[(Int, Array[Double])],
       codebook: Seq[(Int, Int, Array[Double])],
@@ -848,61 +847,6 @@ object Similarity {
       idCol: String): IvfPqIndex =
     index.copy(codes = index.codes
       .join(ids.select(col(idCol).as("nid")), Seq("nid"), "left_anti"))
-
-  /** Persist an [[IvfPqIndex]] as the standing ANN layout:
-    * `path/codes/cell=<c>/…` (codes PARTITIONED BY cell — the layout
-    * every claim about probe/delete/repair pruning assumes, now an API:
-    * a probe's broadcast cell gate dynamic-partition-prunes the scan to
-    * its `nProbe` cell DIRECTORIES, and a repair's `cell isin` prunes
-    * statically, before any file opens), with the small frozen fit
-    * artifacts (centroids, codebook) as exact-double parquet beside it.
-    * One co-locating shuffle at save, amortized over every probe batch;
-    * rows sort by (nid, sub) within each cell file so a delete's
-    * anti-join scans tight row groups. */
-  def saveIvfPqIndex(index: IvfPqIndex, path: String): Unit = {
-    val session = index.codes.sparkSession
-    import session.implicits._
-    require(index.centroids.nonEmpty && index.codebook.nonEmpty,
-      s"refusing to persist an index with no fit artifacts to $path")
-    index.codes
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("nid"), col("sub"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes")
-    // fit artifacts are driver-side Seqs a few KB big; parquet (not
-    // JSON) so the doubles round-trip bit-exactly
-    index.centroids.map { case (i, c) => (i, c.toSeq) }
-      .toDF("cell", "cvec").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    index.codebook.map { case (s_, c_, v_) => (s_, c_, v_.toSeq) }
-      .toDF("sub", "code", "cvec").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/codebook")
-  }
-
-  /** Reload a persisted [[IvfPqIndex]]. The fit artifacts collect
-    * driver-side (bounded: nCentroids + m·codebookSize rows — the same
-    * constants every probe already broadcasts); `codes` reads the
-    * cell-partitioned layout lazily with the canonical column order, so
-    * every standing-index entry point ([[ivfPqTopKOnIndex]],
-    * [[extendIvfPqIndex]], [[removeFromIvfPqIndex]],
-    * [[repairDriftedCells]], [[ivfCellDrift]]) accepts the reloaded
-    * value unchanged — and cell-gated ones now prune at the file
-    * level (IvfPqStorageSpec pins probe bit-equality; the partition
-    * pruning is pinned in PlanShapeSpec). */
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfPqIndex = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1).toSeq
-    val cb = spark.read.parquet(s"$path/codebook")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .sortBy(t => (t._1, t._2)).toSeq
-    IvfPqIndex(cents, cb,
-      spark.read.parquet(s"$path/codes")
-        .select(col("nid"), col("cell").cast("int").as("cell"),
-          col("sub"), col("code")))
-  }
 
   /** The repair fit: `splitInto × |cells|` replacement centroids for a
     * set of drifted cells, fit over the vectors CURRENTLY ROUTED to

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.Q._
-import graft.ext.{Curation, Multimodal, Sharding, Similarity, TextAnalysis, TextDedup}
+import graft.ext.{AnnIndexStore, Curation, Multimodal, Sharding, Similarity, TextAnalysis, TextDedup}
 
 /** LLM-data-pipeline operators (BASELINE.json north star): deduplication,
   * similarity search, text analysis, multimodal columns — over the
@@ -5168,16 +5168,16 @@ object ExtQueries {
         |  count(*) AS n_results
         |FROM cands GROUP BY qid ORDER BY qid""".stripMargin),
 
-    // The PERSISTED ANN index through a full maintenance cycle: build
-    // on 90% → save (codes partitioned by cell) → RELOAD → extend with
-    // the 10% batch → delete a slice → save the MAINTAINED state to a
-    // second location (never overwrite a layout your lazy codes still
-    // read from) → reload → probe. Hash-checked against
-    // NaiveOracles.x154, which brute-force re-encodes the final
-    // survivor corpus from the same frozen fits: two parquet
-    // round-trips and three maintenance ops must be bit-invisible.
-    // Probes against the cell-partitioned layout dynamic-partition-
-    // prune to the probed cells' directories (PlanShapeSpec).
+    // The PERSISTED ANN index through a full maintenance cycle on
+    // AnnIndexStore: init from a build on 90% → extend with the 10%
+    // batch (one O(batch) epoch) → delete a slice (one tombstone) →
+    // compact (the live codes rewritten as one cell-partitioned epoch,
+    // the folded directories vacuumed) → load → probe. Hash-checked
+    // against NaiveOracles.x154, which brute-force re-encodes the final
+    // survivor corpus from the same frozen fits: the store's round-trips
+    // and three maintenance ops must be bit-invisible. Probes against
+    // the cell-partitioned epochs dynamic-partition-prune to the probed
+    // cells' directories (PlanShapeSpec).
     "x154_ann_stored_index" -> rowsOnly(
       (s, dir) => {
         val emb = tbl(s, dir, "embeddings")
@@ -5187,17 +5187,15 @@ object ExtQueries {
           .select(col("vec_id"))
         val root = s"${sys.props("java.io.tmpdir")}/graft-x154-" +
           s"${java.lang.Integer.toHexString(dir.hashCode)}"
-        Similarity.saveIvfPqIndex(
-          Similarity.buildIvfPqIndex(base, "vec_id", "embedding",
-            nCentroids = 16, m = 4, codebookSize = 16, seed = 42L),
-          s"$root/v0")
-        val idx0 = Similarity.loadIvfPqIndex(s, s"$root/v0")
-        Similarity.saveIvfPqIndex(
-          Similarity.removeFromIvfPqIndex(
-            Similarity.extendIvfPqIndex(idx0, delta, "vec_id", "embedding"),
-            doomed, "vec_id"),
-          s"$root/v1")
-        val idx = Similarity.loadIvfPqIndex(s, s"$root/v1")
+        // stateful layout: each run exercises the full lifecycle
+        graft.storage.Hcfs.delete(s, root)
+        val store = new AnnIndexStore(s, root)
+        store.init(Similarity.buildIvfPqIndex(base, "vec_id", "embedding",
+          nCentroids = 16, m = 4, codebookSize = 16, seed = 42L))
+        store.extend(delta, "vec_id", "embedding")
+        store.remove(doomed, "vec_id")
+        store.compact()
+        val idx = store.load()
         val queries = emb.filter(col("vec_id") % 100 === 0)
         Similarity.ivfPqTopKOnIndex(idx, queries, "vec_id", "embedding",
             k = 5, nProbe = 4)

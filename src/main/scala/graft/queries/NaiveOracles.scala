@@ -663,8 +663,9 @@ object NaiveOracles {
   /** Naive x154: the stored-index lifecycle's END STATE re-derived —
     * identical final corpus and frozen fits to [[x149]] (build on 90%,
     * extend 10%, delete the %20==5 slice), WITHOUT the drift columns:
-    * the query under test adds two parquet round-trips of the index
-    * layout, and this oracle proves they are bit-invisible. Brute-force
+    * the query under test runs that lifecycle through [[graft.ext
+    * .AnnIndexStore]] (init, extend, remove, compact, load), and this
+    * oracle proves the store is bit-invisible. Brute-force
     * re-encode of the survivor corpus from exploded literals, the x149
     * kernel. */
   private def x154(s: SparkSession, dir: String): DataFrame = {

@@ -162,7 +162,7 @@ object VersionedLayout {
   }
 
   /** Every directory the log references. */
-  private def logDirs(log: Seq[Entry]): Seq[String] = log.flatMap {
+  def logDirs(log: Seq[Entry]): Seq[String] = log.flatMap {
     case Epoch(dirs) => dirs
     case Tomb(dir) => Seq(dir)
   }

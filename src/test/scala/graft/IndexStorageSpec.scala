@@ -1,15 +1,16 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Similarity, TextDedup, TextSearch}
+import graft.ext.{AnnIndexStore, Similarity, TextDedup, TextSearch}
+import graft.storage.Hcfs
 
 /** Persisted standing-index layouts (round 12): BM25 postings
   * partitioned by `tok_bucket` + sorted by `tok`; IVF-PQ codes
-  * partitioned by `cell`. The contract under test: storage is an
-  * access-path choice, never a semantics choice — save→load→probe is
-  * bit-identical to the in-memory index, the driver-side bucket hash
-  * agrees with the Spark-side one, and every maintenance entry point
-  * accepts a reloaded index unchanged. */
+  * partitioned by `cell` in [[AnnIndexStore]]'s epochs. The contract
+  * under test: storage is an access-path choice, never a semantics
+  * choice — save→load→probe is bit-identical to the in-memory index,
+  * the driver-side bucket hash agrees with the Spark-side one, and
+  * every maintenance entry point accepts a reloaded index unchanged. */
 class IndexStorageSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String = {
@@ -181,12 +182,29 @@ class IndexStorageSpec extends SparkSpec {
     }
   }
 
-  test("ivfpq: save→load round-trips fit artifacts and probe results bit-exactly") {
-    val idx = Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
+  test("ivfpq store: init refuses an index with no fit artifacts") {
+    val idx = ivfpq(emb)
+    val store = new AnnIndexStore(spark, tmpDir("ivfpq-empty"))
+    Seq(idx.copy(centroids = Nil), idx.copy(codebook = Nil)).foreach { bad =>
+      assertThrows[IllegalArgumentException](store.init(bad))
+    }
+    assert(store.currentVersion === -1, "a refused init must publish nothing")
+  }
+
+  private def ivfpq(corpus: org.apache.spark.sql.DataFrame) =
+    Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding",
       nCentroids = 8, m = 4, codebookSize = 8, seed = 42L)
-    val path = tmpDir("ivfpq")
-    Similarity.saveIvfPqIndex(idx, path)
-    val loaded = Similarity.loadIvfPqIndex(spark, path)
+
+  private def ivfProbe(idx: Similarity.IvfPqIndex) =
+    Similarity.ivfPqTopKOnIndex(idx, emb.filter(col("vec_id") % 25 === 0),
+      "vec_id", "embedding", k = 5, nProbe = 3)
+      .collect().map(_.toString).sorted
+
+  test("ivfpq store: init→load round-trips fit artifacts and probes exactly") {
+    val idx = ivfpq(emb)
+    val store = new AnnIndexStore(spark, tmpDir("ivfpq"))
+    store.init(idx)
+    val loaded = store.load()
     // fit artifacts: exact doubles, same ids, same order after sort
     assert(loaded.centroids.map(_._1) === idx.centroids.map(_._1).sorted)
     idx.centroids.sortBy(_._1).zip(loaded.centroids).foreach {
@@ -202,53 +220,62 @@ class IndexStorageSpec extends SparkSpec {
     val b = loaded.codes.collect().map(_.toString).sorted
     assert(a.nonEmpty && a.sameElements(b))
     // probe bit-equality
-    val queries = emb.filter(col("vec_id") % 25 === 0)
-    val mem = Similarity.ivfPqTopKOnIndex(idx, queries,
-      "vec_id", "embedding", k = 5, nProbe = 3)
-      .collect().map(_.toString).sorted
-    val st = Similarity.ivfPqTopKOnIndex(loaded, queries,
-      "vec_id", "embedding", k = 5, nProbe = 3)
-      .collect().map(_.toString).sorted
-    assert(mem.nonEmpty && mem.sameElements(st))
+    val mem = ivfProbe(idx)
+    assert(mem.nonEmpty && mem.sameElements(ivfProbe(loaded)))
   }
 
-  test("ivfpq: maintenance ops compose over a RELOADED index (extend → remove → re-save → reload)") {
+  test("ivfpq store: extend → remove → compact → load probes as in memory") {
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val delta = emb.filter(col("vec_id") % 10 === 0)
     val doomed = emb.filter(col("vec_id") % 20 === 5).select(col("vec_id"))
     val mem = Similarity.removeFromIvfPqIndex(
-      Similarity.extendIvfPqIndex(
-        Similarity.buildIvfPqIndex(base, "vec_id", "embedding",
-          nCentroids = 8, m = 4, codebookSize = 8, seed = 42L),
-        delta, "vec_id", "embedding"),
+      Similarity.extendIvfPqIndex(ivfpq(base), delta, "vec_id", "embedding"),
       doomed, "vec_id")
-    val root = tmpDir("ivfpq-maint")
-    Similarity.saveIvfPqIndex(
-      Similarity.buildIvfPqIndex(base, "vec_id", "embedding",
-        nCentroids = 8, m = 4, codebookSize = 8, seed = 42L),
-      s"$root/v0")
-    val idx0 = Similarity.loadIvfPqIndex(spark, s"$root/v0")
-    Similarity.saveIvfPqIndex(
-      Similarity.removeFromIvfPqIndex(
-        Similarity.extendIvfPqIndex(idx0, delta, "vec_id", "embedding"),
-        doomed, "vec_id"),
-      s"$root/v1")
-    val idx1 = Similarity.loadIvfPqIndex(spark, s"$root/v1")
-    val queries = emb.filter(col("vec_id") % 25 === 0)
-    val a = Similarity.ivfPqTopKOnIndex(mem, queries,
-      "vec_id", "embedding", k = 5, nProbe = 3)
-      .collect().map(_.toString).sorted
-    val b = Similarity.ivfPqTopKOnIndex(idx1, queries,
-      "vec_id", "embedding", k = 5, nProbe = 3)
-      .collect().map(_.toString).sorted
-    assert(a.nonEmpty && a.sameElements(b))
+    // every op below reads the index the store persisted before it
+    val store = new AnnIndexStore(spark, tmpDir("ivfpq-maint"))
+    store.init(ivfpq(base))
+    store.extend(delta, "vec_id", "embedding")
+    store.remove(doomed, "vec_id")
+    store.compact()
+    val a = ivfProbe(mem)
+    assert(a.nonEmpty && a.sameElements(ivfProbe(store.load())))
+  }
+
+  test("x154: the stored-ANN query equals its naive oracle row for row") {
+    val q = "x154_ann_stored_index"
+    val got = SparkEntry.queries(q)(spark, sf()).collect().toSeq
+    val want = SparkEntry.naiveOracle(q)(spark, sf()).collect().toSeq
+    assert(want.nonEmpty && got === want)
+  }
+
+  test("ivfpq store: compaction vacuums the epochs, tombstones and " +
+      "centroid sets it folds; probes unchanged") {
+    val root = tmpDir("ivfpq-vacuum")
+    def names() = Hcfs.listNames(spark, root).map(_._1).toSet
+    val store = new AnnIndexStore(spark, root)
+    store.init(ivfpq(emb.filter(col("vec_id") % 10 =!= 0)))
+    store.extend(emb.filter(col("vec_id") % 10 === 0), "vec_id", "embedding")
+    store.remove(emb.filter(col("vec_id") % 20 === 5).select(col("vec_id")),
+      "vec_id")
+    // a repair supersedes centroid set 0 and kills cell 0
+    store.repair(emb, "vec_id", "embedding", Seq(0))
+    val before = ivfProbe(store.load())
+    assert(Set("epoch-0", "epoch-1", "tomb-2", "epoch-3", "centroids-v0",
+      "centroids-v1").subsetOf(names()), names())
+    store.compact()
+    val v = store.currentVersion
+    val want = Set("codebook", "centroids-v1", s"epoch-$v",
+      s"v$v.manifest", "LATEST")
+    // the vacuum deletes on a background thread
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (names() != want && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(names() === want)
+    assert(before.nonEmpty && ivfProbe(store.load()).sameElements(before))
   }
 
   test("ivfpq store: an id removed and then re-extended is live again, " +
       "before and after compaction (order-aware tombstones)") {
-    import graft.ext.AnnIndexStore
-    val idx = Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
-      nCentroids = 8, m = 4, codebookSize = 8, seed = 42L)
+    val idx = ivfpq(emb)
     val moved = emb.filter(col("vec_id") % 20 === 5)
     val store = new AnnIndexStore(spark, tmpDir("ivfpq-store"))
     store.init(idx)

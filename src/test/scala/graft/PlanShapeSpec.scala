@@ -265,10 +265,14 @@ class PlanShapeSpec extends SparkSpec {
       s"term isin must push down:\n$scanLine")
     // IVF-PQ: the probe's broadcast cell gate must become a dynamic
     // partition pruning expression on the cell-partitioned codes scan
-    Similarity.saveIvfPqIndex(
-      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
-        nCentroids = 8, m = 4, codebookSize = 16), s"$root/ivf")
-    val loaded = Similarity.loadIvfPqIndex(spark, s"$root/ivf")
+    // of the store's compacted epoch
+    val ann = new graft.ext.AnnIndexStore(spark, s"$root/ivf")
+    ann.init(Similarity.buildIvfPqIndex(
+      emb.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding",
+      nCentroids = 8, m = 4, codebookSize = 16))
+    ann.extend(emb.filter(col("vec_id") % 10 === 0), "vec_id", "embedding")
+    ann.compact()
+    val loaded = ann.load()
     val probe = Similarity.ivfPqTopKOnIndex(loaded,
       emb.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
       k = 5, nProbe = 3)

@@ -28,10 +28,13 @@ and compile time. Compiles are attributed by thread:
   - a `graft-lane-<model>` thread (one replica lane of a consumer
     micro-batch) names its replica: the latest-started nested execution
     running at that time whose step label names `<model>`;
-  - other driver threads (exchange and query-stage threads) go to the
-    latest-started execution running at that time, and are counted as
-    `by time` in the summary, since concurrent queries make them
-    ambiguous.
+  - other driver threads (exchange and query-stage threads) name no
+    query. Such a record goes to the innermost execution running at that
+    time (a batch root that is running a nested execution does not
+    count) only when there is exactly one; it is counted as `by time` in
+    the summary. With several running (a producer batch beside a
+    consumer step), it goes to no batch and is counted in the summary's
+    `ambiguous` line instead.
 Each batch line also prints its `overlap`: the summed walls of the
 batch's nested executions over the wall of its root execution. Steps run
 one after another read below 1; above 1, some ran at the same time (the
@@ -46,7 +49,8 @@ class loader, source), so for each selected batch of the --query queries
 it counts the distinct (loader side, source hash) keys looked up from the
 batch's start to the next batch of the same query, other queries'
 batches in that time included, and splits them by the step (execution)
-that looked them up. A whole-stage class counts twice: the driver
+that looked them up; the keys of `ambiguous` records get their own row.
+A whole-stage class counts twice: the driver
 validates it and each executor compiles it under its own loader.
 """
 import argparse
@@ -280,9 +284,9 @@ def main():
         windows[run].append((t0, t0 + p["durationMs"].get("triggerExecution", 0), b))
 
     def attribute(t, thread):
-        """("exec", execution) or ("outside", (run, batch)) of a record
-        stamped `t` on `thread`, with whether it went by time; None if it
-        falls in no execution or batch."""
+        """("exec", execution), ("outside", (run, batch)) or ("ambiguous",
+        None) of a record stamped `t` on `thread`, with whether it went by
+        time; None if it falls in no execution or batch."""
         m = TASK_THREAD.search(thread)
         if m:
             j = stage_job.get(int(m.group(1)))
@@ -307,13 +311,20 @@ def main():
                     and x.start <= t <= (x.end or t) and x.names_model(m.group(1))]
             if live:
                 return ("exec", max(live, key=lambda x: x.start)), False
-        live = [x for x in execs.values() if x.start <= t <= (x.end or t) and x.id != x.root]
-        live = live or [x for x in execs.values() if x.start <= t <= (x.end or t)]
-        if live:
-            return ("exec", max(live, key=lambda x: x.start)), True
+        # any other driver thread names no query: it goes to the one
+        # innermost execution live at `t` (a batch root running a nested
+        # step defers to the step), else it is ambiguous
+        live = [x for x in execs.values() if x.start <= t <= (x.end or t)]
+        busy = {x.root for x in live if x.id != x.root}
+        inner = [x for x in live if x.id not in busy]
+        if len(inner) == 1:
+            return ("exec", inner[0]), True
+        if inner:
+            return ("ambiguous", None), True
         return None, False
 
     outside = collections.defaultdict(list)   # (run, batch) -> compiles outside executions
+    ambiguous = []   # compiles of driver threads while several executions ran
     by_time = 0
     comp = compiles(args.codegen) if args.codegen else []
     for c in comp:
@@ -321,6 +332,8 @@ def main():
         if where and where[0] == "exec":
             where[1].compiles.append(c)
             by_time += timed
+        elif where and where[0] == "ambiguous":
+            ambiguous.append(c)
         elif where:
             outside[where[1]].append(c)
 
@@ -386,8 +399,14 @@ def main():
         print(line)
     if args.codegen:
         print(f"compiles attributed by time (non-task driver threads): {by_time} of {len(comp)}")
+        n, d, ms = csum(ambiguous)
+        print(f"ambiguous (driver threads while several executions ran, in no batch): "
+              f"{n} compiles ({d} distinct, {ms:.0f} ms)")
     if args.working_set and args.codegen:
         working_set(args, lo, hi, batches, labels, millis, attribute)
+
+
+AMBIGUOUS = "ambiguous (several executions live)"
 
 
 def working_set(args, lo, hi, batches, labels, millis, attribute):
@@ -418,6 +437,8 @@ def working_set(args, lo, hi, batches, labels, millis, attribute):
         where, _ = attribute(t, thread)
         if where is None:
             step = "unattributed"
+        elif where[0] == "ambiguous":
+            step = AMBIGUOUS
         elif where[0] == "outside":
             step = f"{labels.get(where[1][0], where[1][0][:8])}: outside executions"
         else:
@@ -439,7 +460,7 @@ def working_set(args, lo, hi, batches, labels, millis, attribute):
         print(f"working set {labels.get(w[2], w[2][:8])} batch {w[3]}: {len(cycle)} keys "
               f"({driver} driver, {len(cycle) - driver} executor) over {w[1] - w[0]} ms")
         print(f"  {'keys':>4} {'own':>4}  step")
-        for step, ks in sorted(by_step.items(), key=lambda kv: -len(kv[1])):
+        for step, ks in sorted(by_step.items(), key=lambda kv: (kv[0] == AMBIGUOUS, -len(kv[1]))):
             others = set().union(*(v for s, v in by_step.items() if s != step))
             print(f"  {len(ks):>4} {len(ks - others):>4}  {step}")
     print(f"working set summary: {len(totals)} cycles, "
