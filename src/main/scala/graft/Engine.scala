@@ -97,12 +97,6 @@ object Engine {
     *    `attr → [old, new]` diff of what the merge actually changed
     *    (reference: persistor.rb:76,119,144) — costs one extra read of the
     *    touched keys per batch.
-    *  - `dedupDelay`: watermark for the exact-resend dedup state (C2
-    *    streaming form). Events arriving later than this behind the
-    *    stream's max event time are DROPPED by the operator, not just
-    *    dedup'd — so topics that replay old event times (genesis
-    *    backfills) should set `dedupIncoming = false` on the TopicDef or
-    *    widen this delay.
     *  - `replicaFactory`: swap the replica storage implementation
     *    engine-wide — `(spark, model, root) => Replica`. Default is the
     *    bucketed [[ParquetReplica]]; a transactional table format
@@ -148,7 +142,6 @@ object Engine {
       deadLetter: Boolean = true,
       publishConsumedEvents: Boolean = false,
       trackLocalChanges: Boolean = false,
-      dedupDelay: String = "1 hour",
       replicaFactory: Option[(SparkSession, ModelDef, String) => Replica] = None,
       changesetKey: Option[String] = None,
       strictKeyRedaction: Boolean = false,
@@ -619,9 +612,10 @@ object Engine {
 
   // ----------------------------------------------------------------- consumer
 
-  /** One topic's consumer query: decode, watermarked exact-resend dedup
-    * (C2 streaming form), then per micro-batch merge each declared model —
-    * and each embedded sideload model — into its replica. */
+  /** One topic's consumer query: decode, then per micro-batch merge each
+    * declared model — and each embedded sideload model — into its
+    * replica. It keeps no Spark state: C2 is the in-batch keep-latest,
+    * and a resend or late event in a later batch meets C7's LWW guard. */
   private def consumeTopic(
       spark: SparkSession,
       registry: Registry,
@@ -633,20 +627,15 @@ object Engine {
       options: EngineOptions,
       trigger: Trigger): StreamingQuery = {
     val wire = source.open(spark, topicName)
-    val deduped =
-      if (t.dedupIncoming)
-        // fixed-width dedup state: key on (kafka_key, 64-bit payload hash),
-        // never the raw envelope — a megabyte-class sideloaded aggregate
-        // would otherwise sit in the state store for the whole watermark.
-        // Same exact-resend semantics (64-bit collision odds negligible).
-        wire.withWatermark("ts", options.dedupDelay)
-          .withColumn("__vh", xxhash64(col("kafka_key"), col("value")))
-          .dropDuplicatesWithinWatermark("kafka_key", "__vh")
-          .drop("__vh")
-      else wire
     val events =
-      if (t.singleRecordWire) EnvelopeCodec.decodeSingleRecords(deduped)
-      else EnvelopeCodec.explodeRecords(EnvelopeCodec.decode(deduped))
+      if (t.singleRecordWire) EnvelopeCodec.decodeSingleRecords(wire)
+      else EnvelopeCodec.explodeRecords(EnvelopeCodec.decode(wire))
+    val checkpoint = s"$workDir/cp/consume/$topicName"
+    // older engines ran a watermarked dedup here: Spark refuses to restart
+    // a stateless plan beside its state store (STREAMING_STATEFUL_
+    // OPERATOR_NOT_MATCH_IN_STATE_METADATA), which this plan never reads;
+    // the committed offsets resume without it
+    graft.storage.Hcfs.delete(spark, s"$checkpoint/state")
     // live-mode maintenance cadence (one counter per topic query)
     val batchCounter = new java.util.concurrent.atomic.AtomicLong()
     val maintained: Seq[Replica] =
@@ -654,8 +643,12 @@ object Engine {
         .flatMap(replicas.get)
     events.writeStream
       .outputMode("append")
-      .option("checkpointLocation", s"$workDir/cp/consume/$topicName")
+      .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+        // Spark leaves AQE on for a stateless query's batches, where it runs
+        // each shuffle of a merge plan as a job of its own: fixed cost on a
+        // few hundred rows. Off on this query's session, as for a stateful one.
+        batch0.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
         // one micro-batch feeds many actions (per model, per sideload,
         // quarantine, consumed events) — materialize it once
         val batch = batch0.persist()

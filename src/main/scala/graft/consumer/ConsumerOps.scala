@@ -19,8 +19,9 @@ object ConsumerOps {
     * Window `row_number` over `(event, id)` ordered by `updated_at DESC`
     * with a deterministic tiebreak. Partial aggregation (`max_by`) would
     * also work; the window form preserves whole rows without struct
-    * repacking. State across micro-batches is the streaming variant
-    * (`dropDuplicatesWithinWatermark`, see [[graft.streaming.Pipeline]]).
+    * repacking. Nothing is kept across micro-batches: a resend or an
+    * older version in a later batch meets the C7 LWW guard in the merge,
+    * as in the reference.
     */
   def keepLatest(
       df: DataFrame,

@@ -141,7 +141,6 @@ final case class TopicDef(
       org.apache.spark.sql.Column] = None,
     genesisReplica: Boolean = false,
     importMode: Boolean = false,
-    dedupIncoming: Boolean = true,
     /** Compacted-topic expunge (P20): hard deletes additionally publish a
       * null-value tombstone under the resource key
       * (reference: tombstone_publisher.rb:14-21). */

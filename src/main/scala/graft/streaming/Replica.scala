@@ -559,9 +559,9 @@ final class ParquetReplica(spark: SparkSession, root: String,
       // sub-second latency path pays exactly ONE Spark job per merge
       // under either sentinel prepare, destroys included (the delta
       // write), with no isEmpty/take(1) probe job
-      // in front of it, while an idle stream's watermark-advancing empty
-      // batches still never append epochs, bump versions, or trigger
-      // pointless compactions
+      // in front of it, while a micro-batch that leaves a replica no
+      // rows still never appends an epoch, bumps a version, or triggers
+      // a pointless compaction
       if (mergeOnRead) deltaMerge(updates, prepare)
       else cowMerge(updates, prepare)
     }

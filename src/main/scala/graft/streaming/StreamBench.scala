@@ -18,10 +18,10 @@ import graft.registry.{Attribute, ModelDef, Registry, TopicDef}
   * directory; [[graft.Engine.start]] runs the product pipeline over it —
   * the producer query (ProcessingTime trigger ↔ the 0.2 s poll)
   * classifies, serializes and envelope-encodes it onto the file topic,
-  * and the consumer query decodes, exact-resend-dedups, keep-latest
-  * reduces and LWW-merges it into the model's replica. The replica is
-  * wrapped (`EngineOptions.replicaFactory`) to record, per merge, the
-  * newest stamp among its rows and the wall clock when it returned; a fed
+  * and the consumer query decodes, keep-latest reduces and LWW-merges it
+  * into the model's replica. The replica is wrapped
+  * (`EngineOptions.replicaFactory`) to record, per merge, the newest
+  * stamp among its rows and the wall clock when it returned; a fed
   * file's lag is that clock minus its stamp for the first merge that
   * reached it — the full file-commit→discover→encode→topic→discover→
   * decode→merge path, i.e. what a monitoring page would call replication
@@ -29,8 +29,8 @@ import graft.registry.{Attribute, ModelDef, Registry, TopicDef}
   * `Engine.start` gets.
   *
   * The first `warmupBatches` feeder files are excluded from the reported
-  * percentiles: their latencies pay one-time JIT + codegen + state-store
-  * setup a long-running pipeline amortizes away (same rationale as
+  * percentiles: their latencies pay one-time JIT + codegen setup a
+  * long-running pipeline amortizes away (same rationale as
   * Bench's cold pass). Wall-clock stamping makes this a MEASUREMENT, not
   * an oracle-checked query — it reports to BENCH, never to CORRECTNESS.
   */
@@ -296,27 +296,30 @@ object StreamBench {
       warmupBatches * rowsPerBatch)
   }
 
-  /** Steady-state throughput of a run: the rows of every file whose
-    * applying merge ended after the warm-up (`warmupEndMs`), over the
-    * span in which those merges could work — from the end of the merge
-    * before the first measured one, or the first measured file's stamp
-    * if that is later, to the last measured merge's end. Merge `i` ended
-    * at `mergeEndMs(i)`; file `f`, stamped `stampsMs(f)` with
-    * `rowsPerFile` rows, was applied by merge `applier(f)`. Spans that
-    * start at the first measured merge's END under-read a feed shorter
-    * than a few micro-batches: one merge's work falls outside them. */
+  /** Steady-state throughput of a run, from the merges that ended after
+    * the warm-up (`warmupEndMs`). Merge `i` ended at `mergeEndMs(i)`;
+    * file `f`, stamped `stampsMs(f)` with `rowsPerFile` rows, was
+    * applied by merge `applier(f)`. With two or more measured merges:
+    * the rows of the measured merges after the first, over [first
+    * measured merge's end, last one's end] — whole merge cycles, with no
+    * file's apply latency in the span. With one: its rows from the end
+    * of the merge before it, or its first file's stamp if later. */
   private[graft] def steadyRowsPerSec(mergeEndMs: IndexedSeq[Long],
       applier: IndexedSeq[Int], stampsMs: IndexedSeq[Long], rowsPerFile: Long,
       warmupEndMs: Long): Double = {
     val measured = applier.indices.filter(f => mergeEndMs(applier(f)) > warmupEndMs)
+    val merges = measured.map(applier).distinct.sorted
     if (measured.isEmpty) 0.0
     else {
-      val first = measured.map(applier).min
-      val start = math.max(
-        if (first > 0) mergeEndMs(first - 1) else Long.MinValue,
-        stampsMs(measured.head))
-      val end = measured.map(f => mergeEndMs(applier(f))).max
-      measured.size * rowsPerFile * 1000.0 / math.max(1L, end - start)
+      val first = merges.head
+      val (files, start) =
+        if (merges.size >= 2)
+          (measured.count(f => applier(f) > first), mergeEndMs(first))
+        else (measured.size, math.max(
+          if (first > 0) mergeEndMs(first - 1) else Long.MinValue,
+          stampsMs(measured.head)))
+      files * rowsPerFile * 1000.0 /
+        math.max(1L, mergeEndMs(merges.last) - start)
     }
   }
 

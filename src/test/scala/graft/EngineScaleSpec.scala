@@ -87,8 +87,8 @@ class EngineScaleSpec extends SparkSpec {
             lit("2026-05-02 00:00:00").cast("timestamp").as("__ts"))
     }
     def orderChange(ids: Seq[Long], file: String, ts: String,
-        op: String = "update"): Unit =
-      ids.toDF("id").select($"id", ($"id" * 100.0).as("total"),
+        op: String = "update", perId: Double = 100.0): Unit =
+      ids.toDF("id").select($"id", ($"id" * perId).as("total"),
           lit(op).as("__op"),
           lit(null).cast("timestamp").as("__old_canceled"),
           lit(null).cast("timestamp").as("__new_canceled"),
@@ -207,6 +207,59 @@ class EngineScaleSpec extends SparkSpec {
     fx.orderChange(Seq(1L), "f2", "2026-05-03 00:00:00")
     val left = fx.childIds(fx.run())
     assert(left == (1L to 32L).toSet - 4L, s"got $left")
+  }
+
+  /** Both replicas of a [[C11Fixture]] run, sorted, after three drains:
+    * orders 1-8; then order 2's total updated, order 3 destroyed and
+    * order 4 republished without line 16 (C11 dooms it); then a drain
+    * carrying either nothing or an exact resend of the second drain's
+    * messages, whose C11 finds nothing left to doom. */
+  private def afterResend(mergeOnRead: Boolean,
+      resend: Boolean): (Engine.EngineResult, Seq[Seq[String]]) = {
+    val fx = new C11Fixture(s"rs${if (mergeOnRead) "m" else "c"}${if (resend) 1 else 0}")
+    val opts = Engine.EngineOptions(mergeOnRead = mergeOnRead,
+      replicaCompactEvery = 100)
+    fx.orderChange(1L to 8L, "f1", "2026-05-01 00:00:00")
+    fx.run(opts)
+    val at = "2026-05-03 00:00:00"
+    fx.orderChange(Seq(2L), "f2", at, perId = 150.0)
+    fx.orderChange(Seq(3L), "f3", at, op = "delete")
+    fx.dropped = Set(16L)
+    fx.orderChange(Seq(4L), "f4", at)
+    fx.run(opts)
+    if (resend) {
+      // the second drain's messages, byte for byte, as one new topic file
+      val topic = s"${fx.work}/topics/${fx.reg.topicName(fx.reg.topics.head)}"
+      val sent = spark.read.parquet(topic).filter($"ts" === lit(at).cast("timestamp"))
+        .collect().toSeq
+      assert(sent.size == 3, s"second drain's messages: $sent")
+      spark.createDataFrame(java.util.Arrays.asList(sent: _*),
+          spark.read.parquet(topic).schema)
+        .coalesce(1).write.mode("append").parquet(topic)
+    }
+    val res = fx.run(opts)
+    res -> Seq("order", "order_line").map(m =>
+      res.replicas(m).read().collect().map(_.toString).toSeq.sorted)
+  }
+
+  for (mor <- Seq(true, false)) {
+    val mode = if (mor) "merge-on-read" else "copy-on-write"
+    test("an exact resend in a later micro-batch leaves the replicas as " +
+        s"without it: a live update, a destroy, a to-many parent, under $mode") {
+      val (_, once) = afterResend(mor, resend = false)
+      val (res, twice) = afterResend(mor, resend = true)
+      assert(twice == once)
+      // the update held, the re-applied destroy kept the canceled row's
+      // attributes, and only the line the original message dropped is gone
+      val orders = res.replicas("order").read().filter($"synced_id" <= 4L)
+        .select($"synced_id", $"total", $"synced_canceled_at".isNotNull)
+        .as[(Long, Double, Boolean)].collect().toSeq.sorted
+      assert(orders == Seq((1L, 100.0, false), (2L, 300.0, false),
+        (3L, 300.0, true), (4L, 400.0, false)), s"orders: $orders")
+      val lines = res.replicas("order_line").read().select("synced_id")
+        .as[Long].collect().toSet
+      assert(lines == (1L to 32L).toSet - 16L, s"order lines: $lines")
+    }
   }
 
   /** Jobs per (streaming query id, batch id) started while `f` runs, and

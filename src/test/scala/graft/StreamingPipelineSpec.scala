@@ -79,17 +79,31 @@ class StreamingPipelineSpec extends SparkSpec {
     }
   }
 
-  test("StreamBench's steady rate counts a measured merge from the end of " +
-      "the merge before it") {
+  test("StreamBench's steady rate counts the merges after the first " +
+      "measured one, between merge ends") {
     // merges end at 1 s (warm-up), 4 s and 7 s; files 0-1 are warm-up,
     // files 2-11 are stamped every 200 ms from 1.2 s
     val ends = IndexedSeq(1000L, 4000L, 7000L)
     val stamps = IndexedSeq(0L, 200L) ++ (0 until 10).map(i => 1200L + 200L * i)
     val applier = IndexedSeq(0, 0) ++ IndexedSeq.fill(8)(1) ++ IndexedSeq(2, 2)
-    // 10 measured files of 100 rows from 1.2 s (the first measured stamp,
-    // later than the warm-up merge's end) to 7 s: 1,000 rows over 5.8 s
+    // two measured merges: the 2 files of 100 rows the second one applied,
+    // over its cycle from the first measured merge's end (4 s) to 7 s
     assert(math.abs(StreamBench.steadyRowsPerSec(ends, applier, stamps,
-      100L, warmupEndMs = 1000L) - 1000 * 1000.0 / 5800) < 1e-9)
+      100L, warmupEndMs = 1000L) - 200 * 1000.0 / 3000) < 1e-9)
+    // a short feed after an idle gap: 1,250 rows/s offered (250 rows every
+    // 200 ms from 5 s to 9.8 s), five merges of five files each, every
+    // merge ending 1.7 s after its last file's stamp. A span from the
+    // first stamp to the last merge's end holds that 1.7 s and read 1,136.
+    val feed = (0 until 25).map(i => 5000L + 200L * i)
+    val cycles = IndexedSeq(1000L) ++ (0 until 5).map(k => 6500L + 1000L * k)
+    val cycleApplier = IndexedSeq(0) ++ (0 until 25).map(i => 1 + i / 5)
+    val rate = StreamBench.steadyRowsPerSec(cycles, cycleApplier,
+      IndexedSeq(0L) ++ feed, 250L, warmupEndMs = 1000L)
+    assert(math.abs(rate - 1250) < 0.02 * 1250, s"read $rate rows/s")
+  }
+
+  test("StreamBench's steady rate counts a measured merge from the end of " +
+      "the merge before it") {
     // a feed shorter than one micro-batch: ONE measured merge still reads
     // its rows over the span it worked, from the previous merge's end
     val oneEnd = IndexedSeq(1000L, 4000L)
@@ -98,7 +112,7 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(math.abs(StreamBench.steadyRowsPerSec(oneEnd, oneApplier, early,
       100L, warmupEndMs = 1000L) - 1000 * 1000.0 / 3000) < 1e-9)
     // nothing measured reads 0
-    assert(StreamBench.steadyRowsPerSec(ends, applier, stamps, 100L,
+    assert(StreamBench.steadyRowsPerSec(oneEnd, oneApplier, early, 100L,
       warmupEndMs = 9000L) == 0.0)
   }
 
@@ -278,8 +292,8 @@ class StreamingPipelineSpec extends SparkSpec {
     val epochs = mor.deltaEntries(v).size
     val emptyBatch = upd().limit(0)
     // footer-check path: the delta write runs, the
-    // parquet footers read zero rows, nothing publishes — an idle
-    // stream's watermark ticks must never bump versions or leave dirs
+    // parquet footers read zero rows, nothing publishes — a micro-batch
+    // that leaves this replica no rows must never bump versions or leave dirs
     mor.merge(emptyBatch)
     assert(mor.currentVersion == v && mor.deltaEntries(v).size == epochs,
       "footer path must not publish an empty epoch")
@@ -313,6 +327,138 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(rows.map(_.updated_us).max == 2000L)
     assert(rows.count(_.updated_us == 1000L) == 0,
       s"stale event leaked: ${rows.mkString(",")}")
+  }
+
+  /** One `thing` model on one topic, for the consumer's behaviour across
+    * micro-batches and restarts. Changes go through the producer
+    * (`change`); `wire` appends hand-written single-record messages to
+    * the topic directly, as an exact resend or a foreign producer would;
+    * `snapshot` feeds `Engine.genesis`. */
+  private final class ThingTopic(name: String,
+      opts: Engine.EngineOptions = Engine.EngineOptions()) {
+    import graft.registry._
+    val tmp = Files.createTempDirectory(s"graft-$name").toString
+    val src = s"$tmp/src"
+    val work = s"$tmp/work"
+    val reg = Registry(name, Seq(TopicDef("things", Seq(ModelDef("thing",
+      attributes = Seq(Attribute("value",
+        org.apache.spark.sql.types.DoubleType)))))))
+    val topic = reg.topicName(reg.topics.head)
+    val topicDir = s"$work/topics/$topic"
+    @volatile var snapshot: Seq[(Long, Double, String)] = Nil
+    val bindings = new Engine.ModelBindings {
+      def changes(s: org.apache.spark.sql.SparkSession, m: ModelDef) =
+        s.readStream.schema(s.read.parquet(s"$src/f0").schema)
+          .parquet(s"$src/*")
+      def snapshot(s: org.apache.spark.sql.SparkSession, m: ModelDef) =
+        ThingTopic.this.snapshot.toDF("id", "value", "ts")
+          .select($"id", $"value", $"ts".cast("timestamp").as("__ts"))
+    }
+    // an empty first file fixes the change feed's schema
+    change("f0", Nil, "2026-05-01 00:00:00")
+
+    def change(file: String, rows: Seq[(Long, Double)], ts: String): Unit =
+      rows.toDF("id", "value").select($"id", $"value",
+          lit("update").as("__op"),
+          lit(null).cast("timestamp").as("__old_canceled"),
+          lit(null).cast("timestamp").as("__new_canceled"),
+          lit(ts).cast("timestamp").as("__ts"))
+        .write.parquet(s"$src/$file")
+    /** One `thing_updated` message per (id, value, event time); a null
+      * time leaves the payload's `created_at`/`updated_at` null. */
+    def wire(rows: Seq[(Long, Double, Option[String])]): Unit =
+      rows.map { case (id, v, ts) =>
+        val t = ts.fold("null")(x => s""""$x"""")
+        val payload = s"""{"id":$id,"value":$v,"created_at":$t,""" +
+          s""""updated_at":$t,"canceled_at":null}"""
+        (s"thing:$id", s"""{"message":[{"event":"thing_updated",""" +
+          s""""model_name":"thing","data":[$payload]}]}""",
+          ts.getOrElse("2026-05-01 00:00:00"))
+      }.toDF("kafka_key", "value", "ts")
+        .select($"kafka_key", lit(null).cast("string").as("partition_key"),
+          $"value", $"ts".cast("timestamp").as("ts"))
+        .coalesce(1).write.mode("append").parquet(topicDir)
+    def run(): Engine.EngineResult =
+      Engine.runAvailableNow(spark, reg, bindings, work, options = opts)
+    def values(res: Engine.EngineResult): Map[Long, Double] =
+      res.replicas("thing").read().select("synced_id", "value")
+        .as[(Long, Double)].collect().toMap
+  }
+
+  test("a later drain applies a new key and a genesis row stamped hours " +
+      "behind the newest event the consumer has seen") {
+    val fx = new ThingTopic("late")
+    // first drain: key 1 at T+2h
+    fx.change("f1", Seq(1L -> 1.0), "2026-05-01 12:00:00")
+    fx.run()
+    // second drain: a new key 2 at T, and genesis streams key 3 at T into
+    // the same topic; C7 has no newer row for either, so both persist
+    fx.change("f2", Seq(2L -> 2.0), "2026-05-01 10:00:00")
+    fx.snapshot = Seq((3L, 3.0, "2026-05-01 10:00:00"))
+    assert(Engine.genesis(spark, fx.reg, fx.bindings, "thing", fx.work) ==
+      Seq(fx.topic))
+    assert(fx.values(fx.run()) == Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0))
+  }
+
+  test("a consumer checkpoint written by a watermarked dedup query resumes " +
+      "from its committed offsets") {
+    val fx = new ThingTopic("planted")
+    fx.wire(Seq((1L, 1.0, Some("2026-05-01 12:00:00"))))
+    // an older engine's consumer query: a watermarked resend dedup in
+    // front of the batch sink, with its state store under the checkpoint
+    val cp = s"${fx.work}/cp/consume/${fx.topic}"
+    new graft.streaming.FileTopics(s"${fx.work}/topics").open(spark, fx.topic)
+      .withWatermark("ts", "1 hour")
+      .withColumn("__vh", xxhash64($"kafka_key", $"value"))
+      .dropDuplicatesWithinWatermark("kafka_key", "__vh")
+      .drop("__vh")
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.count(); ()
+      }
+      .option("checkpointLocation", cp)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    assert(new java.io.File(s"$cp/state").isDirectory)
+    // the new file carries key 2, stamped behind that query's watermark
+    fx.wire(Seq((2L, 2.0, Some("2026-05-01 10:00:00"))))
+    // resumed, not replayed: the file the old query consumed stays applied
+    // by it alone, the new one lands
+    assert(fx.values(fx.run()) == Map(2L -> 2.0))
+    assert(!new java.io.File(s"$cp/state").exists())
+  }
+
+  test("the consumer query keeps no Spark state") {
+    val fx = new ThingTopic("nostate")
+    fx.change("f1", Seq(1L -> 1.0), "2026-05-01 12:00:00")
+    val (queries, res) = Engine.start(spark, fx.reg, fx.bindings, fx.work,
+      trigger = Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      val consumer = queries.drop(fx.reg.topics.size).head
+      def applied = consumer.recentProgress.filter(_.numInputRows > 0)
+      val deadline = System.nanoTime() + 90L * 1000000000L
+      while ((applied.isEmpty || fx.values(res).isEmpty) &&
+          System.nanoTime() < deadline) Thread.sleep(150)
+      assert(fx.values(res) == Map(1L -> 1.0))
+      assert(applied.nonEmpty, "no consumer batch read the change")
+      assert(applied.forall(_.stateOperators.isEmpty),
+        applied.map(_.stateOperators.map(_.operatorName).toSeq).toSeq)
+    } finally queries.foreach(_.stop())
+  }
+
+  for (mor <- Seq(true, false)) {
+    val mode = if (mor) "merge-on-read" else "copy-on-write"
+    test(s"an exact resend of a payload with no updated_at or created_at " +
+        s"persists over a newer row (C7: NULLs persist), under $mode") {
+      val fx = new ThingTopic(if (mor) "nullm" else "nullc",
+        Engine.EngineOptions(mergeOnRead = mor, replicaCompactEvery = 100))
+      val undated = (1L, 1.0, None)
+      fx.wire(Seq(undated))
+      assert(fx.values(fx.run()) == Map(1L -> 1.0))
+      fx.wire(Seq((1L, 2.0, Some("2026-05-01 12:00:00"))))
+      assert(fx.values(fx.run()) == Map(1L -> 2.0))
+      // the same undated message again, one micro-batch later
+      fx.wire(Seq(undated))
+      assert(fx.values(fx.run()) == Map(1L -> 1.0))
+    }
   }
 
   test("streaming event-time window agg with watermark matches batch") {
